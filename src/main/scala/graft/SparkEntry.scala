@@ -241,29 +241,29 @@ object SparkEntry {
     // window bound is the thing the full-span net cannot check).
     "cdc_changes_between_orders" ->
       graft.runtime.ChangeLog.ordersChangesBetween1And2 _,
-    // Join-view IVM (ops/CdcJoinView): the per-segment revenue view
+    // Join-view IVM (ops/CdcStarView, one dim): the per-segment revenue view
     // over orders ⋈ customer maintained from the orders log's SIGNED
     // join delta (ΔA⋈B) — every fact change reaches the view through
     // the join; the oracle recomputes the endpoint join from scratch.
     "cdc_joinview_orders_mkt" ->
       graft.runtime.ChangeLog.ordersJoinViewMaintained _,
-    // The PERSISTED two-log join view (runtime/JoinView): positions in
-    // BOTH change logs committed atomically with the data (the paired
-    // _as_of trick on the single-partition swap), both consumers
+    // The PERSISTED two-log join view (runtime/StarJoinView, one dim):
+    // positions in BOTH change logs committed atomically with the data
+    // (the _as_of vector on the single-partition swap), both consumers
     // registered, refreshed across an interleaved history where BOTH
     // sides move — the serve-time refresh catches up a B-only removal
     // span; the oracle recomputes the endpoint A₂ ⋈ B₂ from source.
     "cdc_joinview_persisted" ->
       graft.runtime.ChangeLog.ordersJoinViewPersisted _,
-    // The PARTITIONED join view (JoinView.refreshPartitioned): same
+    // The PARTITIONED join view (StarJoinView.refreshPartitioned): same
     // definition over the same interleaved two-log history, but each
     // refresh rewrites ONLY the segment partitions its span touches —
-    // per-partition _as_of pairs, pair-position file committed last,
-    // straggler top-up from a partition's OWN pair. Same oracle.
+    // per-partition _as_of vectors, vector file committed last,
+    // straggler top-up from a partition's OWN vector. Same oracle.
     "cdc_joinview_partitioned" ->
       graft.runtime.ChangeLog.ordersJoinViewPartitioned _,
-    // The LEFT-OUTER persisted join view (JoinView joinType="left" +
-    // CdcJoinView.leftJoinGroupDelta): the count-augmented outer
+    // The LEFT-OUTER persisted join view (StarJoinView joinType="left"
+    // + CdcStarView.leftStarGroupDelta): the count-augmented outer
     // delta — unmatched-A groups live null-extended and RETRACT when
     // ΔB creates a key's first match, RESTORE when it removes the
     // last; the history churns B's key set in both directions and the
@@ -274,7 +274,7 @@ object SparkEntry {
       graft.runtime.ChangeLog.ordersLeftJoinViewPersisted _,
     // Its PARTITIONED twin — partition-scoped rewrites on the A-side
     // priority dim (never null; B-side dims are null for unmatched
-    // groups), per-partition pair stamps, pair file committed last.
+    // groups), per-partition vector stamps, vector file committed last.
     "cdc_leftjoinview_partitioned" ->
       graft.runtime.ChangeLog.ordersLeftJoinViewPartitioned _,
     // The PERSISTED STAR view (runtime/StarJoinView + ops/CdcStarView):

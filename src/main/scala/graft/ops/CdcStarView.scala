@@ -5,11 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** Log-driven IVM for a STAR join view — one FACT table joined to K
   * dimension tables, each on its own fact columns:
-  * `V = SELECT dims, SUM(ms) FROM F ⋈ D1 ⋈ … ⋈ Dk GROUP BY dims`.
-  * [[CdcJoinView]] is the K = 1 case; the general signed
-  * decomposition ORDERS the tables and gives each one exactly one
-  * moving term — every table BEFORE the mover at its span-START
-  * state, every table AFTER it at its span-END state:
+  * `V = SELECT dims, SUM(ms) FROM F ⋈ D1 ⋈ … ⋈ Dk GROUP BY dims`,
+  * kept current from the tables' change logs without re-running the
+  * join. [[CdcView]] covers single-table group-bys; a join adds the
+  * classic difficulty that a one-row change on one side can touch
+  * MANY view rows through the join, and the classic answer is the
+  * signed delta decomposition. A two-table view is the K = 1 case:
+  *
+  *   Δ(F ⋈ D)  =  ΔF ⋈ D₁  ∪  F₀ ⋈ ΔD         (signed multisets)
+  *
+  * where ΔX is the span's net row delta (old images sign −1, new
+  * images sign +1 — [[graft.runtime.ChangeLog.netDiff]] images). For
+  * general K the decomposition ORDERS the tables and gives each one
+  * exactly one moving term — every table BEFORE the mover at its
+  * span-START state, every table AFTER it at its span-END state:
   *
   *   Δ(F⋈D1⋈…⋈Dk) =  ΔF ⋈ D1₁ ⋈ … ⋈ Dk₁
   *                 ∪  F₀ ⋈ ΔD1 ⋈ D2₁ ⋈ … ⋈ Dk₁
@@ -30,9 +39,16 @@ import org.apache.spark.sql.functions._
   * states are LAZY thunks ([[Side.atStart]]) evaluated only by the
   * terms that need them, so an F-only span reconstructs no snapshot
   * whatsoever, and the F₀ probe of each dim term is semi-restricted
-  * to THAT term's Δ-keys ([[CdcJoinView.deltaJoinKeys]] — exact: an
-  * F₀ row with no match in the moving dim's delta contributes
-  * nothing to that term).
+  * to THAT term's Δ-keys ([[deltaJoinKeys]] — exact: an F₀ row with
+  * no match in the moving dim's delta contributes nothing to that
+  * term). `F₀` comes from [[graft.runtime.ChangeLog.snapshotAt]], the
+  * time-travel reconstruction: the join-view problem is exactly why
+  * that operator earns its keep beyond auditing.
+  *
+  * Measures are (name, expression-over-the-joined-columns) pairs
+  * rather than a projection function: the signed row weight must ride
+  * THROUGH the projection, and an opaque `DataFrame => DataFrame`
+  * would drop it.
   *
   * Star contract: each dim joins the FACT on its own `joinKeys`
   * (columns present on the fact and on that dim's images), dims are
@@ -55,7 +71,31 @@ object CdcStarView {
                         current: DataFrame, net: Option[DataFrame],
                         atStart: () => DataFrame)
 
-  import CdcJoinView.{SignCol, signedRows, deltaJoinKeys}
+  private val SignCol = "_csv_sign"
+
+  /** Signed net row images: o_ images at −1 (every key present at the
+    * span start), n_ images at +1 (every key present at the end). */
+  private def signedRows(net: DataFrame,
+                         keys: Seq[String]): DataFrame = {
+    val vals = net.columns.toSeq
+      .filter(c => c.startsWith("o_") && !keys.contains(c))
+      .map(_.stripPrefix("o_"))
+    val minus = net.filter(col("diff_status") =!= "added")
+      .select(keys.map(col) ++ vals.map(c => col(s"o_$c").as(c)) :+
+        lit(-1L).as(SignCol): _*)
+    val plus = net.filter(col("diff_status") =!= "removed")
+      .select(keys.map(col) ++ vals.map(c => col(s"n_$c").as(c)) :+
+        lit(1L).as(SignCol): _*)
+    minus.unionByName(plus)
+  }
+
+  /** The DISTINCT join-key values a dim span touches — old AND new
+    * images both, because a join-key move restricts F₀ on its source
+    * and its destination key alike. The semi-join restriction of each
+    * dim term's F₀ probe (exact, log-scale). */
+  private def deltaJoinKeys(net: DataFrame, keys: Seq[String],
+                            joinKeys: Seq[String]): DataFrame =
+    signedRows(net, keys).select(joinKeys.map(col): _*).distinct()
 
   /** The per-group contribution delta of a star span. `fNet` is the
     * fact's net span (None = fact did not move), `fAtStart` the fact
@@ -107,24 +147,31 @@ object CdcStarView {
 
   /** [[starGroupDelta]] for a CHAINED LEFT OUTER star —
     * `V = SELECT dims, SUM(ms) FROM F ⟕ D1 ⟕ … ⟕ Dk GROUP BY dims`,
-    * the reference's actual gold shape (every gold join is ⟕, and
-    * webtoon chains several — J4). Because every dim joins on FACT
-    * columns, the chained left joins are order-independent: a fact
-    * row's output is the cross product over dims of (that dim's
-    * matching rows, or ONE null-extension when it has none). The
-    * ordered decomposition then holds with each ⋈ relaxed to ⟕, and
-    * the moving dim's term picks up the [[CdcJoinView
-    * .leftJoinGroupDelta]] zero-crossing corrections: per ΔDi join
-    * key, `cnt₀ = cnt₁ − Σ signs` (from Di's end state and its span
-    * alone — no maintained count table); a 0→m key RETRACTS the
-    * i-null-extension of every F₀ row on it (its OTHER factors riding
-    * along — earlier dims at span-START state, later at span-END,
-    * exactly as in the inner term), an m→0 key restores it.
+    * the reference's actual gold shape (every gold join is ⟕, e.g.
+    * `gold_user_daily_metrics.py:80-82`: metrics ⟕ side aggregates
+    * where zero-match groups must survive; webtoon chains several —
+    * J4). Because every dim joins on FACT columns, the chained left
+    * joins are order-independent: a fact row's output is the cross
+    * product over dims of (that dim's matching rows, or ONE
+    * null-extension when it has none). The ordered decomposition then
+    * holds with each ⋈ relaxed to ⟕ — the fact term is the signed
+    * `ΔF ⟕ …` (unmatched delta rows ride through null-extended with
+    * their sign) — and the moving dim's term picks up the
+    * count-augmented outer-join correction: a ΔDi that creates a
+    * key's FIRST match (or removes its LAST) must also retract (or
+    * restore) the i-null-extension of every F₀ row on that key. Per
+    * ΔDi join key, `cnt₀ = cnt₁ − Σ signs` (from Di's end state and
+    * its span alone — no maintained count table, no extra state to
+    * crash); a 0→m key RETRACTS the null-extension (its OTHER factors
+    * riding along — earlier dims at span-START state, later at
+    * span-END, exactly as in the inner term), an m→0 key restores it.
     *
-    * Measure NULLs fold to 0 (the [[CdcJoinView.leftJoinGroupDelta]]
-    * contract, stated there); seeds must fold identically
-    * (`sum(coalesce(e, 0))`) and oracles mirror with
-    * `COALESCE(SUM(e), 0)`. */
+    * NULL measure semantics, stated: contributions are summed with
+    * NULL reading as 0 (the signed fold cannot distinguish "group with
+    * only null-extended rows" from any other zero-sum), so a measure
+    * over a dim column reads 0 — not SQL's NULL — for all-unmatched
+    * groups. Seeds must fold identically (`sum(coalesce(e, 0))`) and
+    * oracles mirror with `COALESCE(SUM(e), 0)`. */
   def leftStarGroupDelta(fNet: Option[DataFrame], fKeys: Seq[String],
                          fAtStart: () => DataFrame, sides: Seq[Side],
                          dims: Seq[String],

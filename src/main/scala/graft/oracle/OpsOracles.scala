@@ -3666,10 +3666,11 @@ object OpsOracles {
   /** Mirrors ChangeLog.ordersJoinViewPersisted: the endpoint A₂ ⋈ B₂
     * per-segment revenue recomputed from the source tables — the
     * engine instead maintains the PERSISTED two-log join view
-    * (runtime/JoinView) across the interleaved history (A adds, A
-    * price bumps, B segment flips, B row removals), committing the
-    * position PAIR atomically with the data, so a hash match proves
-    * every signed contribution of both logs landed exactly once. */
+    * (runtime/StarJoinView, one dim) across the interleaved history
+    * (A adds, A price bumps, B segment flips, B row removals),
+    * committing the position PAIR atomically with the data, so a hash
+    * match proves every signed contribution of both logs landed
+    * exactly once. */
   val ordersJoinViewPersisted: String =
     """WITH a AS (
       |  SELECT o_custkey,

@@ -1100,15 +1100,15 @@ object ChangeLog {
         sum(size(col("changed_cols"))).as("n_changed_cells"))
   }
 
-  /** Registered face #11: JOIN-VIEW IVM ([[graft.ops.CdcJoinView]])
-    * — a per-market-segment revenue view over orders ⋈ customer,
-    * seeded at state0 and brought to the endpoint by applying the
-    * orders log's signed join delta (`ΔA ⋈ B`; the customer side is
-    * static here, so the `A₀ ⋈ ΔB` branch is empty — CdcJoinViewSpec
-    * exercises both sides moving). Every order add/remove/change
-    * reaches the view THROUGH the join (the fact's own columns don't
-    * carry the segment); the DuckDB oracle recomputes the endpoint
-    * join from scratch. */
+  /** Registered face #11: JOIN-VIEW IVM ([[graft.ops.CdcStarView]]
+    * with one dim) — a per-market-segment revenue view over
+    * orders ⋈ customer, seeded at state0 and brought to the endpoint
+    * by applying the orders log's signed join delta (`ΔF ⋈ D`; the
+    * customer side is static here — `net = None` — so its `F₀ ⋈ ΔD`
+    * term never exists; CdcJoinViewSpec exercises both sides moving).
+    * Every order add/remove/change reaches the view THROUGH the join
+    * (the fact's own columns don't carry the segment); the DuckDB
+    * oracle recomputes the endpoint join from scratch. */
   def ordersJoinViewMaintained(s: SparkSession, dir: String)
       : DataFrame = {
     val table = ensureOrdersHistory(s, dir)
@@ -1117,16 +1117,6 @@ object ChangeLog {
       .select(col("o_custkey"), col("c_mktsegment"))
     val aNet = netDiff(
       readSince(s, table, Some(0L)).get, Seq("o_orderkey"))
-    // The static side's empty net, in the netDiff schema — built from
-    // a DETACHED schema copy: deriving it from `cust` itself would
-    // share that plan's attribute ids with the live join side and
-    // trip the ambiguous-self-join check.
-    val custEmpty = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], cust.schema)
-    val bNet = TableDiff.diff(custEmpty,
-      s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], cust.schema),
-      Seq("o_custkey"))
     val dims = Seq("c_mktsegment")
     val measures = Seq(("sum_cents",
       round(col("o_totalprice") * 100, 0).cast("long")))
@@ -1147,17 +1137,18 @@ object ChangeLog {
       .select(col("c_mktsegment"), col("sum_cents"), col("n_rows"))
       .localCheckpoint()
     graft.ops.CdcView.applyDelta(view0,
-      graft.ops.CdcJoinView.joinGroupDelta(aNet, Seq("o_orderkey"),
-        bNet, Seq("o_custkey"), bCurrent = cust,
-        aAtStart = s.read.parquet(table).limit(0),
-        joinKeys = Seq("o_custkey"), dims, measures),
+      graft.ops.CdcStarView.starGroupDelta(Some(aNet), Seq("o_orderkey"),
+        () => snapshotAt(s, table, Seq("o_orderkey"), 0L),
+        Seq(graft.ops.CdcStarView.Side(Seq("o_custkey"), Seq("o_custkey"),
+          cust, net = None, atStart = () => cust)),
+        dims, measures),
       dims, measures.map(_._1))
   }
 
-  /** Build (once per JVM) the TWO-LOG join-view chain
-    * ([[graft.runtime.JoinView]]): a dedicated orders copy AND a
+  /** Build (once per JVM) the TWO-LOG join-view chain (a one-dim
+    * [[graft.runtime.StarJoinView]]): a dedicated orders copy AND a
     * LOGGED customer-dim table, the persisted view seeded at the
-    * pre-history pair and refreshed across an interleaved history in
+    * pre-history vector and refreshed across an interleaved history in
     * which BOTH sides move — span 1 A-only (ΔA ⋈ B), span 2 both
     * sides in one refresh (ΔA ⋈ B₁ ∪ A₀ ⋈ ΔB, A₀ via snapshotAt at
     * the committed A-position), span 3 B-only with ROW REMOVALS
@@ -1196,7 +1187,7 @@ object ChangeLog {
       MergeUpsert.replaceAll(s, aT, a0, partitionCol = "o_orderpriority")
       MergeUpsert.replaceAll(s, bT, b(flip = false, dropRows = false),
         partitionCol = "c_mktsegment")
-      refreshJoinView(s, root) // seed at the pre-history pair (-1, -1)
+      refreshJoinView(s, root) // seed at the pre-history vector (-1, -1)
       refreshJoinViewPartitioned(s, root) // partitioned twin, same seed
       recordBatch(s, aT, Seq("o_orderkey"), 1L)(
         MergeUpsert.replaceAll(s, aT, a1,
@@ -1219,38 +1210,37 @@ object ChangeLog {
     root
   }
 
+  private def joinDim(root: String): Seq[StarJoinView.DimSpec] = Seq(
+    StarJoinView.DimSpec(s"$root/custdim", Seq("o_custkey"),
+      Seq("o_custkey")))
+
   private def refreshJoinView(s: SparkSession,
-                              root: String): (Long, Long) =
-    JoinView.refresh(s, s"$root/orders", s"$root/custdim",
-      s"$root/view", aKeys = Seq("o_orderkey"),
-      bKeys = Seq("o_custkey"), joinKeys = Seq("o_custkey"),
-      dims = Seq("c_mktsegment"),
-      measures = Seq(("sum_cents",
-        round(col("o_totalprice") * 100, 0).cast("long"))))
+                              root: String): Seq[Long] =
+    StarJoinView.refresh(s, s"$root/orders", joinDim(root),
+      s"$root/view", fKeys = Seq("o_orderkey"),
+      viewDims = Seq("c_mktsegment"), measures = starMeasures)
 
   /** The PARTITIONED twin — same view definition, hive-partitioned on
     * the segment dim so each refresh rewrites only the partitions its
-    * span's delta touches ([[JoinView.refreshPartitioned]]). */
+    * span's delta touches ([[StarJoinView.refreshPartitioned]]). */
   private def refreshJoinViewPartitioned(s: SparkSession,
-                                         root: String): (Long, Long) =
-    JoinView.refreshPartitioned(s, s"$root/orders", s"$root/custdim",
-      s"$root/view_part", aKeys = Seq("o_orderkey"),
-      bKeys = Seq("o_custkey"), joinKeys = Seq("o_custkey"),
-      dims = Seq("c_mktsegment"),
-      measures = Seq(("sum_cents",
-        round(col("o_totalprice") * 100, 0).cast("long"))),
+                                         root: String): Seq[Long] =
+    StarJoinView.refreshPartitioned(s, s"$root/orders", joinDim(root),
+      s"$root/view_part", fKeys = Seq("o_orderkey"),
+      viewDims = Seq("c_mktsegment"), measures = starMeasures,
       partDim = "c_mktsegment")
 
   /** Build (once per JVM) the LEFT-OUTER join-view chain
-    * ([[graft.runtime.JoinView]] with `joinType = "left"`): the
-    * orders fact LEFT-joined to a logged customer dim whose key set
+    * ([[graft.runtime.StarJoinView]] with one dim and
+    * `joinType = "left"`): the orders fact LEFT-joined to a logged
+    * customer dim whose key set
     * CHURNS — the history is engineered so B keys both APPEAR for
     * live A rows (batch 1 adds the `%13 == 2` customers the seed
     * state lacked: their orders' null-extended contributions must
     * RETRACT from the null-segment group and re-land joined) and
     * DISAPPEAR (batch 2 drops `%17 == 5`: their orders must come
     * back null-extended) — the two zero-crossing transitions of
-    * [[graft.ops.CdcJoinView.leftJoinGroupDelta]]'s count-augmented
+    * [[graft.ops.CdcStarView.leftStarGroupDelta]]'s count-augmented
     * delta, exercised across a three-update interleaved history with
     * the A side moving too (adds at span 1, price bumps at span 2).
     * Reference analogue: every reference gold join is LEFT OUTER
@@ -1291,7 +1281,7 @@ object ChangeLog {
       MergeUpsert.replaceAll(s, bT,
         b(appear = false, flip = false, drop = false),
         partitionCol = "c_mktsegment")
-      refreshLeftJoinView(s, root) // seed at the pre-history pair
+      refreshLeftJoinView(s, root) // seed at the pre-history vector
       refreshLeftJoinViewPartitioned(s, root)
       recordBatch(s, aT, Seq("o_orderkey"), 1L)(
         MergeUpsert.replaceAll(s, aT, a1,
@@ -1319,41 +1309,38 @@ object ChangeLog {
 
   /** Shared definition of the LEFT view twins: per (segment,
     * priority) — segment NULL for unmatched orders — revenue cents
-    * (A-side, null-proof) and nation-key sum (B-side: NULL for
+    * (fact-side, null-proof) and nation-key sum (dim-side: NULL for
     * unmatched rows, folding to 0 under the stated contract). Both
-    * sides projected to their referenced columns (aCols/bCols — the
-    * [[JoinView.refresh]] pruning path under test too). */
-  private def leftJoinViewArgs = (
-    Seq("o_orderkey"), Seq("o_custkey"), Seq("o_custkey"),
-    Seq("c_mktsegment", "o_orderpriority"),
-    Seq(
-      ("sum_cents", round(col("o_totalprice") * 100, 0).cast("long")),
-      ("nation_sum", col("c_nationkey").cast("long"))))
+    * sides projected to their referenced columns (fCols /
+    * DimSpec.cols — the pruning path under test too). */
+  private def leftJoinDim(root: String): Seq[StarJoinView.DimSpec] = Seq(
+    StarJoinView.DimSpec(s"$root/custdim", Seq("o_custkey"),
+      Seq("o_custkey"), cols = Some(Seq("c_mktsegment", "c_nationkey"))))
+
+  private def leftJoinMeasures = starMeasures :+
+    (("nation_sum", col("c_nationkey").cast("long")))
 
   private def refreshLeftJoinView(s: SparkSession,
-                                  root: String): (Long, Long) = {
-    val (aKeys, bKeys, jKeys, dims, measures) = leftJoinViewArgs
-    JoinView.refresh(s, s"$root/orders", s"$root/custdim",
-      s"$root/view", aKeys, bKeys, jKeys, dims, measures,
-      joinType = "left",
-      aCols = Some(Seq("o_orderpriority", "o_totalprice")),
-      bCols = Some(Seq("c_mktsegment", "c_nationkey")))
-  }
+                                  root: String): Seq[Long] =
+    StarJoinView.refresh(s, s"$root/orders", leftJoinDim(root),
+      s"$root/view", fKeys = Seq("o_orderkey"),
+      viewDims = Seq("c_mktsegment", "o_orderpriority"),
+      measures = leftJoinMeasures, joinType = "left",
+      fCols = Some(Seq("o_orderpriority", "o_totalprice")))
 
-  /** The PARTITIONED twin — hive-partitioned on the A-side priority
-    * dim (never null; a LEFT view's B-side dims are NULL for
+  /** The PARTITIONED twin — hive-partitioned on the fact-side priority
+    * dim (never null; a LEFT view's dim-side dims are NULL for
     * unmatched groups and a null hive partition value would defeat
     * partition-scoped rewrites — the constraint
-    * [[JoinView.refreshPartitioned]] documents). */
+    * [[StarJoinView.refreshPartitioned]] documents). */
   private def refreshLeftJoinViewPartitioned(s: SparkSession,
-                                             root: String): (Long, Long) = {
-    val (aKeys, bKeys, jKeys, dims, measures) = leftJoinViewArgs
-    JoinView.refreshPartitioned(s, s"$root/orders", s"$root/custdim",
-      s"$root/view_part", aKeys, bKeys, jKeys, dims, measures,
-      partDim = "o_orderpriority", joinType = "left",
-      aCols = Some(Seq("o_orderpriority", "o_totalprice")),
-      bCols = Some(Seq("c_mktsegment", "c_nationkey")))
-  }
+                                             root: String): Seq[Long] =
+    StarJoinView.refreshPartitioned(s, s"$root/orders",
+      leftJoinDim(root), s"$root/view_part", fKeys = Seq("o_orderkey"),
+      viewDims = Seq("c_mktsegment", "o_orderpriority"),
+      measures = leftJoinMeasures, partDim = "o_orderpriority",
+      joinType = "left",
+      fCols = Some(Seq("o_orderpriority", "o_totalprice")))
 
   /** Registered face #12c: the PERSISTED LEFT-OUTER join view —
     * caught up at serve time across the outstanding B-removal span
@@ -1375,7 +1362,7 @@ object ChangeLog {
 
   /** Registered face #12d: the PARTITIONED LEFT-OUTER join view —
     * same history and oracle, maintained partition-scoped on the
-    * A-side priority dim with the pair-position split commit. */
+    * fact-side priority dim with the vector-position split commit. */
   def ordersLeftJoinViewPartitioned(s: SparkSession, dir: String)
       : DataFrame = {
     val root = ensureLeftJoinViewPersisted(s, dir)
@@ -1559,10 +1546,10 @@ object ChangeLog {
   }
 
   /** The left faces also exercise the per-side COLUMN PROJECTION
-    * (DimSpec.cols / fCols — the [[JoinView]] aCols/bCols pruning on
-    * the star): each side contributes only its referenced columns,
-    * which at 100 TB keeps the IVM path's shuffles at the measure
-    * columns and mechanically prevents non-key name collisions. */
+    * (DimSpec.cols / fCols): each side contributes only its referenced
+    * columns, which at 100 TB keeps the IVM path's shuffles at the
+    * measure columns and mechanically prevents non-key name
+    * collisions. */
   private def leftStarDims(root: String): Seq[StarJoinView.DimSpec] = Seq(
     StarJoinView.DimSpec(s"$root/custdim", Seq("o_custkey"),
       Seq("o_custkey"), cols = Some(Seq("c_mktsegment", "c_nationkey"))),
@@ -1660,8 +1647,8 @@ object ChangeLog {
   }
 
   /** Registered face #12: the PERSISTED two-log join view — the
-    * [[graft.runtime.JoinView]] loop caught up across the interleaved
-    * history above (the serve-time refresh applies the outstanding
+    * one-dim [[graft.runtime.StarJoinView]] caught up across the
+    * interleaved history above (the serve-time refresh applies the outstanding
     * B-only removal span; bench reps past the first are a position
     * check + a bare scan of the tiny view). The DuckDB oracle
     * recomputes the ENDPOINT A₂ ⋈ B₂ per-segment revenue from the
@@ -1677,8 +1664,8 @@ object ChangeLog {
 
   /** Registered face #12b: the PARTITIONED join view — the same
     * definition and the same interleaved two-log history, maintained
-    * by [[JoinView.refreshPartitioned]]: per-partition `_as_of_a`/
-    * `_as_of_b` pairs with the pair-position file committed LAST, so
+    * by [[StarJoinView.refreshPartitioned]]: per-partition `_as_of_f`/
+    * `_as_of_d0` vectors with the vector file committed LAST, so
     * each refresh rewrites only the segment partitions its span
     * touches — O(spans + touched partitions) against [[refresh]]'s
     * O(|view|), the form a 100 TB join view must take. Same oracle as

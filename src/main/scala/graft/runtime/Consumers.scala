@@ -111,8 +111,8 @@ object Consumers {
 
   /** POINTER (indirect) registration — [[register]] for a consumer
     * whose positions are COMMITTED ELSEWHERE in one atomic
-    * multi-position file ([[JoinView]]'s pair file,
-    * [[StarJoinView]]'s vector file). The registry entry stores only
+    * multi-position file ([[StarJoinView]]'s
+    * vector file). The registry entry stores only
     * a STATIC pointer — the file's path and which comma-separated
     * component is this log's position — and [[list]] resolves the
     * position by reading that file at listing time (one tiny read,

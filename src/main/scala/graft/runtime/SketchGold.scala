@@ -63,12 +63,27 @@ object SketchGold {
       .agg(hll_sketch_agg(col("user_id"), lit(LgK)).as("user_sketch"))
       .withColumn("dau_est", hll_sketch_estimate(col("user_sketch")))
 
+  /** The gold chain's day key: the pipeline stores its sketch table
+    * under the `datetime` partition convention every gold shares,
+    * while a standalone [[unionDelta]]/[[recomputeDelta]] table keeps
+    * [[dailySketch]]'s `day`. */
+  private val ChainDayCol = "datetime"
+
   /** [[dailySketch]] on the silver session grain, in the gold chain's
     * table form: one sketch row per `datetime` partition. */
   def silverDailySketch(silver: DataFrame): DataFrame =
     dailySketch(silver
-        .select(col("datetime").as("day"), col("user_id")).distinct())
-      .withColumnRenamed("day", "datetime")
+        .select(col(ChainDayCol).as("day"), col("user_id")).distinct())
+      .withColumnRenamed("day", ChainDayCol)
+
+  /** A stored sketch table with its day key as `day`, whichever of the
+    * two stored forms it is — the one place a reader resolves it. */
+  private def readStored(spark: SparkSession, goldDir: String): DataFrame = {
+    val stored = spark.read.parquet(goldDir)
+    if (stored.columns.contains(ChainDayCol))
+      stored.withColumnRenamed(ChainDayCol, "day")
+    else stored
+  }
 
   /** O(delta) additive maintenance: union the delta's per-day sketches
     * into the stored rows. Reads NOTHING but the affected days' stored
@@ -126,10 +141,12 @@ object SketchGold {
     * [[graft.ops.EventOps.dauWau]], here over one metadata-scale row
     * per day), then one union per window. `n_days` counts the sketch
     * rows present in each window so a consumer can tell a partial
-    * leading window from a full one. */
+    * leading window from a full one. Reads either stored form (the
+    * gold chain's `gold_user_sketch` or a [[unionDelta]] table); the
+    * output key is `day` for both. */
   def rollingDistinct(spark: SparkSession, goldDir: String,
                       windowDays: Int): DataFrame =
-    spark.read.parquet(goldDir)
+    readStored(spark, goldDir)
       .select(col("day"), col("user_sketch"),
         explode_outer(sequence(lit(0), lit(windowDays - 1))).as("off"))
       .filter(col("off").isNotNull)

@@ -90,8 +90,8 @@ object SilverLoop {
     * buckets at live-set size — with NO history lost
     * ([[graft.runtime.Scd2Store.readHistory]] serves live ∪
     * archive), where logRetention's fold genuinely coarsens. */
-  /** `joinView`: maintain the PERSISTED two-log join view
-    * ([[graft.runtime.JoinView]] at
+  /** `joinView`: maintain the PERSISTED two-log join view (a
+    * one-dim [[graft.runtime.StarJoinView]] at
     * `<warehouse>/gold_episode_webtoon_jview`) inside the loop — the
     * reference's one gold→gold dependency (the webtoon job reading
     * the episode gold, `gold_webtoon_daily_metrics.py:74-77`) kept
@@ -102,7 +102,7 @@ object SilverLoop {
     * [[refreshGoldJoinView]]).
     * Maintained in the PARTITIONED form on the datetime dim (each
     * micro-batch rewrites only the dates its spans touch — the
-    * per-partition pair split commit), with both sides projected to
+    * per-partition vector split commit), with both sides projected to
     * their referenced columns; both consumers register, so
     * `logRetention`'s folds clamp behind the view on EITHER log. */
   def startPipeline(parsed: DataFrame, bronzeDir: String,
@@ -180,36 +180,45 @@ object SilverLoop {
     * e.g. to catch the view up after a crash between the episode and
     * webtoon gold stages left the logs skewed for one batch.
     *
-    * PARTITIONED form on the view's datetime dim: the steady-state
-    * loop bill is O(spans + touched dates), not O(|view|) — at
-    * warehouse grain a micro-batch touches a handful of dates while
-    * the view holds years. aCols/bCols project each gold down to its
-    * keys plus the one referenced measure, honoring CdcJoinView's
-    * non-key-collision contract mechanically (the golds share generic
-    * names — n_rows, complete_rows, exit_rows — that must not meet in
-    * the join). `joinType = "left"`: the reference dependency this
-    * view models is ⟕ (`gold_webtoon_daily_metrics.py:74-77` reads
-    * the episode gold into a LEFT-preserved webtoon frame; every
-    * reference gold join is left-outer) — an episode grain whose
-    * (datetime, webtoon) key has no webtoon-gold row yet (the
-    * crash-between-stages skew above) still serves, fanout 0 under
-    * the NULL-as-0 measure contract, and retracts into the joined
-    * figure when the key lands. Upgrade note: JoinView commits the
-    * view's config signature at seed and DROPS+RE-SEEDS state seeded
-    * under a different definition (the pre-flip inner view, or the
-    * pre-r16 gv_pt layout) — one loud O(base join) bill, never a
-    * silently mis-maintained or mixed-layout view. */
+    * A one-dim star: the episode gold is the fact, the webtoon gold
+    * its one dim. PARTITIONED form on the view's datetime dim: the
+    * steady-state loop bill is O(spans + touched dates), not
+    * O(|view|) — at warehouse grain a micro-batch touches a handful
+    * of dates while the view holds years. `fCols`/`DimSpec.cols`
+    * project each gold down to its keys plus the one referenced
+    * measure, honoring the star's non-key-collision contract
+    * mechanically (the golds share generic names — n_rows,
+    * complete_rows, exit_rows — that must not meet in the join).
+    * `joinType = "left"`: the reference dependency this view models is
+    * ⟕ (`gold_webtoon_daily_metrics.py:74-77` reads the episode gold
+    * into a LEFT-preserved webtoon frame; every reference gold join is
+    * left-outer) — an episode grain whose (datetime, webtoon) key has
+    * no webtoon-gold row yet (the crash-between-stages skew above)
+    * still serves, fanout 0 under the NULL-as-0 measure contract, and
+    * retracts into the joined figure when the key lands. Returns the
+    * committed (episode, webtoon) positions.
+    *
+    * Upgrade note: the view commits its config signature at seed and
+    * DROPS + RE-SEEDS state seeded under a different definition — one
+    * loud O(base join) bill, never a silently mis-maintained or
+    * mixed-layout view. State written by the earlier two-table loop
+    * (`_as_of_a`/`_as_of_b` position columns, `jview-a-*`/`jview-b-*`
+    * registrations) is not migrated: its committed signature no longer
+    * matches, so the first refresh re-seeds it and retires those
+    * registrations. The `_pos` file keeps its `p0,p1` layout. */
   def refreshGoldJoinView(spark: org.apache.spark.sql.SparkSession,
-                          warehouseDir: String): (Long, Long) = {
+                          warehouseDir: String): Seq[Long] = {
+    import graft.runtime.StarJoinView
     import org.apache.spark.sql.functions.col
-    graft.runtime.JoinView.refreshPartitioned(spark,
+    StarJoinView.refreshPartitioned(spark,
       s"$warehouseDir/gold_episode_daily",
-      s"$warehouseDir/gold_webtoon_daily",
+      Seq(StarJoinView.DimSpec(s"$warehouseDir/gold_webtoon_daily",
+        keys = Seq("datetime", "webtoon_id"),
+        joinKeys = Seq("datetime", "webtoon_id"),
+        cols = Some(Seq("total_sessions")))),
       s"$warehouseDir/gold_episode_webtoon_jview",
-      aKeys = Seq("datetime", "webtoon_id", "episode_id"),
-      bKeys = Seq("datetime", "webtoon_id"),
-      joinKeys = Seq("datetime", "webtoon_id"),
-      dims = Seq("datetime"),
+      fKeys = Seq("datetime", "webtoon_id", "episode_id"),
+      viewDims = Seq("datetime"),
       // Side-unique columns only: `sessions` is episode-grain,
       // `total_sessions` the webtoon-level figure each episode
       // row fans out to.
@@ -218,7 +227,6 @@ object SilverLoop {
         ("wt_sessions_fanout", col("total_sessions"))),
       partDim = "datetime",
       joinType = "left",
-      aCols = Some(Seq("sessions")),
-      bCols = Some(Seq("total_sessions")))
+      fCols = Some(Seq("sessions")))
   }
 }

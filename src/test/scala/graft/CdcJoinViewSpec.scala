@@ -1,13 +1,14 @@
 package graft
 
-import graft.ops.{CdcJoinView, CdcView}
+import graft.ops.{CdcStarView, CdcView}
+import graft.ops.CdcStarView.Side
 import graft.runtime.ChangeLog
 import graft.silver.MergeUpsert
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Join-view IVM ([[graft.ops.CdcJoinView]]): a two-table join
+/** Join-view IVM ([[graft.ops.CdcStarView]] with one dim): a two-table join
   * aggregate maintained purely from the two change logs must equal
   * the from-scratch recompute — across adds/changes/deletes and a
   * JOIN-KEY move on the fact side, and a value change, group move,
@@ -99,8 +100,9 @@ class CdcJoinViewSpec extends SparkSpec {
 
     // One shot over both spans.
     val oneShot = CdcView.applyDelta(view0,
-      CdcJoinView.joinGroupDelta(aNet, Seq("id"), bNet, Seq("bk"),
-        bCur, a0Snap, Seq("jk"), dims, measures),
+      CdcStarView.starGroupDelta(Some(aNet), Seq("id"), () => a0Snap,
+        Seq(Side(Seq("bk"), Seq("jk"), bCur, Some(bNet),
+          () => bdf(b0: _*))), dims, measures),
       dims, measures.map(_._1))
     assert(cells(oneShot) === cells(expected), "one-shot join delta")
 
@@ -108,14 +110,16 @@ class CdcJoinViewSpec extends SparkSpec {
     val emptyA = aNet.filter(lit(false))
     val emptyB = bNet.filter(lit(false))
     val afterA = CdcView.applyDelta(view0,
-      CdcJoinView.joinGroupDelta(aNet, Seq("id"), emptyB, Seq("bk"),
-        bdf(b0: _*), a0Snap, Seq("jk"), dims, measures),
+      CdcStarView.starGroupDelta(Some(aNet), Seq("id"), () => a0Snap,
+        Seq(Side(Seq("bk"), Seq("jk"), bdf(b0: _*), Some(emptyB),
+          () => bdf(b0: _*))), dims, measures),
       dims, measures.map(_._1))
     assert(cells(afterA) === cells(recompute(aCur, bdf(b0: _*))),
       "A-only step")
     val afterBoth = CdcView.applyDelta(afterA.localCheckpoint(),
-      CdcJoinView.joinGroupDelta(emptyA, Seq("id"), bNet, Seq("bk"),
-        bCur, aCur, Seq("jk"), dims, measures),
+      CdcStarView.starGroupDelta(Some(emptyA), Seq("id"), () => aCur,
+        Seq(Side(Seq("bk"), Seq("jk"), bCur, Some(bNet),
+          () => bdf(b0: _*))), dims, measures),
       dims, measures.map(_._1))
     assert(cells(afterBoth) === cells(expected), "B step after A step")
 
@@ -124,17 +128,19 @@ class CdcJoinViewSpec extends SparkSpec {
       .unionByName(bNet.select(col("n_jk").as("jk")))
       .filter(col("jk").isNotNull).distinct()
     val restricted = CdcView.applyDelta(view0,
-      CdcJoinView.joinGroupDelta(aNet, Seq("id"), bNet, Seq("bk"),
-        bCur, a0Snap.join(bKeysTouched, Seq("jk"), "left_semi"),
-        Seq("jk"), dims, measures),
+      CdcStarView.starGroupDelta(Some(aNet), Seq("id"),
+        () => a0Snap.join(bKeysTouched, Seq("jk"), "left_semi"),
+        Seq(Side(Seq("bk"), Seq("jk"), bCur, Some(bNet),
+          () => bdf(b0: _*))), dims, measures),
       dims, measures.map(_._1))
     assert(cells(restricted) === cells(expected),
       "ΔB-key-restricted A0 must stay exact")
 
     // Float measures stay refused at the join-view door too.
     val e = intercept[IllegalArgumentException](
-      CdcJoinView.joinGroupDelta(aNet, Seq("id"), bNet, Seq("bk"),
-        bCur, a0Snap, Seq("jk"), dims,
+      CdcStarView.starGroupDelta(Some(aNet), Seq("id"), () => a0Snap,
+        Seq(Side(Seq("bk"), Seq("jk"), bCur, Some(bNet),
+          () => bdf(b0: _*))), dims,
         Seq(("bad", col("m") * lit(0.5)))))
     assert(e.getMessage.contains("SIGNED"))
   }

@@ -1,14 +1,15 @@
 package graft
 
-import graft.runtime.{ChangeLog, Consumers, Incremental, JoinView,
-  MaterializedView}
+import graft.runtime.{ChangeLog, Consumers, Incremental,
+  MaterializedView, StarJoinView}
+import graft.runtime.StarJoinView.DimSpec
 import graft.silver.MergeUpsert
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Raw pair-file writer for crash simulation (the production writer
-  * is private to [[graft.runtime.JoinView]] by design). */
+  * is private to [[graft.runtime.StarJoinView]] by design). */
 object JoinViewSpecHelper {
   def writePair(fs: org.apache.hadoop.fs.FileSystem,
                 path: org.apache.hadoop.fs.Path,
@@ -25,7 +26,7 @@ object JoinViewSpecHelper {
   }
 }
 
-/** The PERSISTED two-log join view ([[graft.runtime.JoinView]]):
+/** The PERSISTED two-log join view ([[graft.runtime.StarJoinView]]):
   * positions in BOTH change logs commit atomically with the data (the
   * paired `_as_of` single-partition swap), so every crash window
   * converges; both consumers register (either log's collapse clamps
@@ -59,9 +60,10 @@ class JoinViewSpec extends SparkSpec {
   private val measures = Seq(("mw", col("m") * col("w")))
 
   private def refresh(aDir: String, bDir: String,
-                      viewDir: String): (Long, Long) =
-    JoinView.refresh(spark, aDir, bDir, viewDir, Seq("id"), Seq("bk"),
-      Seq("jk"), Seq("grp"), measures)
+                      viewDir: String): Seq[Long] =
+    StarJoinView.refresh(spark, aDir,
+      Seq(DimSpec(bDir, Seq("bk"), Seq("jk"))), viewDir, Seq("id"),
+      Seq("grp"), measures)
 
   private def recomputeNow(aDir: String, bDir: String): DataFrame =
     spark.read.parquet(aDir).join(spark.read.parquet(bDir), Seq("jk"))
@@ -70,7 +72,7 @@ class JoinViewSpec extends SparkSpec {
       .select(col("grp"), col("mw"), col("n_rows"))
 
   private def viewNow(viewDir: String): DataFrame =
-    spark.read.parquet(viewDir).drop("_as_of_a", "_as_of_b", "gv_pt")
+    spark.read.parquet(viewDir).drop("_as_of_f", "_as_of_d0", "gv_pt")
 
   private def assertConverged(viewDir: String, aDir: String,
                               bDir: String, what: String): Unit =
@@ -88,7 +90,7 @@ class JoinViewSpec extends SparkSpec {
     MergeUpsert.replaceAll(spark, bDir,
       bdf((100L, 10L, "g1", 10L), (101L, 20L, "g1", 20L),
         (102L, 30L, "g2", 30L)), partitionCol = "pt")
-    assert(refresh(aDir, bDir, viewDir) === (-1L, -1L),
+    assert(refresh(aDir, bDir, viewDir) === Seq(-1L, -1L),
       "seed must stamp the pre-history pair")
     assertConverged(viewDir, aDir, bDir, "seed")
     (aDir, bDir, viewDir)
@@ -113,7 +115,7 @@ class JoinViewSpec extends SparkSpec {
     // Span 1: A only (delete id2, add id5, m change on id1).
     publishA(aDir, 1L, (1L, 10L, 4L), (3L, 20L, 5L), (4L, 30L, 7L),
       (5L, 10L, 11L))
-    assert(refresh(aDir, bDir, viewDir) === (1L, -1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(1L, -1L))
     assertConverged(viewDir, aDir, bDir, "A-only span")
 
     // Span 2: BOTH sides in one refresh — A join-key move (id3 jk
@@ -123,28 +125,30 @@ class JoinViewSpec extends SparkSpec {
       (102L, 30L, "g2", 30L), (103L, 40L, "g3", 40L))
     publishA(aDir, 2L, (1L, 10L, 4L), (3L, 30L, 5L), (4L, 30L, 7L),
       (5L, 10L, 11L))
-    assert(refresh(aDir, bDir, viewDir) === (2L, 1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(2L, 1L))
     assertConverged(viewDir, aDir, bDir, "both-sides span")
 
     // Span 3: B only, with a ROW REMOVAL (bk 102 — every jk-30 fact
     // loses its match and leaves the view through the join).
     publishB(bDir, 2L, (100L, 10L, "g1", 12L), (101L, 20L, "g2", 20L),
       (103L, 40L, "g3", 40L))
-    assert(refresh(aDir, bDir, viewDir) === (2L, 2L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(2L, 2L))
     assertConverged(viewDir, aDir, bDir, "B-only removal span")
 
     // Registered in BOTH registries, at the committed pair.
     val ra = Consumers.list(spark, aDir)
     val rb = Consumers.list(spark, bDir)
-    assert(ra.map(_.name) === Seq(JoinView.consumerName(viewDir, "a")))
-    assert(rb.map(_.name) === Seq(JoinView.consumerName(viewDir, "b")))
+    assert(ra.map(_.name) ===
+      Seq(StarJoinView.consumerName(viewDir, "f")))
+    assert(rb.map(_.name) ===
+      Seq(StarJoinView.consumerName(viewDir, "d0")))
     assert(ra.head.position === 2L && rb.head.position === 2L)
     assert(ra.head.viewDir.contains(viewDir) &&
       rb.head.viewDir.contains(viewDir))
 
     // No-op refresh: same pair, same cells.
     val before = cells(viewNow(viewDir))
-    assert(refresh(aDir, bDir, viewDir) === (2L, 2L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(2L, 2L))
     assert(cells(viewNow(viewDir)) === before)
   }
 
@@ -153,7 +157,7 @@ class JoinViewSpec extends SparkSpec {
       "is conservative — the fold stops early, the refresh is exact") {
     val (aDir, bDir, viewDir) = seeded("jv-crash")
     publishA(aDir, 1L, (1L, 10L, 4L), (3L, 20L, 5L), (4L, 30L, 7L))
-    assert(refresh(aDir, bDir, viewDir) === (1L, -1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(1L, -1L))
 
     // Mid-swap crash: the view's single partition sits in a backup,
     // the live name missing (death between the two renames). The next
@@ -167,7 +171,7 @@ class JoinViewSpec extends SparkSpec {
         s"$viewDir/.backup-$uuid--gv_pt=all")))
     publishB(bDir, 1L, (100L, 10L, "g1", 15L), (101L, 20L, "g1", 20L),
       (102L, 30L, "g2", 30L))
-    assert(refresh(aDir, bDir, viewDir) === (1L, 1L),
+    assert(refresh(aDir, bDir, viewDir) === Seq(1L, 1L),
       "the healed view must refresh from its restored pair")
     assertConverged(viewDir, aDir, bDir, "after mid-swap heal")
 
@@ -175,23 +179,25 @@ class JoinViewSpec extends SparkSpec {
     // registries lag BELOW the committed pair. That is conservative —
     // a collapse clamps early (folds less than it could), never past
     // what the view needs — and the next refresh re-registers.
-    Consumers.register(spark, aDir, JoinView.consumerName(viewDir, "a"),
+    Consumers.register(spark, aDir,
+      StarJoinView.consumerName(viewDir, "f"),
       0L, viewDir = Some(viewDir))
     assert(!ChangeLog.checkpoint(spark, aDir, Seq("id"), 1L),
       "the lagging registration must clamp the fold early")
     assert(Incremental.batches(spark, ChangeLog.logDir(aDir))
       === Seq(1L), "no entry the view might need may fold")
     publishA(aDir, 2L, (1L, 10L, 4L), (4L, 30L, 7L))
-    assert(refresh(aDir, bDir, viewDir) === (2L, 1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(2L, 1L))
     assertConverged(viewDir, aDir, bDir, "after registry-lag refresh")
     assert(Consumers.list(spark, aDir).head.position === 2L,
       "the refresh must re-register the committed position")
   }
 
   private def refreshPart(aDir: String, bDir: String,
-                          viewDir: String): (Long, Long) =
-    JoinView.refreshPartitioned(spark, aDir, bDir, viewDir, Seq("id"),
-      Seq("bk"), Seq("jk"), Seq("grp"), measures, partDim = "grp")
+                          viewDir: String): Seq[Long] =
+    StarJoinView.refreshPartitioned(spark, aDir,
+      Seq(DimSpec(bDir, Seq("bk"), Seq("jk"))), viewDir, Seq("id"),
+      Seq("grp"), measures, partDim = "grp")
 
   test("partitioned form: only touched partitions rewrite; straggler " +
       "partitions top up from their OWN pair; a crashed seed recovers " +
@@ -204,7 +210,7 @@ class JoinViewSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
 
-    assert(refreshPart(aDir, bDir, viewDir) === (-1L, -1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(-1L, -1L))
     assertConverged(viewDir, aDir, bDir, "partitioned seed")
     assert(fs.exists(p(s"$viewDir/grp=g1")) &&
       fs.exists(p(s"$viewDir/grp=g2")))
@@ -214,7 +220,7 @@ class JoinViewSpec extends SparkSpec {
     fs.delete(p(viewDir + "_pos"), false)
     publishA(aDir, 1L, (1L, 10L, 4L), (2L, 10L, 3L), (3L, 20L, 5L),
       (4L, 30L, 7L))
-    assert(refreshPart(aDir, bDir, viewDir) === (1L, -1L),
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(1L, -1L),
       "recovered pair must refresh, not re-seed")
     assertConverged(viewDir, aDir, bDir, "after crashed-seed recovery")
 
@@ -223,7 +229,7 @@ class JoinViewSpec extends SparkSpec {
     Thread.sleep(1100)
     publishA(aDir, 2L, (1L, 10L, 9L), (2L, 10L, 3L), (3L, 20L, 5L),
       (4L, 30L, 7L))
-    assert(refreshPart(aDir, bDir, viewDir) === (2L, -1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(2L, -1L))
     assertConverged(viewDir, aDir, bDir, "A-only g1 span")
     assert(fs.getFileStatus(p(s"$viewDir/grp=g2")).getModificationTime
       === mt0, "an untouched partition must not rewrite")
@@ -243,7 +249,7 @@ class JoinViewSpec extends SparkSpec {
       (102L, 30L, "g2", 30L))
     publishA(aDir, 3L, (1L, 10L, 9L), (2L, 10L, 3L), (4L, 30L, 7L),
       (6L, 20L, 13L))
-    assert(refreshPart(aDir, bDir, viewDir) === (3L, 1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(3L, 1L))
     fs.delete(p(s"$viewDir/grp=g1"), true)
     org.apache.hadoop.fs.FileUtil.copy(fs, saveDir,
       fs, p(s"$viewDir/grp=g1"), false, conf)
@@ -256,7 +262,7 @@ class JoinViewSpec extends SparkSpec {
     // ITS OWN (3,1) via a recomputed one — and neither double-applies.
     publishA(aDir, 4L, (1L, 10L, 9L), (2L, 10L, 3L), (4L, 30L, 8L),
       (6L, 20L, 13L))
-    assert(refreshPart(aDir, bDir, viewDir) === (4L, 1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(4L, 1L))
     assertConverged(viewDir, aDir, bDir, "after mixed-pair top-up")
 
     // All-swapped-file-not window: rewind ONLY the pair file — every
@@ -264,16 +270,16 @@ class JoinViewSpec extends SparkSpec {
     // double-applies, and the file recommits.
     val healthy = cells(viewNow(viewDir))
     JoinViewSpecHelper.writePair(fs, p(viewDir + "_pos"), 3L, 1L)
-    assert(refreshPart(aDir, bDir, viewDir) === (4L, 1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(4L, 1L))
     assert(cells(viewNow(viewDir)) === healthy,
       "a rewound pair file must not double-apply")
 
     // Registered in both registries at the committed pair.
     assert(Consumers.list(spark, aDir).exists(r =>
-      r.name === JoinView.consumerName(viewDir, "a") &&
+      r.name === StarJoinView.consumerName(viewDir, "f") &&
         r.position === 4L))
     assert(Consumers.list(spark, bDir).exists(r =>
-      r.name === JoinView.consumerName(viewDir, "b") &&
+      r.name === StarJoinView.consumerName(viewDir, "d0") &&
         r.position === 1L))
   }
 
@@ -287,14 +293,14 @@ class JoinViewSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
 
-    assert(refreshPart(aDir, bDir, viewDir) === (-1L, -1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(-1L, -1L))
 
     // Batch 1 adds id 6 on jk 20 (→ g1); the refresh swaps ONLY g1
     // (stamped (1,-1)) and commits the pair file. Simulate the crash
     // between swap and commit: rewind the file, restore the marker.
     publishA(aDir, 1L, (1L, 10L, 2L), (2L, 10L, 3L), (3L, 20L, 5L),
       (4L, 30L, 7L), (6L, 20L, 13L))
-    assert(refreshPart(aDir, bDir, viewDir) === (1L, -1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(1L, -1L))
     JoinViewSpecHelper.writePair(fs, p(viewDir + "_pos"), -1L, -1L)
     fs.create(p(viewDir + "_swapping"), true).close()
 
@@ -305,7 +311,7 @@ class JoinViewSpec extends SparkSpec {
     // its own (1,-1).
     publishA(aDir, 2L, (1L, 10L, 2L), (2L, 10L, 3L), (3L, 20L, 5L),
       (4L, 30L, 7L))
-    assert(refreshPart(aDir, bDir, viewDir) === (2L, -1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(2L, -1L))
     assertConverged(viewDir, aDir, bDir,
       "netted-away crashed swap (pair form)")
     assert(!fs.exists(p(viewDir + "_swapping")),
@@ -316,7 +322,7 @@ class JoinViewSpec extends SparkSpec {
     // otherwise every later data-bearing refresh pays the full-view
     // repair scan until one completes the full path.
     fs.create(p(viewDir + "_swapping"), true).close()
-    assert(refreshPart(aDir, bDir, viewDir) === (2L, -1L))
+    assert(refreshPart(aDir, bDir, viewDir) === Seq(2L, -1L))
     assert(!fs.exists(p(viewDir + "_swapping")),
       "the nothing-new early return must clear a leftover marker")
   }
@@ -328,9 +334,9 @@ class JoinViewSpec extends SparkSpec {
     publishA(aDir, 1L, (1L, 10L, 4L), (3L, 20L, 5L), (4L, 30L, 7L))
     publishB(bDir, 1L, (100L, 10L, "g1", 15L), (101L, 20L, "g1", 20L),
       (102L, 30L, "g2", 30L))
-    assert(refresh(aDir, bDir, viewDir) === (1L, 1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(1L, 1L))
     def posOf(dir: String): Long = Consumers.list(spark, dir)
-      .find(_.name.startsWith("jview-")).get.position
+      .find(_.name.startsWith("sjview-")).get.position
     assert(posOf(aDir) === 1L && posOf(bDir) === 1L)
     val fs = new org.apache.hadoop.fs.Path(viewDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -347,7 +353,7 @@ class JoinViewSpec extends SparkSpec {
     assert(posOf(aDir) === -1L && posOf(bDir) === -1L,
       "a missing pair file must clamp both sides at -1")
     // The nothing-new serve heals the file and both sides recover.
-    assert(refresh(aDir, bDir, viewDir) === (1L, 1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(1L, 1L))
     assert(posOf(aDir) === 1L && posOf(bDir) === 1L,
       "the nothing-new path must heal the resolution target")
   }
@@ -364,13 +370,14 @@ class JoinViewSpec extends SparkSpec {
     // Same definition: a data-bearing refresh keeps the state (the
     // view advances incrementally, no re-seed).
     publishA(aDir, 1L, (1L, 10L, 4L), (3L, 20L, 5L), (4L, 30L, 7L))
-    assert(refresh(aDir, bDir, viewDir) === (1L, -1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(1L, -1L))
     assertConverged(viewDir, aDir, bDir, "same-config refresh")
     // joinType flip: the inner-seeded state means something else under
     // left maintenance — it must drop and re-seed, and converge to the
     // LEFT recompute.
-    JoinView.refresh(spark, aDir, bDir, viewDir, Seq("id"), Seq("bk"),
-      Seq("jk"), Seq("grp"), measures, joinType = "left")
+    StarJoinView.refresh(spark, aDir,
+      Seq(DimSpec(bDir, Seq("bk"), Seq("jk"))), viewDir, Seq("id"),
+      Seq("grp"), measures, joinType = "left")
     val leftExpected = spark.read.parquet(aDir)
       .join(spark.read.parquet(bDir).drop("pt"), Seq("jk"), "left")
       .groupBy(col("grp"))
@@ -382,13 +389,13 @@ class JoinViewSpec extends SparkSpec {
     // Layout change: the same definition moved from the single-slot
     // gv_pt layout to a hive-partitioned one must also re-seed (a
     // mixed-layout discovery otherwise fails or double-counts).
-    JoinView.refreshPartitioned(spark, aDir, bDir, viewDir, Seq("id"),
-      Seq("bk"), Seq("jk"), Seq("grp"), measures, partDim = "grp",
-      joinType = "left")
+    StarJoinView.refreshPartitioned(spark, aDir,
+      Seq(DimSpec(bDir, Seq("bk"), Seq("jk"))), viewDir, Seq("id"),
+      Seq("grp"), measures, partDim = "grp", joinType = "left")
     assert(fs.exists(p(s"$viewDir/grp=g1")),
       "the re-seeded view must carry the partitioned layout")
     assert(cells(spark.read.parquet(viewDir)
-        .drop("_as_of_a", "_as_of_b")) === cells(leftExpected),
+        .drop("_as_of_f", "_as_of_d0")) === cells(leftExpected),
       "the re-laid-out view must converge to the same answer")
   }
 
@@ -399,17 +406,18 @@ class JoinViewSpec extends SparkSpec {
     publishA(aDir, 2L, (1L, 10L, 6L), (3L, 20L, 5L), (4L, 30L, 7L))
     publishB(bDir, 1L, (100L, 10L, "g1", 15L), (101L, 20L, "g1", 20L),
       (102L, 30L, "g2", 30L))
-    assert(refresh(aDir, bDir, viewDir) === (2L, 1L))
+    assert(refresh(aDir, bDir, viewDir) === Seq(2L, 1L))
 
     // Simulate operational loss: retire the A-side registration, fold
     // A's log past the view, then hand the view an OLDER A position
     // (as a restored-from-backup view would carry). The refresh must
     // fail LOUD — the entries it owes were folded.
     publishA(aDir, 3L, (1L, 10L, 8L), (3L, 20L, 5L), (4L, 30L, 7L))
-    Consumers.unregister(spark, aDir, JoinView.consumerName(viewDir, "a"))
+    Consumers.unregister(spark, aDir,
+      StarJoinView.consumerName(viewDir, "f"))
     assert(ChangeLog.checkpoint(spark, aDir, Seq("id"), 3L))
     val stale = viewNow(viewDir)
-      .withColumn("_as_of_a", lit(1L)).withColumn("_as_of_b", lit(1L))
+      .withColumn("_as_of_f", lit(1L)).withColumn("_as_of_d0", lit(1L))
       .withColumn("gv_pt", lit("all")).localCheckpoint()
     MergeUpsert.replaceAll(spark, viewDir, stale, partitionCol = "gv_pt")
     val boom = intercept[IllegalArgumentException] {
@@ -421,11 +429,12 @@ class JoinViewSpec extends SparkSpec {
     // The purge path: EITHER log's compliance sweep invalidates the
     // view (both registrations carry viewDir); the next refresh
     // discards state and re-seeds from the current bases.
-    Consumers.register(spark, bDir, JoinView.consumerName(viewDir, "b"),
+    Consumers.register(spark, bDir,
+      StarJoinView.consumerName(viewDir, "d0"),
       1L, viewDir = Some(viewDir))
     Consumers.invalidateAll(spark, bDir)
     assert(MaterializedView.isInvalid(spark, viewDir))
-    assert(refresh(aDir, bDir, viewDir) === (3L, 1L),
+    assert(refresh(aDir, bDir, viewDir) === Seq(3L, 1L),
       "the re-seed must stamp the current heads")
     assert(!MaterializedView.isInvalid(spark, viewDir))
     assertConverged(viewDir, aDir, bDir, "re-seeded view")

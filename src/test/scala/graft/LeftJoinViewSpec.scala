@@ -1,13 +1,14 @@
 package graft
 
-import graft.runtime.{ChangeLog, JoinView}
+import graft.runtime.{ChangeLog, StarJoinView}
+import graft.runtime.StarJoinView.DimSpec
 import graft.silver.MergeUpsert
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** LEFT OUTER join-view IVM ([[graft.runtime.JoinView]] with
-  * `joinType = "left"`, [[graft.ops.CdcJoinView.leftJoinGroupDelta]]):
+/** LEFT OUTER join-view IVM ([[graft.runtime.StarJoinView]] with
+  * `joinType = "left"`, [[graft.ops.CdcStarView.leftStarGroupDelta]]):
   * the count-augmented outer delta. The pinned behaviors:
   *
   *  - unmatched A rows contribute ONE null-extended row each (their
@@ -52,9 +53,10 @@ class LeftJoinViewSpec extends SparkSpec {
     ("mw", col("m") * col("w")), ("ma", col("m")))
 
   private def refresh(aDir: String, bDir: String, viewDir: String,
-                      dims: Seq[String]): (Long, Long) =
-    JoinView.refresh(spark, aDir, bDir, viewDir, Seq("id"), Seq("bk"),
-      Seq("jk"), dims, measures, joinType = "left")
+                      dims: Seq[String]): Seq[Long] =
+    StarJoinView.refresh(spark, aDir,
+      Seq(DimSpec(bDir, Seq("bk"), Seq("jk"))), viewDir, Seq("id"),
+      dims, measures, joinType = "left")
 
   private def recomputeNow(aDir: String, bDir: String,
                            dims: Seq[String]): DataFrame =
@@ -68,7 +70,7 @@ class LeftJoinViewSpec extends SparkSpec {
         col("n_rows")): _*)
 
   private def viewNow(viewDir: String): DataFrame =
-    spark.read.parquet(viewDir).drop("_as_of_a", "_as_of_b", "gv_pt")
+    spark.read.parquet(viewDir).drop("_as_of_f", "_as_of_d0", "gv_pt")
 
   private def assertConverged(viewDir: String, aDir: String,
                               bDir: String, dims: Seq[String],
@@ -90,7 +92,7 @@ class LeftJoinViewSpec extends SparkSpec {
       partitionCol = "pt")
     MergeUpsert.replaceAll(spark, bDir,
       bdf((100L, 10L, "g1", 10L)), partitionCol = "pt")
-    assert(refresh(aDir, bDir, viewDir, dims) === (-1L, -1L))
+    assert(refresh(aDir, bDir, viewDir, dims) === Seq(-1L, -1L))
     assertConverged(viewDir, aDir, bDir, dims, "seed")
     (aDir, bDir, viewDir)
   }
@@ -115,14 +117,14 @@ class LeftJoinViewSpec extends SparkSpec {
     // change on a matched row.
     publishA(aDir, 1L, (1L, 10L, "x", 4L), (2L, 10L, "x", 3L),
       (3L, 20L, "y", 5L), (4L, 30L, "y", 7L), (5L, 40L, "z", 11L))
-    assert(refresh(aDir, bDir, viewDir, dims) === (1L, -1L))
+    assert(refresh(aDir, bDir, viewDir, dims) === Seq(1L, -1L))
     assertConverged(viewDir, aDir, bDir, dims, "A-only span")
 
     // Span 2: B only — jk 20 APPEARS with TWO matches (0->2 fan-out:
     // id 3 must retract its null-extended row and land twice), and
     // jk 10 loses its only match (1->0: ids 1,2 return null-extended).
     publishB(bDir, 1L, (101L, 20L, "g1", 20L), (102L, 20L, "g2", 30L))
-    assert(refresh(aDir, bDir, viewDir, dims) === (1L, 1L))
+    assert(refresh(aDir, bDir, viewDir, dims) === Seq(1L, 1L))
     assertConverged(viewDir, aDir, bDir, dims, "B-only zero-crossings")
 
     // Span 3: BOTH sides in one refresh — A moves id 4 onto jk 20
@@ -132,11 +134,11 @@ class LeftJoinViewSpec extends SparkSpec {
     publishA(aDir, 2L, (1L, 10L, "x", 4L), (2L, 10L, "x", 3L),
       (3L, 20L, "y", 5L), (4L, 20L, "y", 7L))
     publishB(bDir, 2L, (100L, 10L, "g1", 10L), (102L, 20L, "g2", 30L))
-    assert(refresh(aDir, bDir, viewDir, dims) === (2L, 2L))
+    assert(refresh(aDir, bDir, viewDir, dims) === Seq(2L, 2L))
     assertConverged(viewDir, aDir, bDir, dims, "both-sides span")
 
     // No-op refresh: nothing new on either side.
-    assert(refresh(aDir, bDir, viewDir, dims) === (2L, 2L))
+    assert(refresh(aDir, bDir, viewDir, dims) === Seq(2L, 2L))
     assertConverged(viewDir, aDir, bDir, dims, "no-op refresh")
   }
 
@@ -146,9 +148,10 @@ class LeftJoinViewSpec extends SparkSpec {
     val base = tmpDir("ljv-part")
     val aDir = s"$base/a"; val bDir = s"$base/b"
     val viewDir = s"$base/v"
-    def refreshP(): (Long, Long) =
-      JoinView.refreshPartitioned(spark, aDir, bDir, viewDir,
-        Seq("id"), Seq("bk"), Seq("jk"), dims, measures,
+    def refreshP(): Seq[Long] =
+      StarJoinView.refreshPartitioned(spark, aDir,
+        Seq(DimSpec(bDir, Seq("bk"), Seq("jk"))), viewDir,
+        Seq("id"), dims, measures,
         partDim = "adim", joinType = "left")
     MergeUpsert.replaceAll(spark, aDir,
       adf((1L, 10L, "x", 2L), (2L, 10L, "x", 3L), (3L, 20L, "y", 5L),
@@ -156,16 +159,16 @@ class LeftJoinViewSpec extends SparkSpec {
       partitionCol = "pt")
     MergeUpsert.replaceAll(spark, bDir,
       bdf((100L, 10L, "g1", 10L)), partitionCol = "pt")
-    assert(refreshP() === (-1L, -1L))
+    assert(refreshP() === Seq(-1L, -1L))
     assertConverged(viewDir, aDir, bDir, dims, "partitioned seed")
     publishB(bDir, 1L, (101L, 20L, "g1", 20L), (102L, 20L, "g2", 30L))
-    assert(refreshP() === (-1L, 1L))
+    assert(refreshP() === Seq(-1L, 1L))
     assertConverged(viewDir, aDir, bDir, dims,
       "partitioned zero-crossings (appear 0->2, disappear 1->0)")
     publishA(aDir, 1L, (1L, 10L, "x", 4L), (3L, 20L, "y", 5L),
       (4L, 20L, "y", 7L), (5L, 40L, "z", 11L))
     publishB(bDir, 2L, (100L, 10L, "g1", 10L), (102L, 20L, "g2", 30L))
-    assert(refreshP() === (1L, 2L))
+    assert(refreshP() === Seq(1L, 2L))
     assertConverged(viewDir, aDir, bDir, dims,
       "partitioned both-sides span")
   }

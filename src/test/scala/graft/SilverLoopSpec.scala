@@ -411,7 +411,7 @@ class SilverLoopSpec extends SparkSpec {
         .toSeq.sortBy(_.mkString("|"))
     }
     val view = spark.read.parquet(s"$wh/gold_episode_webtoon_jview")
-      .drop("_as_of_a", "_as_of_b", "gv_pt")
+      .drop("_as_of_f", "_as_of_d0", "gv_pt")
     // The in-loop view is LEFT OUTER (the reference dependency shape);
     // mirror with a left re-join + the NULL-as-0 measure contract —
     // equal to the inner re-join while the chain keeps both golds in
@@ -432,9 +432,9 @@ class SilverLoopSpec extends SparkSpec {
     // on EITHER gold log clamps behind it.
     import graft.runtime.Consumers
     assert(Consumers.list(spark, s"$wh/gold_episode_daily")
-      .exists(_.name.startsWith("jview-a-")))
+      .exists(_.name.startsWith("sjview-f-")))
     assert(Consumers.list(spark, s"$wh/gold_webtoon_daily")
-      .exists(_.name.startsWith("jview-b-")))
+      .exists(_.name.startsWith("sjview-d0-")))
 
     // PARTITIONED in-loop maintenance (round 16): the view is
     // hive-partitioned on datetime and a micro-batch touching ONLY
@@ -460,7 +460,7 @@ class SilverLoopSpec extends SparkSpec {
     assert(fs.getFileStatus(p0101).getModificationTime === mt0,
       "an untouched date partition must not rewrite in the loop")
     val view2 = spark.read.parquet(viewDir)
-      .drop("_as_of_a", "_as_of_b")
+      .drop("_as_of_f", "_as_of_d0")
     val expected2 = spark.read.parquet(s"$wh/gold_episode_daily")
       .join(spark.read.parquet(s"$wh/gold_webtoon_daily"),
         Seq("datetime", "webtoon_id"), "left")
@@ -500,7 +500,7 @@ class SilverLoopSpec extends SparkSpec {
         .toSeq.sortBy(_.mkString("|"))
     }
     def viewNow: DataFrame = spark.read.parquet(viewDir)
-      .drop("_as_of_a", "_as_of_b")
+      .drop("_as_of_f", "_as_of_d0")
     def expectedNow: DataFrame = spark.read.parquet(epDir)
       .join(spark.read.parquet(wtDir), Seq("datetime", "webtoon_id"),
         "left")
@@ -554,5 +554,71 @@ class SilverLoopSpec extends SparkSpec {
       "view after the key landed diverged from the left re-join")
     assert(fanout() === fanout0 + 4L,
       "the landed key's fanout must replace the null-extension")
+  }
+
+  test("state left by the earlier two-table loop (pair position " +
+      "columns, old config, jview-* registrations) re-seeds under the " +
+      "star definition and leaves no jview-* registration behind") {
+    import graft.runtime.{Consumers, MaterializedView}
+    val wh = tmpDir("jv-upgrade-wh")
+    graft.runtime.Pipeline.runDaily(spark, "/root/testdata/sf0.001", wh)
+    val epDir = s"$wh/gold_episode_daily"
+    val wtDir = s"$wh/gold_webtoon_daily"
+    val viewDir = s"$wh/gold_episode_webtoon_jview"
+    def expected: DataFrame = spark.read.parquet(epDir)
+      .join(spark.read.parquet(wtDir), Seq("datetime", "webtoon_id"),
+        "left")
+      .groupBy(col("datetime"))
+      .agg(sum(col("sessions")).as("ep_sessions"),
+        sum(coalesce(col("total_sessions"), lit(0L)))
+          .as("wt_sessions_fanout"),
+        count(lit(1)).as("n_rows"))
+    // The pair layout, by hand: per-date rows stamped with
+    // `_as_of_a`/`_as_of_b` at the (unlogged) heads, figures planted
+    // WRONG so a refresh that kept the state would be caught.
+    graft.silver.MergeUpsert.replaceAll(spark, viewDir,
+      expected.withColumn("ep_sessions", col("ep_sessions") + 1000L)
+        .withColumn("_as_of_a", lit(-1L))
+        .withColumn("_as_of_b", lit(-1L)).localCheckpoint(),
+      partitionCol = "datetime")
+    val fs = new org.apache.hadoop.fs.Path(viewDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def write(path: String, text: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    write(viewDir + "_pos", "-1,-1")
+    write(viewDir + "_cfg", Seq("layout=part:datetime", "joinType=left",
+      "aKeys=datetime,webtoon_id,episode_id",
+      "bKeys=datetime,webtoon_id", "joinKeys=datetime,webtoon_id",
+      "dims=datetime",
+      "measures=ep_sessions:sessions;wt_sessions_fanout:total_sessions",
+      "aCols=sessions", "bCols=total_sessions").mkString("\n"))
+    val suffix = MaterializedView.consumerName(viewDir)
+      .stripPrefix("mview-")
+    Consumers.registerPointer(spark, epDir, s"jview-a-$suffix",
+      viewDir + "_pos", 0, viewDir = Some(viewDir))
+    Consumers.registerPointer(spark, wtDir, s"jview-b-$suffix",
+      viewDir + "_pos", 1, viewDir = Some(viewDir))
+
+    assert(SilverLoop.refreshGoldJoinView(spark, wh) === Seq(-1L, -1L))
+    def cells(d: DataFrame): Seq[Seq[String]] = {
+      val cols = d.columns.sorted
+      d.select(cols.map(col): _*).collect()
+        .map(r => cols.indices.map(i => String.valueOf(r.get(i))).toSeq)
+        .toSeq.sortBy(_.mkString("|"))
+    }
+    assert(cells(spark.read.parquet(viewDir)
+        .drop("_as_of_f", "_as_of_d0")) === cells(expected),
+      "the pair-layout state must re-seed to the left re-join")
+    for (dir <- Seq(epDir, wtDir)) {
+      val names = Consumers.list(spark, dir).map(_.name)
+      assert(!names.exists(_.startsWith("jview-")),
+        s"a pair-loop registration survived the re-seed on $dir: $names")
+    }
+    assert(Consumers.list(spark, epDir).map(_.name)
+      .exists(_.startsWith("sjview-f-")))
+    assert(Consumers.list(spark, wtDir).map(_.name)
+      .exists(_.startsWith("sjview-d0-")))
   }
 }

@@ -158,6 +158,57 @@ class StarJoinViewSpec extends SparkSpec {
     assertConverged(viewDir, fDir, d1Dir, d2Dir, "re-seeded view")
   }
 
+  test("a re-defined star (join type, then view dims) drops its " +
+      "state and re-seeds instead of maintaining it under the new " +
+      "definition; the same definition never re-seeds") {
+    val base = tmpDir("sjv-redefine")
+    val fDir = s"$base/f"; val d1Dir = s"$base/d1"
+    val d2Dir = s"$base/d2"; val viewDir = s"$base/v"
+    val dims = Seq(DimSpec(d1Dir, Seq("k1"), Seq("k1")),
+      DimSpec(d2Dir, Seq("k2"), Seq("k2")))
+    // id 3's k1 = 30 has no d1 match: inner drops it, left keeps it.
+    MergeUpsert.replaceAll(spark, fDir,
+      fdf((1L, 10L, 100L, 2L), (2L, 20L, 200L, 3L), (3L, 30L, 100L, 5L)),
+      partitionCol = "pt")
+    MergeUpsert.replaceAll(spark, d1Dir,
+      d1df((10L, "x", 2L), (20L, "y", 3L)), partitionCol = "pt")
+    MergeUpsert.replaceAll(spark, d2Dir,
+      d2df((100L, "p", 1L), (200L, "q", 4L)), partitionCol = "pt")
+    assert(refresh(fDir, d1Dir, d2Dir, viewDir) === Seq(-1L, -1L, -1L))
+    assertConverged(viewDir, fDir, d1Dir, d2Dir, "inner seed")
+    // Same definition, new fact span: maintained incrementally.
+    ChangeLog.recordBatch(spark, fDir, Seq("id"), 1L)(
+      MergeUpsert.replaceAll(spark, fDir,
+        fdf((1L, 10L, 100L, 4L), (2L, 20L, 200L, 3L),
+          (3L, 30L, 100L, 5L)), partitionCol = "pt"))
+    assert(refresh(fDir, d1Dir, d2Dir, viewDir) === Seq(1L, -1L, -1L))
+    assertConverged(viewDir, fDir, d1Dir, d2Dir, "same-definition span")
+
+    def leftNow(groupBy: Seq[String]): DataFrame =
+      spark.read.parquet(fDir)
+        .join(spark.read.parquet(d1Dir).drop("pt"), Seq("k1"), "left")
+        .join(spark.read.parquet(d2Dir).drop("pt"), Seq("k2"), "left")
+        .groupBy(groupBy.map(col): _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(coalesce(col("m") * col("w1") * col("w2"), lit(0L)))
+            .as("mw"))
+        .select(groupBy.map(col) ++ Seq(col("mw"), col("n_rows")): _*)
+    // joinType flip on the same directory, nothing new in any log.
+    assert(StarJoinView.refresh(spark, fDir, dims, viewDir, Seq("id"),
+      Seq("g1", "g2"), measures, joinType = "left") === Seq(1L, -1L, -1L))
+    assert(cells(viewNow(viewDir)) === cells(leftNow(Seq("g1", "g2"))),
+      "an inner-seeded star refreshed as LEFT must re-seed")
+    // Different view dims on the same directory.
+    assert(StarJoinView.refresh(spark, fDir, dims, viewDir, Seq("id"),
+      Seq("g1"), measures, joinType = "left") === Seq(1L, -1L, -1L))
+    assert(cells(viewNow(viewDir)) === cells(leftNow(Seq("g1"))),
+      "a star refreshed with different view dims must re-seed")
+    // The old definition's registrations are the same names (same
+    // inputs), so exactly one per log remains.
+    assert(Consumers.list(spark, d1Dir).map(_.name) ===
+      Seq(StarJoinView.consumerName(viewDir, "d0")))
+  }
+
   private def refreshPart(fDir: String, d1Dir: String, d2Dir: String,
                           viewDir: String): Seq[Long] =
     StarJoinView.refreshPartitioned(spark, fDir,
