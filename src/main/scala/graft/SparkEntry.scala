@@ -160,15 +160,16 @@ object SparkEntry {
     // log-scale collapse + anti-join + union, no per-batch
     // re-execution — must reproduce the DuckDB-computed ENDPOINT state.
     "cdc_orders_replay" -> graft.runtime.ChangeLog.ordersChangeLogReplay _,
-    // Log-driven incremental view maintenance (ops/CdcView): the
-    // downstream aggregate is kept current by APPLYING the log's
-    // contribution delta — the base table is never re-read past the
-    // seed; oracle recomputes the endpoint view from scratch.
+    // Log-driven incremental view maintenance (ops/CdcStarView with no
+    // dims, applied by ops/CdcView): the downstream aggregate is kept
+    // current by APPLYING the log's contribution delta — the base table
+    // is never re-read past the seed; oracle recomputes the endpoint
+    // view from scratch.
     "cdc_view_orders_priority" ->
       graft.runtime.ChangeLog.ordersPriorityViewMaintained _,
-    // The PERSISTED form of the same view (runtime/MaterializedView):
-    // seeded before the history's batches, caught up purely from the
-    // log with an atomically-committed position, served as a scan.
+    // The PERSISTED form of the same view (runtime/StarJoinView with no
+    // dims): seeded before the history's batches, caught up purely from
+    // the log with an atomically-committed position, served as a scan.
     "cdc_mview_orders_priority" ->
       graft.runtime.ChangeLog.ordersPriorityViewPersisted _,
     // The NON-distributive twin: per-priority MIN/MAX (no signed fold

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * dimension tables, each on its own fact columns:
   * `V = SELECT dims, SUM(ms) FROM F ⋈ D1 ⋈ … ⋈ Dk GROUP BY dims`,
   * kept current from the tables' change logs without re-running the
-  * join. [[CdcView]] covers single-table group-bys; a join adds the
+  * join. A single-table group-by is the K = 0 case — the fact term
+  * alone: old images subtract, new images add. A join adds the
   * classic difficulty that a one-row change on one side can touch
   * MANY view rows through the join, and the classic answer is the
   * signed delta decomposition. A two-table view is the K = 1 case:
@@ -100,8 +101,9 @@ object CdcStarView {
   /** The per-group contribution delta of a star span. `fNet` is the
     * fact's net span (None = fact did not move), `fAtStart` the fact
     * AS OF the span start (lazy — only dim terms evaluate it, each
-    * semi-restricted to its own Δ-keys). At least one side must have
-    * moved. Apply with [[CdcView.applyDelta]]. */
+    * semi-restricted to its own Δ-keys; with no sides it is never
+    * run). At least one side must have moved. Apply with
+    * [[CdcView.applyDelta]]. */
   def starGroupDelta(fNet: Option[DataFrame], fKeys: Seq[String],
                      fAtStart: () => DataFrame, sides: Seq[Side],
                      dims: Seq[String],

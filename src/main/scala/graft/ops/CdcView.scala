@@ -6,24 +6,23 @@ import org.apache.spark.sql.functions._
 /** Incremental view maintenance driven by the CDC change log — the
   * consumer side of [[graft.runtime.ChangeLog]] taken to its point:
   * a downstream DISTRIBUTIVE group-by view (counts, sums) is kept
-  * current by APPLYING each batch's entries, never re-reading the
-  * base table. This is what the log exists for: at 100 TB the base
-  * recompute costs a full scan per refresh, while the log-driven
-  * update costs O(log entries + |view|) — the classic IVM result for
-  * self-maintainable aggregates, re-expressed on Spark frames.
+  * current by APPLYING each span's entries, never re-reading the
+  * base table. At 100 TB the base recompute costs a full scan per
+  * refresh, while the log-driven update costs O(log entries + |view|)
+  * — the classic IVM result for self-maintainable aggregates,
+  * re-expressed on Spark frames.
   *
-  * Contract: the view is `project(base).groupBy(dims).agg(
-  * count(1) as n_rows, sum(m) as m ...)` for row-local `project`
-  * (each base row contributes to exactly one group, independently of
-  * other rows — distributive). Every change-log entry then
-  * contributes ±1 row: the OLD image subtracts from its group, the
-  * NEW image adds to its group — a key whose dims changed moves
-  * between groups as (-old, +new), and a group whose count reaches 0
-  * leaves the view (it has no surviving base rows). Measures must be
-  * group-summable with exact arithmetic (longs / decimals — float
-  * sums would drift from a recompute by association order); the
-  * contract is ENFORCED, not advisory — [[requireExactMeasures]]
-  * fails loud at plan time on any other measure type.
+  * This object holds the pieces every view form shares. The signed
+  * group delta itself is [[CdcStarView.starGroupDelta]]: a
+  * single-table view is its star with no dims (the fact term alone —
+  * old images subtract, new images add, a key whose dims changed
+  * moves between groups as (-old, +new)); [[applyDelta]] folds it
+  * into the view and drops groups whose count reaches 0.
+  * [[touchedGroups]] scopes the NON-distributive refresh, and
+  * [[requireExactMeasures]] ENFORCES the measure contract: sums must
+  * be exact arithmetic (longs / decimals — float sums would drift
+  * from a recompute by association order) and fail loud at plan time
+  * otherwise.
   *
   * Net-vs-sequential equivalence: contributions are additive, so
   * applying the whole span's [[graft.runtime.ChangeLog.netDiff]] in
@@ -31,11 +30,9 @@ import org.apache.spark.sql.functions._
   * reverted changes telescope to zero (CdcViewSpec pins both paths
   * against the recompute).
   *
-  * Scale shape: [[groupDelta]] is two log-scale projections of the
-  * net frame plus one hash aggregate on the dims; [[applyDelta]] is
-  * ONE co-partitioned full-outer join of the view with the
-  * (dims-grained, tiny) delta. Nothing reads the base table and
-  * nothing collects. */
+  * Scale shape: [[applyDelta]] is ONE co-partitioned full-outer join
+  * of the view with the (dims-grained, tiny) delta. Nothing reads the
+  * base table and nothing collects. */
 object CdcView {
 
   /** Enforce the distributive contract instead of documenting it:
@@ -103,34 +100,10 @@ object CdcView {
         .select(dims.map(col): _*))
       .distinct()
 
-  /** The per-group contribution delta of a change-log span: for each
-    * group touched by the span, the signed change of `n_rows` and of
-    * every measure. `net` is a [[graft.runtime.ChangeLog.netDiff]]
-    * frame (or a single batch's entries — any set of diff rows with
-    * at most one row per key); `project` maps a base-shaped row to
-    * its dims + measure columns (row-local); `dims`/`measures` name
-    * `project`'s output columns. */
-  def groupDelta(net: DataFrame, keys: Seq[String],
-                 project: DataFrame => DataFrame,
-                 dims: Seq[String], measures: Seq[String]): DataFrame = {
-    requireExactMeasures(
-      project(image(net, keys, "o_", "added")).schema, measures)
-    def side(prefix: String, dropStatus: String, sign: Int): DataFrame =
-      project(image(net, keys, prefix, dropStatus))
-        .select(dims.map(col) ++
-          (measures.map(m => (col(m) * sign).as(m)) :+
-            lit(sign.toLong).as("n_rows")): _*)
-    // Old images subtract, new images add; a dims-move is (-old, +new).
-    side("o_", "added", -1)
-      .unionByName(side("n_", "removed", 1))
-      .groupBy(dims.map(col): _*)
-      .agg(sum(col("n_rows")).as("n_rows"),
-        measures.map(m => sum(col(m)).as(m)): _*)
-  }
-
-  /** Apply a [[groupDelta]] to the maintained view: one full-outer
-    * join on the dims, coalesce-add every measure and the row count,
-    * drop groups whose count reached zero (no surviving base rows).
+  /** Apply a signed group delta ([[CdcStarView.starGroupDelta]]) to
+    * the maintained view: one full-outer join on the dims,
+    * coalesce-add every measure and the row count, drop groups whose
+    * count reached zero (no surviving base rows).
     * The result is the view AFTER the span — CdcViewSpec proves it
     * equals the base recompute cell for cell. */
   def applyDelta(view: DataFrame, delta: DataFrame,

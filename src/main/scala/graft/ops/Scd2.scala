@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * iteration. At 100 TB the bill is O(base + log), the floor for a
   * full-history dimension build; an incremental variant would append
   * only new-span versions, the same delta argument as
-  * [[graft.runtime.MaterializedView]].
+  * [[graft.runtime.StarJoinView]].
   *
   * Granularity contract: history is exactly as fine as the LIVE log.
   * A [[graft.runtime.ChangeLog.checkpoint]] collapse folds old

@@ -446,7 +446,8 @@ object ChangeLog {
     *
     * Consumer safety is DERIVED, not trusted: the requested watermark
     * first clamps to the minimum REGISTERED consumer position
-    * ([[Consumers.minPosition]] — every [[MaterializedView]] refresh
+    * ([[Consumers.minPosition]] — every persisted view refresh,
+    * [[StarJoinView]] or [[MaterializedView.refreshByRecompute]],
     * registers itself; custom tails register via
     * [[Consumers.register]]). A laggard registered view therefore
     * BLOCKS the fold past its position — the collapse simply stops at
@@ -574,8 +575,8 @@ object ChangeLog {
     * always reached. This is why a mirror never needs the
     * [[Consumers]] collapse clamp: rewrites redeliver, deletions
     * prune, and the mirror re-converges — registration is for
-    * delta-APPLYING consumers ([[MaterializedView]]), whose updates
-    * don't commute. */
+    * delta-APPLYING consumers ([[StarJoinView]]), whose updates don't
+    * commute. */
   def mirrorBatch(tableDir: String, sinkDir: String)
                  (entries: DataFrame, epoch: Long): Unit = {
     val spark = entries.sparkSession
@@ -715,7 +716,8 @@ object ChangeLog {
     graft.sim.AnnIndex.ensure(table) {
       val fs = new Path(table)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq(table, logDir(table), mviewDir(table),
+      Seq(table, logDir(table), Consumers.dir(table), mviewDir(table),
+          mviewDir(table) + "_pos", mviewDir(table) + "_cfg",
           minmaxDir(table), distinctDir(table),
           scd2Dir(table), scd2Dir(table) + "_pos",
           scd2Dir(table) + "_buckets",
@@ -751,9 +753,7 @@ object ChangeLog {
       // Seed the PERSISTED priority view at state0 — before any batch
       // publishes — so the registered query's refresh must cross the
       // whole log ([[ordersPriorityViewPersisted]]).
-      MaterializedView.refresh(s, table, mviewDir(table),
-        Seq("o_orderkey"), priorityProject,
-        Seq("o_orderpriority"), Seq("cents"))
+      refreshPriorityView(s, table)
       // And the NON-distributive twin (min/max — recompute-refreshed),
       // seeded at the same pre-history position for the same reason.
       MaterializedView.refreshByRecompute(s, table, minmaxDir(table),
@@ -793,10 +793,20 @@ object ChangeLog {
     table + "_priority_distinct"
   private def scd2Dir(table: String): String = table + "_scd2_store"
 
-  /** Row-local projection both priority-view faces share. */
+  /** The priority views' one measure: integer cents. */
+  private val priorityMeasures: Seq[(String, Column)] =
+    Seq("cents" -> round(col("o_totalprice") * 100, 0).cast("long"))
+
+  /** Row-local projection of the recompute-refreshed priority views. */
   private def priorityProject(df: DataFrame): DataFrame =
-    df.select(col("o_orderpriority"),
-      round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
+    df.select(col("o_orderpriority") +:
+      priorityMeasures.map { case (n, e) => e.as(n) }: _*)
+
+  /** Seed or refresh the persisted priority view — the K = 0
+    * [[StarJoinView]] over the orders log. */
+  private def refreshPriorityView(s: SparkSession, table: String): Unit =
+    StarJoinView.refresh(s, table, Nil, mviewDir(table),
+      Seq("o_orderkey"), Seq("o_orderpriority"), priorityMeasures)
 
   /** The non-distributive aggregate of the min/max twin — legal here
     * because [[MaterializedView.refreshByRecompute]] RECOMPUTES
@@ -870,11 +880,12 @@ object ChangeLog {
   }
 
   /** Registered face #3: log-driven INCREMENTAL VIEW MAINTENANCE
-    * ([[graft.ops.CdcView]]) — a downstream per-priority revenue view
-    * seeded at state0 and brought to the endpoint by APPLYING the
-    * accumulated log's net contribution delta: old images subtract,
-    * new images add, priority moves transfer between groups. The base
-    * table is never re-read past the seed; the DuckDB oracle
+    * ([[graft.ops.CdcStarView.starGroupDelta]] with no dims, applied by
+    * [[graft.ops.CdcView.applyDelta]]) — a downstream per-priority
+    * revenue view seeded at state0 and brought to the endpoint by
+    * APPLYING the accumulated log's net contribution delta: old images
+    * subtract, new images add, priority moves transfer between groups.
+    * The base table is never re-read past the seed; the DuckDB oracle
     * recomputes the endpoint view from scratch, so every add / remove
     * / cross-group move must land exactly (integer-cents arithmetic —
     * float sums would drift from the recompute by association order). */
@@ -884,23 +895,21 @@ object ChangeLog {
     val log = readLog(s, table).getOrElse(
       sys.error(s"cdc_orders log missing under $table"))
     val keys = Seq("o_orderkey")
-    def project(df: DataFrame): DataFrame =
-      df.select(col("o_orderpriority"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
     val state0 = s.read.parquet(s"$dir/orders.parquet")
       .filter(col("o_orderdate") < ts("1997-07-01"))
-    val view0 = project(state0)
+    val view0 = priorityProject(state0)
       .groupBy(col("o_orderpriority"))
       .agg(sum(col("cents")).as("cents"), count(lit(1)).as("n_rows"))
     graft.ops.CdcView.applyDelta(view0,
-        graft.ops.CdcView.groupDelta(netDiff(log, keys), keys,
-          project, Seq("o_orderpriority"), Seq("cents")),
+        graft.ops.CdcStarView.starGroupDelta(Some(netDiff(log, keys)),
+          keys, () => state0, Nil, Seq("o_orderpriority"),
+          priorityMeasures),
         Seq("o_orderpriority"), Seq("cents"))
       .withColumnRenamed("cents", "sum_cents")
   }
 
-  /** Registered face #4: the PERSISTED view loop
-    * ([[MaterializedView]]) under the same oracle — the view was
+  /** Registered face #4: the PERSISTED view loop (the K = 0
+    * [[StarJoinView]]) under the same oracle — the view was
     * seeded at state0 (before any batch published), so this refresh
     * must catch up across the entire three-batch log, committing its
     * position atomically with the data; re-runs within the JVM are
@@ -909,9 +918,7 @@ object ChangeLog {
   def ordersPriorityViewPersisted(s: SparkSession, dir: String)
       : DataFrame = {
     val table = ensureOrdersHistory(s, dir)
-    MaterializedView.refresh(s, table, mviewDir(table),
-      Seq("o_orderkey"), priorityProject,
-      Seq("o_orderpriority"), Seq("cents"))
+    refreshPriorityView(s, table)
     s.read.parquet(mviewDir(table))
       .select(col("o_orderpriority"), col("cents").as("sum_cents"),
         col("n_rows"))
@@ -963,11 +970,15 @@ object ChangeLog {
       .select(col("o_orderpriority"), col("n_cust"), col("n_rows"))
   }
 
-  /** Row-local projection of the per-country silver view
-    * ([[sessionsCountryViewPersisted]]) — long measures only, the
-    * enforced [[graft.ops.CdcView]] contract. */
-  private def countryProject(df: DataFrame): DataFrame =
-    df.select(col("country"), col("n_events"), col("sum_value_cents"))
+  /** Seed or refresh the per-country silver view
+    * ([[sessionsCountryViewPersisted]]) — the K = 0 [[StarJoinView]]
+    * over the silver session log; long measures only, the enforced
+    * [[graft.ops.CdcView.requireExactMeasures]] contract. */
+  private def refreshCountryView(s: SparkSession, root: String): Unit =
+    StarJoinView.refresh(s, s"$root/silver_sessions", Nil,
+      s"$root/view_country", graft.silver.Sessionize.SessionKey,
+      Seq("country"),
+      Seq("n_events", "sum_value_cents").map(m => m -> col(m)))
 
   /** Build (once per JVM) the REFERENCE-SHAPED CDC fixture: the
     * harness events split into three deterministic date spans, folded
@@ -997,9 +1008,7 @@ object ChangeLog {
       Incremental.appendBatch(s, bronze,
         raw.filter(to_date(col("ts")) < lit(c1)), 1L)
       val w1 = update(None)
-      MaterializedView.refresh(s, silverDir, s"$root/view_country",
-        graft.silver.Sessionize.SessionKey, countryProject,
-        Seq("country"), Seq("n_events", "sum_value_cents"))
+      refreshCountryView(s, root)
       Incremental.appendBatch(s, bronze,
         raw.filter(to_date(col("ts")) >= lit(c1) &&
           to_date(col("ts")) < lit(c2)), 2L)
@@ -1023,9 +1032,7 @@ object ChangeLog {
   def sessionsCountryViewPersisted(s: SparkSession, dir: String)
       : DataFrame = {
     val root = ensureSilverChain(s, dir)
-    MaterializedView.refresh(s, s"$root/silver_sessions",
-      s"$root/view_country", graft.silver.Sessionize.SessionKey,
-      countryProject, Seq("country"), Seq("n_events", "sum_value_cents"))
+    refreshCountryView(s, root)
     s.read.parquet(s"$root/view_country")
       .select(col("country"), col("n_events"),
         col("sum_value_cents"), col("n_rows"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Change-log CONSUMER REGISTRY — the collapse boundary derived from
   * the consumers instead of trusted from the caller. Before this,
   * [[ChangeLog.checkpoint]] folded wherever it was told: a watermark
-  * computed without knowing about some laggard [[MaterializedView]]
+  * computed without knowing about some laggard persisted view
   * silently collapsed the entries the view still owed a read, and the
   * view's next refresh failed loud with "re-seed from a snapshot" —
   * correct, but a full-recompute bill an operational mistake should
@@ -21,8 +21,9 @@ import org.apache.spark.sql.SparkSession
   * root). [[ChangeLog.checkpoint]] then clamps every requested fold
   * to `min` over registered positions, so a laggard BLOCKS the
   * collapse at its position and the fold proceeds exactly as far as
-  * the slowest consumer allows. [[MaterializedView.refresh]]
-  * registers automatically after each committed refresh; a custom
+  * the slowest consumer allows. Every persisted view
+  * ([[StarJoinView]], [[MaterializedView.refreshByRecompute]])
+  * registers automatically on each refresh; a custom
   * tail (a [[ChangeLog.stream]] consumer, a downstream job on
   * [[ChangeLog.readSince]]) calls [[register]] itself after each
   * applied span — the position it registers is the watermark it
@@ -64,8 +65,8 @@ object Consumers {
     * may be DELETED outright by [[Forget]]/[[Retention]] (a cache
     * holding purged rows must not outlive the purge, and deletion is
     * always safe where recompute is always possible). Blocking
-    * consumers ([[MaterializedView]], [[Scd2Store]]) get the gentler
-    * [[MaterializedView.invalidate]] marker instead. */
+    * consumers ([[StarJoinView]], [[MaterializedView]], [[Scd2Store]])
+    * get the gentler [[MaterializedView.invalidate]] marker instead. */
   case class Registration(name: String, position: Long,
                           viewDir: Option[String],
                           refreshedAt: Long = 0L,

@@ -6,49 +6,30 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A PERSISTED distributive group-by view over a change-logged table,
-  * refreshed from the log ([[graft.ops.CdcView]]) — the operational
-  * form of log-driven incremental view maintenance: seed once from
-  * the base, then every [[refresh]] tails the log with
-  * [[ChangeLog.readSince]] and applies the span's net contribution
-  * delta. At 100 TB the refresh bill is O(new log entries + |view|);
-  * the base table is scanned exactly once, at seed time.
+/** The persisted view over a change-logged table whose aggregates no
+  * signed fold can maintain ([[refreshByRecompute]]: min/max, exact
+  * distinct counts), plus the per-view pieces every persisted consumer
+  * of a log shares: the registry name ([[consumerName]]) and the
+  * compliance invalidation marker ([[invalidate]]). Distributive
+  * (count/sum) views, single-table ones included, are maintained from
+  * signed deltas by [[StarJoinView]] — a single-table view is its
+  * star with no dims.
   *
-  * Exactly-once without a transaction log: an IVM delta is NOT
-  * idempotent (applying a span twice double-counts — unlike
-  * [[ChangeLog.replay]], whose images converge), so the consumer
-  * position must commit ATOMICALLY with the data. The view rides a
-  * constant `_as_of` column through [[MergeUpsert.replaceAll]]'s
-  * staged-swap: the table is a single hive partition, so the swap is
-  * one directory rename — data and position are the same commit, and
-  * a crash at any point leaves either the old view (old position,
-  * span re-applies once) or the new view (new position, span never
-  * re-applies). The recovery sweep heals a between-renames crash like
-  * every other table here.
-  *
-  * That single-partition swap is right for metadata-scale views
-  * (priority classes, countries, dates) and WRONG past them: a
-  * user-grain view at 100 TB would rewrite the whole view to apply a
-  * kilobyte of delta. [[refreshPartitioned]] is the large-view form —
-  * the view partitions on one of its dims, a refresh rewrites ONLY
-  * the partitions the delta touches, and exactly-once is carried by a
-  * PER-PARTITION `_as_of` plus a position file committed last (the
-  * crash-window analysis lives on that method).
-  *
-  * Consumer registration: every committed refresh (either form)
-  * registers the view's position in the log's [[Consumers]] registry,
-  * so [[ChangeLog.checkpoint]] cannot collapse entries the view still
-  * owes a read — the "collapsed past a laggard view ⇒ forced full
-  * re-seed" operational loss is structurally impossible for
-  * registered views.
+  * The recompute form rides a constant `_as_of` column through
+  * [[MergeUpsert.replaceAll]]'s staged swap of one hive partition, so
+  * data and position commit in one directory rename, and registers
+  * that position in the log's [[Consumers]] registry after each
+  * committed refresh, so [[ChangeLog.checkpoint]] cannot collapse
+  * entries the view still owes a read.
   *
   * Compliance invalidation: [[invalidate]] (written by
-  * [[Forget.forgetUser]] for every registered view of a log it
-  * purges) drops a marker the next refresh honors by DISCARDING the
-  * view state and re-seeding from the (already purged) base — without
-  * it the view would keep serving aggregates computed from row images
-  * that no longer exist. The marker is an underscore-prefixed file,
-  * invisible to every Spark read of the view.
+  * [[Forget.forgetUser]] and [[Retention]] for every registered view
+  * of a log they purge) drops a marker the view's next refresh
+  * (either loop) honors by DISCARDING the view state and re-seeding
+  * from the (already purged) base — without it the view would keep
+  * serving aggregates computed from row images that no longer exist.
+  * The marker is an underscore-prefixed file, invisible to every
+  * Spark read of the view.
   *
   * Lifecycle edges, all loud or convergent:
   *  - a refresh with no new entries is a no-op (the stored position
@@ -56,7 +37,7 @@ import org.apache.spark.sql.functions._
   *  - a log COLLAPSED past the stored position fails loud inside
   *    `readSince` (re-seed the view) — unreachable while the view is
   *    registered, the point of [[Consumers]];
-  *  - a view whose every group vanished deletes its partition(s); the
+  *  - a view whose every group vanished deletes its partition; the
   *    next refresh finds no state and re-seeds from the base —
   *    correct, at recompute cost;
   *  - single-writer per view, and refreshes must not race the
@@ -117,18 +98,12 @@ object MaterializedView {
   def isInvalid(spark: SparkSession, viewDir: String): Boolean =
     fsOf(spark, viewDir).exists(new Path(viewDir, InvalidMarker))
 
-  /** Honor a pending invalidation: drop the view state (and the
-    * partitioned form's position file) so the caller's refresh takes
-    * the seed path. Crash-safe: deleting the state deletes the marker
-    * with it, and a crash between the two deletes leaves either the
-    * marker (retry re-deletes) or a missing view (the seed path). */
+  /** Honor a pending invalidation: drop the view state so the
+    * caller's refresh takes the seed path. Deleting the state deletes
+    * the marker with it — one delete, nothing to tear. */
   private def clearIfInvalid(spark: SparkSession, viewDir: String): Unit =
-    if (isInvalid(spark, viewDir)) {
-      val fs = fsOf(spark, viewDir)
-      fs.delete(new Path(viewDir), true)
-      fs.delete(new Path(posPath(viewDir)), false)
-      fs.delete(new Path(swapMarkerPath(viewDir)), false)
-    }
+    if (isInvalid(spark, viewDir))
+      fsOf(spark, viewDir).delete(new Path(viewDir), true)
 
   /** The log position the persisted view is current AS OF, if the
     * view holds state. ([[ChangeLog.checkpoint]] no longer needs this
@@ -141,242 +116,6 @@ object MaterializedView {
         .agg(max(col(AsOfCol))).head().getLong(0))
     else None
   }
-
-  /** Seed (first call) or incrementally refresh the view at `viewDir`
-    * over the logged table at `tableDir`. `project` maps a base row to
-    * its dims + measures (row-local, distributive — the
-    * [[CdcView]] contract, measure types enforced); `keys` is the
-    * TABLE's row key. Returns the log position the view is now current
-    * as of, after registering it in the log's consumer registry. */
-  def refresh(spark: SparkSession, tableDir: String, viewDir: String,
-              keys: Seq[String], project: DataFrame => DataFrame,
-              dims: Seq[String], measures: Seq[String]): Long = {
-    clearIfInvalid(spark, viewDir)
-    val logHw = Incremental
-      .highWatermark(spark, ChangeLog.logDir(tableDir)).getOrElse(-1L)
-    def persist(v: DataFrame): Unit =
-      MergeUpsert.replaceAll(spark, viewDir,
-        v.withColumn(PartCol, lit("all")), partitionCol = PartCol)
-    def registered(pos: Long): Long = {
-      Consumers.register(spark, tableDir, consumerName(viewDir), pos,
-        viewDir = Some(viewDir))
-      pos
-    }
-    asOf(spark, viewDir) match {
-      case None =>
-        // Seed: one full aggregate of the base, stamped at the log's
-        // CURRENT head — every logged effect is already in the base,
-        // so the next refresh starts strictly after it.
-        val projected = project(
-          spark.read.option("mergeSchema", "true").parquet(tableDir))
-        CdcView.requireExactMeasures(projected.schema, measures)
-        val seed = projected
-          .groupBy(dims.map(col): _*)
-          .agg(count(lit(1)).as("n_rows"),
-            measures.map(m => sum(col(m)).as(m)): _*)
-          .select(dims.map(col) ++ measures.map(col) :+
-            col("n_rows"): _*)
-        persist(seed.withColumn(AsOfCol, lit(logHw)))
-        registered(logHw)
-      case Some(pos) if pos >= logHw => registered(pos) // nothing new
-      case Some(pos) =>
-        val span = ChangeLog.readSince(spark, tableDir, Some(pos))
-          .getOrElse(return registered(pos)) // log holds no entries
-        val view = spark.read.parquet(viewDir)
-          .drop(AsOfCol).drop(PartCol)
-        val next = CdcView.applyDelta(view,
-          CdcView.groupDelta(ChangeLog.netDiff(span, keys), keys,
-            project, dims, measures),
-          dims, measures)
-        persist(next.withColumn(AsOfCol, lit(logHw)))
-        registered(logHw)
-    }
-  }
-
-  /** The partitioned form's position file — a SIBLING of the view
-    * (never inside it: the seed's initial `mode("overwrite")` write
-    * clears the view root). */
-  private def posPath(viewDir: String): String =
-    viewDir.stripSuffix("/") + "_pos"
-
-  /** Large-view refresh: the view is hive-partitioned on `partDim`
-    * (one of its dims — every group lives in exactly one partition),
-    * and a refresh rewrites ONLY the partitions the delta touches —
-    * O(log entries + touched partitions), while the single-partition
-    * [[refresh]] pays O(|view|) per refresh regardless of delta size.
-    *
-    * Exactly-once here cannot ride one directory swap (the touched
-    * partitions swap one rename at a time), so the commit is split,
-    * honestly, into two durable pieces:
-    *
-    *  - every row carries `_as_of` — the position ITS PARTITION has
-    *    applied. All partitions staged by one refresh stamp the same
-    *    target position, but a crash mid-swap leaves a MIX: some
-    *    partitions at the new position, stragglers at the old.
-    *  - a POSITION FILE (atomic rename, committed LAST) records the
-    *    last FULLY-applied position `pos`: every entry ≤ pos is
-    *    applied to every partition.
-    *
-    * Recovery is then local arithmetic, not a re-seed: a refresh
-    * computes the span since `pos`, derives the touched partitions
-    * from the span's delta, and for each touched partition applies
-    * the span since max(partition `_as_of`, pos) — a straggler that
-    * already absorbed part of the span is topped up from ITS position
-    * and never double-applies; a partition at the head is skipped. An
-    * untouched partition's stale `_as_of` is harmless by induction:
-    * `pos` committing means every entry ≤ pos reached every
-    * partition, so catch-up spans never need to start below `pos` —
-    * which also keeps every `readSince` here at-or-past the collapse
-    * boundary the registry protects.
-    *
-    * Crash windows, exhaustively: (seed written, position file not)
-    * → the file's absence with data present can ONLY be a crashed
-    * seed, and the seed stamped every partition with one position —
-    * recover it as min(`_as_of`) and continue; (some partitions
-    * swapped, position file not) → stragglers, the per-partition
-    * top-up above; (all swapped, file not) → every touched partition
-    * is at the head, each top-up span is empty, the rewrite is an
-    * idempotent no-op and the file commits on the retry. The position
-    * file never runs AHEAD of the data (it is written last), so the
-    * registered consumer position is always conservative. One window
-    * needs more than the delta's own touched set: a partition swapped
-    * by a crashed refresh whose applied sub-span NETS AWAY over the
-    * full committed span is absent from the delta yet owes the
-    * complement — the swap-intent marker (see [[swapMarkerPath]])
-    * flags that a swap may have outrun the position file, and the
-    * next refresh then also repairs every partition stamped past the
-    * committed position, from its own stamp. */
-  def refreshPartitioned(spark: SparkSession, tableDir: String,
-                         viewDir: String, keys: Seq[String],
-                         project: DataFrame => DataFrame,
-                         dims: Seq[String], measures: Seq[String],
-                         partDim: String): Long = {
-    require(dims.contains(partDim),
-      s"partDim '$partDim' must be one of the view dims " +
-        s"${dims.mkString("[", ", ", "]")} — a group must live in " +
-        "exactly one partition for partition-scoped rewrites to be " +
-        "complete")
-    clearIfInvalid(spark, viewDir)
-    val logHw = Incremental
-      .highWatermark(spark, ChangeLog.logDir(tableDir)).getOrElse(-1L)
-    def registered(pos: Long): Long = {
-      Consumers.register(spark, tableDir, consumerName(viewDir), pos,
-        viewDir = Some(viewDir))
-      pos
-    }
-    val viewPath = new Path(viewDir)
-    val fs = viewPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasState =
-      fs.exists(viewPath) && MergeUpsert.sweepAndHasData(fs, viewPath)
-    if (!hasState) {
-      val projected = project(
-        spark.read.option("mergeSchema", "true").parquet(tableDir))
-      CdcView.requireExactMeasures(projected.schema, measures)
-      val seed = projected
-        .groupBy(dims.map(col): _*)
-        .agg(count(lit(1)).as("n_rows"),
-          measures.map(m => sum(col(m)).as(m)): _*)
-        .select(dims.map(col) ++ measures.map(col) :+ col("n_rows"): _*)
-      MergeUpsert.replaceAll(spark, viewDir,
-        seed.withColumn(AsOfCol, lit(logHw)), partitionCol = partDim)
-      Incremental.saveWatermark(spark, posPath(viewDir), logHw)
-      return registered(logHw)
-    }
-    val pos = Incremental.loadWatermark(spark, posPath(viewDir))
-      .getOrElse {
-        // Data without a position file ⇔ a crashed seed (every later
-        // refresh only ever advances an existing file): the seed
-        // stamped one position on every row — recover it.
-        val p = spark.read.parquet(viewDir)
-          .agg(min(col(AsOfCol))).head().getLong(0)
-        Incremental.saveWatermark(spark, posPath(viewDir), p)
-        p
-      }
-    if (pos >= logHw) { // nothing new
-      // A marker here is a leftover (stamps never exceed a committed
-      // at-the-head position — the ahead-scan would find nothing);
-      // clear it so later data-bearing refreshes skip the repair scan.
-      val m = new Path(swapMarkerPath(viewDir))
-      if (fs.exists(m)) fs.delete(m, false)
-      return registered(pos)
-    }
-    val span = ChangeLog.readSince(spark, tableDir, Some(pos))
-      .getOrElse(return registered(pos)) // log holds no entries at all
-    // The span's group delta names the touched partitions; everything
-    // below is metadata-scale (touched partition values, straggler
-    // position groups), never data-scale.
-    val delta = CdcView.groupDelta(ChangeLog.netDiff(span, keys), keys,
-      project, dims, measures).localCheckpoint()
-    val deltaTouched = delta.select(col(partDim)).distinct()
-      .collect().map(_.get(0)).toIndexedSeq
-    // Crash-window completion: a partition swapped by a CRASHED
-    // refresh is stamped AHEAD of the committed position — and if its
-    // applied sub-span nets away over the full committed span (a key
-    // added in the crashed span, removed after), the delta never
-    // names it, yet it still owes the complement. The swap-intent
-    // marker (created before any rename, deleted after the position
-    // file commits) gates the repair scan — steady state pays one
-    // fs.exists; when set, partitions stamped past `pos` join the
-    // straggler top-ups and heal from their OWN positions.
-    val marker = new Path(swapMarkerPath(viewDir))
-    val ahead: IndexedSeq[Any] =
-      if (!fs.exists(marker)) IndexedSeq.empty
-      else spark.read.parquet(viewDir)
-        .groupBy(col(partDim)).agg(max(col(AsOfCol)).as("_p"))
-        .filter(col("_p") > pos)
-        .select(col(partDim)).collect().map(_.get(0)).toIndexedSeq
-    val touched = (deltaTouched ++ ahead).distinct
-    if (touched.isEmpty) {
-      Incremental.saveWatermark(spark, posPath(viewDir), logHw)
-      fs.delete(marker, false)
-      return registered(logHw)
-    }
-    val viewCur = spark.read.parquet(viewDir)
-      .filter(col(partDim).isin(touched: _*))
-    // Straggler detection: each partition's applied position, clamped
-    // to `pos` from below (entries ≤ pos reached every partition —
-    // the position-file invariant).
-    val partPos: Map[Any, Long] = viewCur
-      .groupBy(col(partDim)).agg(max(col(AsOfCol)).as("p"))
-      .collect().map(r => r.get(0) -> math.max(r.getLong(1), pos)).toMap
-    val groups = touched.groupBy(v => partPos.getOrElse(v, pos))
-    val staged = groups.toSeq.flatMap { case (a, parts) =>
-      if (a >= logHw) None // already at the head — skip, don't rewrite
-      else {
-        val deltaA =
-          if (a == pos) delta.filter(col(partDim).isin(parts: _*))
-          else CdcView.groupDelta(
-            ChangeLog.netDiff(
-              ChangeLog.readSince(spark, tableDir, Some(a)).get, keys),
-            keys, project, dims, measures)
-            .filter(col(partDim).isin(parts: _*))
-        val viewPart = viewCur.filter(col(partDim).isin(parts: _*))
-          .drop(AsOfCol)
-        Some((parts,
-          CdcView.applyDelta(viewPart, deltaA, dims, measures)
-            .withColumn(AsOfCol, lit(logHw))))
-      }
-    }
-    if (staged.nonEmpty) {
-      // Marker BEFORE the first rename, deleted after the position
-      // file commits — a crash in between leaves it set for the
-      // repair scan above.
-      fs.create(marker, true).close()
-      val stage = staged.map(_._2).reduce(_.unionByName(_))
-      MergeUpsert.replacePartitions(spark, viewDir, stage,
-        staged.flatMap(_._1), partitionCol = partDim)
-    }
-    Incremental.saveWatermark(spark, posPath(viewDir), logHw)
-    fs.delete(marker, false)
-    registered(logHw)
-  }
-
-  /** Swap-intent marker (sibling of the view, like the position
-    * file). Present ⇔ a partition swap may have started without its
-    * position-file commit — the next refresh then also scans for
-    * partitions stamped past the committed position. */
-  private def swapMarkerPath(viewDir: String): String =
-    viewDir.stripSuffix("/") + "_swapping"
 
   /** The NON-distributive form: a persisted view whose aggregates no
     * signed fold can maintain (min/max, exact percentiles, top-k —
@@ -392,9 +131,9 @@ object MaterializedView {
     * sends min/max callers to.
     *
     * `aggregate` maps the PROJECTED frame (dims + value columns, the
-    * same row-local `project` contract as [[refresh]]) to one row per
-    * dims group, dims columns included — any aggregate is legal here
-    * because the refresh recomputes rather than folds.
+    * row-local `project` output) to one row per dims group, dims
+    * columns included — any aggregate is legal here because the
+    * refresh recomputes rather than folds.
     *
     * The 100 TB bill is O(log + touched groups' base rows) — but the
     * base read prunes only if the engine can PUSH the touched-group
@@ -407,10 +146,11 @@ object MaterializedView {
     * `pruneDim` the recompute is a full scan filtered by the
     * semi-join — correct, and honest about costing a scan.
     *
-    * Unlike the signed-fold forms, this refresh is IDEMPOTENT (the
-    * recompute converges from the current base), so the atomic
-    * `_as_of` commit is needed only to avoid wasted work, not for
-    * correctness — a crash anywhere retries to the same answer. */
+    * Unlike the signed-fold loop ([[StarJoinView]]), this refresh is
+    * IDEMPOTENT (the recompute converges from the current base), so
+    * the atomic `_as_of` commit is needed only to avoid wasted work,
+    * not for correctness — a crash anywhere retries to the same
+    * answer. */
   def refreshByRecompute(spark: SparkSession, tableDir: String,
                          viewDir: String, keys: Seq[String],
                          project: DataFrame => DataFrame,

@@ -59,7 +59,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * data; last rename wins); the single-writer-per-name discipline of
   * every maintenance op here applies.
   *
-  * What this is NOT: an incremental view ([[MaterializedView]]
+  * What this is NOT: an incremental view ([[StarJoinView]]
   * applies log deltas; this recomputes from scratch on any change) —
   * the right tool when the query isn't log-maintainable or the
   * inputs aren't change-logged, and the wrong one when a 100 TB

@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * dimension's change log — the operational loop over
   * [[graft.ops.CdcStarView]], which carries the decomposition and its
   * telescoping proof. A two-table join view is the K = 1 star: one
-  * [[DimSpec]]. [[MaterializedView]] holds ONE log position; a join
-  * view must hold a position in EACH log and commit them atomically
-  * with the data, or a crash leaves state that double-applies one
-  * side's span. Reference analogue: the one gold→gold dependency —
+  * [[DimSpec]]; a single-table group-by view is the K = 0 star: no
+  * dims, its vector the fact position alone. A view must hold a
+  * position in EACH log and commit them atomically with the data, or
+  * a crash leaves state that double-applies one side's span.
+  * Reference analogue: the one gold→gold dependency —
   * the webtoon job reading the episode gold
   * (`gold_webtoon_daily_metrics.py:74-77`), maintained in the loop by
   * [[graft.streaming.SilverLoop.refreshGoldJoinView]].
@@ -32,10 +33,11 @@ import org.apache.spark.sql.functions._
   * commit in ONE rename — every crash window leaves either the old
   * vector (the spans re-apply once, correctly) or the new one (they
   * never re-apply); a torn vector is structurally unreachable. The
-  * sibling `_pos` vector file (`p0,p1,…`) the single-slot form also
-  * writes is not the commit — the data swap is — it is the resolution
-  * target the pointer registrations read; it only ever lags the data,
-  * which resolves conservatively.
+  * sibling `_pos` vector file (`p0,p1,…`; at K = 0 one number, the
+  * text [[Incremental.saveWatermark]] writes) the single-slot form
+  * also writes is not the commit — the data swap is — it is the
+  * resolution target the pointer registrations read; it only ever
+  * lags the data, which resolves conservatively.
   *
   * Every log gets a registered consumer (`sjview-f-*` /
   * `sjview-d<i>-*`, each carrying the view dir), so no log's
@@ -55,6 +57,16 @@ import org.apache.spark.sql.functions._
   * seeded it, so any mismatch — including a missing file — drops the
   * state and re-seeds: one loud O(base join) bill instead of a silent
   * wrong answer or a mixed-layout discovery error.
+  *
+  * Upgrade path, not a migration: state written by an earlier loop
+  * never matches a signature here (single-table views stamped
+  * `_as_of`, kept no `_cfg` and registered `mview-*` entries holding
+  * their position directly; pair views committed a pair-shaped
+  * `_cfg` under `jview-*` pointers), so its first refresh here takes
+  * that drop-and-re-seed path. The drop also retires every
+  * registration on the input logs that carries the view dir under a
+  * name this definition does not register — the old
+  * `mview-*`/`jview-*` entries included.
   *
   * Ordering hazard, stated: every head is read BEFORE its table —
   * under the single-writer-per-table discipline every maintenance op
@@ -114,10 +126,11 @@ object StarJoinView {
     * would probe the wrong side. Fail loud with the workaround
     * instead of an opaque unresolved-column error mid-join. Checked
     * when a seed commits the config signature, which pins the join
-    * keys from then on — the steady path pays no schema read for it. */
+    * keys from then on — the steady path pays no schema read for it,
+    * and a star with no dims none at all. */
   private def requireStarShape(spark: SparkSession, factDir: String,
                                dims: Seq[DimSpec]): Unit = {
-    val factCols = spark.read.option("mergeSchema", "true")
+    lazy val factCols = spark.read.option("mergeSchema", "true")
       .parquet(factDir).schema.fieldNames.toSet
     dims.zipWithIndex.foreach { case (d, i) =>
       val missing = d.joinKeys.filterNot(factCols.contains)
@@ -164,8 +177,6 @@ object StarJoinView {
                            measures: Seq[(String, Column)],
                            joinType: String,
                            fCols: Option[Seq[String]], layout: String) {
-    require(dims.nonEmpty, "a star needs at least one dimension — " +
-      "use MaterializedView for a single-table view")
     require(joinType == "inner" || joinType == "left",
       s"joinType '$joinType' — this loop maintains inner and chained " +
         "left outer star views")
@@ -277,13 +288,14 @@ object StarJoinView {
     /** Seed: the one full star join, stamped at every head and written
       * by `write`, then the vector file and the config signature. The
       * left seed folds measure NULLs to 0 (sum(coalesce)) so it agrees
-      * cell-for-cell with the delta path's contract. Every pointer is
-      * registered before any work — a fold arriving mid-seed already
-      * sees all K+1 sides, resolved conservatively at −1 until the
-      * vector file commits. */
+      * cell-for-cell with the delta path's contract. Both shape checks
+      * read only schemas and run first, so a refused definition
+      * registers nothing; every pointer is then registered before any
+      * data work — a fold arriving mid-seed already sees all K+1
+      * sides, resolved conservatively at −1 until the vector file
+      * commits. */
     def seed(heads: Seq[Long])(write: DataFrame => Unit): Seq[Long] = {
       requireStarShape(spark, factDir, dims)
-      registered(heads)
       val joined = dims.foldLeft(
         projectPlain(read(factDir), fKeys, allJoinKeys, fCols)) {
         (acc, d) => acc.join(
@@ -299,6 +311,7 @@ object StarJoinView {
         .select(viewDims.map(col) ++ names.map(col) :+
           col("n_rows"): _*)
       CdcView.requireExactMeasures(seed.schema, names)
+      registered(heads)
       write(stamp(seed, heads))
       saveVec(heads)
       writeText(cfgPath, cfg)
@@ -416,12 +429,13 @@ object StarJoinView {
     }
   }
 
-  /** Large-view refresh — [[MaterializedView.refreshPartitioned]]'s
-    * split commit with the position VECTOR where the scalar rode. The
-    * view is hive-partitioned on `partDim` (one of its dims — every
-    * group in exactly one partition) and a refresh rewrites ONLY the
-    * partitions the span delta touches: O(spans + touched partitions),
-    * where [[refresh]] pays O(|view|) per refresh.
+  /** Large-view refresh. The view is hive-partitioned on `partDim`
+    * (one of its dims — every group in exactly one partition) and a
+    * refresh rewrites ONLY the partitions the span delta touches:
+    * O(spans + touched partitions), where [[refresh]] pays O(|view|)
+    * per refresh. Exactly-once cannot ride one directory swap here
+    * (the touched partitions swap one rename at a time), so the
+    * commit is split into two durable pieces:
     *
     *  - every row carries the vector ITS partition has applied (all
     *    partitions staged by one refresh stamp the same target vector;

@@ -1,7 +1,7 @@
 package graft
 
-import graft.ops.CdcView
-import graft.runtime.ChangeLog
+import graft.ops.{CdcStarView, CdcView}
+import graft.runtime.{ChangeLog, StarJoinView}
 import graft.silver.MergeUpsert
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -28,6 +28,8 @@ class CdcViewSpec extends SparkSpec {
 
   private def project(d: DataFrame): DataFrame =
     d.select(col("grp"), col("m"))
+
+  private val measures = Seq("m" -> col("m"))
 
   private def recompute(d: DataFrame): DataFrame =
     project(d).groupBy(col("grp"))
@@ -67,8 +69,8 @@ class CdcViewSpec extends SparkSpec {
 
     // One-shot: the whole span's net delta applied once.
     val oneShot = CdcView.applyDelta(view0,
-      CdcView.groupDelta(ChangeLog.netDiff(log, Seq("id")), Seq("id"),
-        project, Seq("grp"), Seq("m")),
+      CdcStarView.starGroupDelta(Some(ChangeLog.netDiff(log, Seq("id"))),
+        Seq("id"), () => state0, Nil, Seq("grp"), measures),
       Seq("grp"), Seq("m"))
     assert(cells(oneShot) === cells(expected), "one-shot net apply")
 
@@ -76,8 +78,9 @@ class CdcViewSpec extends SparkSpec {
     // entry set is already one-row-per-key, so it IS a valid net).
     val sequential = (1 to 3).foldLeft(view0) { (v, i) =>
       CdcView.applyDelta(v,
-        CdcView.groupDelta(log.filter(col("batch_id") === i), Seq("id"),
-          project, Seq("grp"), Seq("m")),
+        CdcStarView.starGroupDelta(
+          Some(log.filter(col("batch_id") === i)), Seq("id"),
+          () => (state0 +: states)(i - 1), Nil, Seq("grp"), measures),
         Seq("grp"), Seq("m")).localCheckpoint()
     }
     assert(cells(sequential) === cells(expected), "sequential apply")
@@ -95,16 +98,15 @@ class CdcViewSpec extends SparkSpec {
 
   test("persisted materialized view: seed once, refresh from the log " +
       "with an atomically-committed position, loud past a collapse") {
-    import graft.runtime.MaterializedView
     val root = tmpDir("mview")
     val dir = s"$root/t"
     def land(rows: (Long, Long, String)*): DataFrame =
       df(rows: _*).withColumn("pt", lit("all"))
     def viewOf(viewDir: String): DataFrame =
-      spark.read.parquet(viewDir).drop("_as_of", "gv_pt")
+      spark.read.parquet(viewDir).drop("_as_of_f", "gv_pt")
     def doRefresh(viewDir: String): Long =
-      MaterializedView.refresh(spark, dir, viewDir, Seq("id"),
-        project, Seq("grp"), Seq("m"))
+      StarJoinView.refresh(spark, dir, Nil, viewDir, Seq("id"),
+        Seq("grp"), measures).head
 
     MergeUpsert.replaceAll(spark, dir,
       land((1L, 10L, "g1"), (2L, 20L, "g2")), partitionCol = "pt")
@@ -136,7 +138,8 @@ class CdcViewSpec extends SparkSpec {
     // job, not luck).
     assert(doRefresh(s"$root/v2") === 3L)
     assert(cells(viewOf(s"$root/v2")) === cells(recompute(s3)))
-    assert(MaterializedView.asOf(spark, s"$root/v2").contains(3L))
+    assert(StarJoinView.positions(spark, s"$root/v2", 0).map(_.head)
+      .contains(3L))
 
     // Every refresh REGISTERED its view, so "collapse past a laggard"
     // is no longer possible at all: v3 (position 1) clamps the fold.
@@ -148,7 +151,7 @@ class CdcViewSpec extends SparkSpec {
     // then does the fold proceed, and the abandoned view's refresh
     // fails loud rather than silently double-applying.
     graft.runtime.Consumers.unregister(spark, dir,
-      MaterializedView.consumerName(s"$root/v3"))
+      StarJoinView.consumerName(s"$root/v3", "f"))
     assert(ChangeLog.checkpoint(spark, dir, Seq("id"), 3L))
     assert(doRefresh(s"$root/v2") === 3L) // at the boundary: fine
     intercept[IllegalArgumentException] { doRefresh(s"$root/v3") }

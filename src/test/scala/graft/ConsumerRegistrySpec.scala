@@ -1,7 +1,8 @@
 package graft
 
-import graft.ops.CdcView
-import graft.runtime.{ChangeLog, Consumers, Incremental, MaterializedView}
+import graft.ops.CdcStarView
+import graft.runtime.{ChangeLog, Consumers, Incremental, MaterializedView,
+  StarJoinView}
 import graft.silver.MergeUpsert
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -13,17 +14,18 @@ import org.apache.spark.sql.types._
   *    actual consumer positions — a laggard registered consumer BLOCKS
   *    [[ChangeLog.checkpoint]] at its position, and the fold proceeds
   *    once it catches up;
-  *  - [[MaterializedView.refresh]] registers itself, so retention can
+  *  - [[StarJoinView.refresh]] registers itself, so retention can
   *    never outrun a persisted view;
   *  - [[ChangeLog.mirrorBatch]] keeps an exactly-once mirror of the
   *    log across re-swapped (retried) partitions, redelivered empties
   *    and collapse rewrites — the consumer-side discipline `stream`'s
   *    at-least-once caveats demand;
-  *  - [[MaterializedView.refreshPartitioned]] rewrites ONLY the
-  *    partitions a span touches, with per-partition `_as_of` +
+  *  - [[StarJoinView.refreshPartitioned]] rewrites ONLY the
+  *    partitions a span touches, with per-partition `_as_of_f` +
   *    last-committed position file closing every crash window;
-  *  - [[CdcView.requireExactMeasures]] fails loud on float measures
-  *    instead of silently drifting. */
+  *  - [[graft.ops.CdcView.requireExactMeasures]] fails loud on float
+  *    measures instead of silently drifting — and a refused definition
+  *    registers nothing. */
 class ConsumerRegistrySpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -178,7 +180,7 @@ class ConsumerRegistrySpec extends SparkSpec {
       "observer (cache) state must be deleted by the sweep")
   }
 
-  test("MaterializedView.refresh registers itself: retention cannot " +
+  test("a single-table view registers itself: retention cannot " +
       "outrun the view, and it refreshes cleanly across a collapse") {
     val dir = tmpDir("reg-mview") + "/t"
     buildHistory(dir)
@@ -189,12 +191,12 @@ class ConsumerRegistrySpec extends SparkSpec {
       .groupBy(col("grp")).agg(sum(col("cents")).as("cents"),
         count(lit(1)).as("n_rows"))
 
-    val pos = MaterializedView.refresh(spark, dir, viewDir, Seq("id"),
-      project, Seq("grp"), Seq("cents"))
+    val pos = StarJoinView.refresh(spark, dir, Nil, viewDir, Seq("id"),
+      Seq("grp"), Seq("cents" -> col("cents"))).head
     assert(pos === 3L)
     val reg = Consumers.list(spark, dir)
     assert(reg.map(_.name) ===
-      Seq(MaterializedView.consumerName(viewDir)))
+      Seq(StarJoinView.consumerName(viewDir, "f")))
     assert(reg.head.position === 3L &&
       reg.head.viewDir.contains(viewDir))
 
@@ -207,9 +209,9 @@ class ConsumerRegistrySpec extends SparkSpec {
     val s4 = df((1L, 111L, "g1"), (3L, 330L, "g2"), (6L, 600L, "g3"))
     ChangeLog.recordBatch(spark, dir, Seq("id"), 4L)(
       MergeUpsert.replaceAll(spark, dir, s4, partitionCol = "grp"))
-    assert(MaterializedView.refresh(spark, dir, viewDir, Seq("id"),
-      project, Seq("grp"), Seq("cents")) === 4L)
-    assertSame(spark.read.parquet(viewDir).drop("_as_of", "gv_pt"),
+    assert(StarJoinView.refresh(spark, dir, Nil, viewDir, Seq("id"),
+      Seq("grp"), Seq("cents" -> col("cents"))).head === 4L)
+    assertSame(spark.read.parquet(viewDir).drop("_as_of_f", "gv_pt"),
       recompute, "view after collapse + refresh")
     assert(Consumers.list(spark, dir).head.position === 4L)
   }
@@ -284,12 +286,12 @@ class ConsumerRegistrySpec extends SparkSpec {
     def recompute: DataFrame = project(spark.read.parquet(dir))
       .groupBy(col("grp")).agg(sum(col("cents")).as("cents"),
         count(lit(1)).as("n_rows"))
-    def viewNow: DataFrame = spark.read.parquet(viewDir).drop("_as_of")
-    def refresh(): Long = MaterializedView.refreshPartitioned(spark,
-      dir, viewDir, Seq("id"), project, Seq("grp"), Seq("cents"),
-      partDim = "grp")
+    def viewNow: DataFrame = spark.read.parquet(viewDir).drop("_as_of_f")
+    def refresh(): Long = StarJoinView.refreshPartitioned(spark,
+      dir, Nil, viewDir, Seq("id"), Seq("grp"), Seq("cents" -> col("cents")),
+      partDim = "grp").head
     def asOfByGrp: Map[String, Long] = spark.read.parquet(viewDir)
-      .groupBy(col("grp")).agg(max(col("_as_of")).as("a"))
+      .groupBy(col("grp")).agg(max(col("_as_of_f")).as("a"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     // Seed BEFORE any log exists: position -1, all partitions stamped.
@@ -370,10 +372,10 @@ class ConsumerRegistrySpec extends SparkSpec {
     def recompute: DataFrame = project(spark.read.parquet(dir))
       .groupBy(col("grp")).agg(sum(col("cents")).as("cents"),
         count(lit(1)).as("n_rows"))
-    def viewNow: DataFrame = spark.read.parquet(viewDir).drop("_as_of")
-    def refresh(): Long = MaterializedView.refreshPartitioned(spark,
-      dir, viewDir, Seq("id"), project, Seq("grp"), Seq("cents"),
-      partDim = "grp")
+    def viewNow: DataFrame = spark.read.parquet(viewDir).drop("_as_of_f")
+    def refresh(): Long = StarJoinView.refreshPartitioned(spark,
+      dir, Nil, viewDir, Seq("id"), Seq("grp"), Seq("cents" -> col("cents")),
+      partDim = "grp").head
 
     val s0 = df((1L, 100L, "g1"), (2L, 200L, "g2"))
     MergeUpsert.replaceAll(spark, dir, s0, partitionCol = "grp")
@@ -422,26 +424,54 @@ class ConsumerRegistrySpec extends SparkSpec {
       spark.createDataFrame(
         spark.sparkContext.parallelize(
           rows.map(r => Row(r._1, r._2, r._3)), 2), floatSchema)
-    MergeUpsert.replaceAll(spark, dir, fdf((1L, 1.5, "g1")),
-      partitionCol = "grp")
+    val state0 = fdf((1L, 1.5, "g1"))
+    MergeUpsert.replaceAll(spark, dir, state0, partitionCol = "grp")
     ChangeLog.recordBatch(spark, dir, Seq("id"), 1L)(
       MergeUpsert.replaceAll(spark, dir,
         fdf((1L, 2.5, "g1"), (2L, 0.1, "g2")), partitionCol = "grp"))
     val net = ChangeLog.netDiff(
       ChangeLog.readLog(spark, dir).get, Seq("id"))
     val boom = intercept[IllegalArgumentException] {
-      CdcView.groupDelta(net, Seq("id"),
-        _.select(col("grp"), col("v")), Seq("grp"), Seq("v"))
+      CdcStarView.starGroupDelta(Some(net), Seq("id"), () => state0, Nil,
+        Seq("grp"), Seq("v" -> col("v")))
     }
     assert(boom.getMessage.contains("drift") ||
       boom.getMessage.contains("exact"),
       s"wrong message: ${boom.getMessage}")
     // The persisted form refuses at SEED time too — before any state
     // exists to be wrong.
+    val viewDir = tmpDir("reg-float-v") + "/v"
     intercept[IllegalArgumentException] {
-      MaterializedView.refresh(spark, dir, tmpDir("reg-float-v") + "/v",
-        Seq("id"), _.select(col("grp"), col("v")),
-        Seq("grp"), Seq("v"))
+      StarJoinView.refresh(spark, dir, Nil, viewDir, Seq("id"),
+        Seq("grp"), Seq("v" -> col("v")))
     }
+    // ...and a refused definition registers nothing: a registration
+    // left behind would resolve to -1 and block every checkpoint.
+    def registeredFor(table: String, v: String): Seq[String] =
+      Consumers.list(spark, table).filter(_.viewDir.contains(v))
+        .map(_.name)
+    assert(registeredFor(dir, viewDir).isEmpty)
+    // The same for a K = 1 star: neither log may list the view.
+    val dimDir = tmpDir("reg-float-d") + "/d"
+    val dimState0 = spark.range(1).select(lit("g1").as("grp"),
+      lit("first").as("label"))
+    MergeUpsert.replaceAll(spark, dimDir, dimState0.withColumn("pt",
+      lit("all")), partitionCol = "pt")
+    ChangeLog.recordBatch(spark, dimDir, Seq("grp"), 1L)(
+      MergeUpsert.replaceAll(spark, dimDir,
+        dimState0.unionByName(spark.range(1).select(lit("g2").as("grp"),
+          lit("second").as("label"))).withColumn("pt", lit("all")),
+        partitionCol = "pt"))
+    val starDir = tmpDir("reg-float-s") + "/v"
+    intercept[IllegalArgumentException] {
+      StarJoinView.refresh(spark, dir,
+        Seq(StarJoinView.DimSpec(dimDir, Seq("grp"), Seq("grp"),
+          cols = Some(Seq("label")))),
+        starDir, Seq("id"), Seq("label"), Seq("v" -> col("v")))
+    }
+    assert(registeredFor(dir, starDir).isEmpty,
+      "a refused star left a registration on the fact log")
+    assert(registeredFor(dimDir, starDir).isEmpty,
+      "a refused star left a registration on the dim log")
   }
 }

@@ -55,20 +55,21 @@ class ForgetSpec extends SparkSpec {
 
     // A persisted per-country view over the REAL silver change log
     // (9-column session key, long measures), seeded at position 1.
-    import graft.runtime.MaterializedView
+    import graft.runtime.{MaterializedView, StarJoinView}
     val viewDir = s"$wh/view_country"
     def viewProject(d: DataFrame): DataFrame =
       d.select(col("country"), col("n_events"), col("sum_value_cents"))
-    def refreshView(): Long = MaterializedView.refresh(spark,
-      s"$wh/silver_sessions", viewDir, graft.silver.Sessionize.SessionKey,
-      viewProject, Seq("country"), Seq("n_events", "sum_value_cents"))
+    def refreshView(): Long = StarJoinView.refresh(spark,
+      s"$wh/silver_sessions", Nil, viewDir,
+      graft.silver.Sessionize.SessionKey, Seq("country"),
+      Seq("n_events", "sum_value_cents").map(m => m -> col(m))).head
     def viewRecompute(silver: DataFrame): DataFrame =
       viewProject(silver).groupBy(col("country"))
         .agg(sum(col("n_events")).as("n_events"),
           sum(col("sum_value_cents")).as("sum_value_cents"),
           count(lit(1)).as("n_rows"))
     def viewNow: DataFrame =
-      spark.read.parquet(viewDir).drop("_as_of", "gv_pt")
+      spark.read.parquet(viewDir).drop("_as_of_f", "gv_pt")
     assert(refreshView() === 1L)
 
     Incremental.appendBatch(spark, bronze,

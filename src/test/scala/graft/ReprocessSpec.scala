@@ -1,7 +1,8 @@
 package graft
 
 import graft.ingest.Events
-import graft.runtime.{ChangeLog, Incremental, MaterializedView, Pipeline}
+import graft.runtime.{ChangeLog, Incremental, MaterializedView, Pipeline,
+  StarJoinView}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,9 +62,10 @@ class ReprocessSpec extends SparkSpec {
     val viewDir = s"$wh/view_country"
     def viewProject(d: DataFrame): DataFrame =
       d.select(col("country"), col("n_events"), col("sum_value_cents"))
-    def refreshView(): Long = MaterializedView.refresh(spark,
-      silverDir, viewDir, graft.silver.Sessionize.SessionKey,
-      viewProject, Seq("country"), Seq("n_events", "sum_value_cents"))
+    def refreshView(): Long = StarJoinView.refresh(spark,
+      silverDir, Nil, viewDir, graft.silver.Sessionize.SessionKey,
+      Seq("country"),
+      Seq("n_events", "sum_value_cents").map(m => m -> col(m))).head
     assert(refreshView() === 2L)
     val snapAt2 = spark.read.parquet(silverDir).localCheckpoint()
 
@@ -94,7 +96,7 @@ class ReprocessSpec extends SparkSpec {
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("sum_value_cents")).as("sum_value_cents"),
         count(lit(1)).as("n_rows"))
-    assert(cells(spark.read.parquet(viewDir).drop("_as_of", "gv_pt"))
+    assert(cells(spark.read.parquet(viewDir).drop("_as_of_f", "gv_pt"))
       === cells(expView), "view refresh across the logic change")
 
     // The incremental chain resumes cleanly past the reprocess, its

@@ -2,7 +2,7 @@ package graft
 
 import graft.ingest.Events
 import graft.runtime.{ChangeLog, Incremental, MaterializedView,
-  Pipeline, Retention}
+  Pipeline, Retention, StarJoinView}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,9 +64,10 @@ class RetentionSpec extends SparkSpec {
     val viewDir = s"$wh/view_country"
     def viewProject(d: DataFrame): DataFrame =
       d.select(col("country"), col("n_events"), col("sum_value_cents"))
-    def refreshView(): Long = MaterializedView.refresh(spark,
-      s"$wh/silver_sessions", viewDir, graft.silver.Sessionize.SessionKey,
-      viewProject, Seq("country"), Seq("n_events", "sum_value_cents"))
+    def refreshView(): Long = StarJoinView.refresh(spark,
+      s"$wh/silver_sessions", Nil, viewDir,
+      graft.silver.Sessionize.SessionKey, Seq("country"),
+      Seq("n_events", "sum_value_cents").map(m => m -> col(m))).head
     refreshView()
 
     // A maintained bronze key index: retention must reconcile it —
@@ -189,7 +190,7 @@ class RetentionSpec extends SparkSpec {
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("sum_value_cents")).as("sum_value_cents"),
         count(lit(1)).as("n_rows"))
-    assert(cells(spark.read.parquet(viewDir).drop("_as_of", "gv_pt"))
+    assert(cells(spark.read.parquet(viewDir).drop("_as_of_f", "gv_pt"))
       === cells(expView), "re-seeded view must serve truncated counts")
 
     // (3c) The SCD2 store honored the purge: it was invalidated, and

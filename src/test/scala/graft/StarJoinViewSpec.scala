@@ -4,7 +4,7 @@ import graft.runtime.{ChangeLog, Consumers, MaterializedView,
   StarJoinView}
 import graft.runtime.StarJoinView.DimSpec
 import graft.silver.MergeUpsert
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   * invalidates into a re-seed. The decomposition's term shapes are
   * each exercised: fact-only, several dims in one refresh (earlier
   * dims at span-START state in later movers' terms), late-dim-only
-  * with fact and earlier dim at snapshots. */
+  * with fact and earlier dim at snapshots. A single-table view is the
+  * K = 0 star. */
 class StarJoinViewSpec extends SparkSpec {
 
   private val fSchema = StructType(Seq(
@@ -207,6 +208,23 @@ class StarJoinViewSpec extends SparkSpec {
     // inputs), so exactly one per log remains.
     assert(Consumers.list(spark, d1Dir).map(_.name) ===
       Seq(StarJoinView.consumerName(viewDir, "d0")))
+
+    // The K = 0 star (a single-table view) on its own directory: a
+    // changed measure expression, nothing new in the log.
+    val v0Dir = s"$base/v0"
+    def refresh0(e: Column): Seq[Long] =
+      StarJoinView.refresh(spark, fDir, Nil, v0Dir, Seq("id"),
+        Seq("k1"), Seq("mk" -> e))
+    def recompute0(e: Column): DataFrame =
+      spark.read.parquet(fDir).groupBy(col("k1"))
+        .agg(sum(e).as("mk"), count(lit(1)).as("n_rows"))
+    def view0: DataFrame =
+      spark.read.parquet(v0Dir).drop("_as_of_f", "gv_pt")
+    assert(refresh0(col("m")) === Seq(1L))
+    assert(cells(view0) === cells(recompute0(col("m"))))
+    assert(refresh0(col("m") * 10) === Seq(1L))
+    assert(cells(view0) === cells(recompute0(col("m") * 10)),
+      "a single-table view refreshed with a new measure must re-seed")
   }
 
   private def refreshPart(fDir: String, d1Dir: String, d2Dir: String,
@@ -464,5 +482,43 @@ class StarJoinViewSpec extends SparkSpec {
         Seq(("mw", col("m") * col("w2"))), partDim = "g1")
     }
     assert(e2.getMessage.contains("snowflake"))
+  }
+
+  test("state left by the earlier single-table loop (`_as_of`, no " +
+      "config, an mview-* registration) re-seeds as the K = 0 star " +
+      "and leaves no mview-* registration behind") {
+    val base = tmpDir("sjv-upgrade")
+    val fDir = s"$base/f"; val viewDir = s"$base/v"
+    MergeUpsert.replaceAll(spark, fDir,
+      fdf((1L, 10L, 100L, 2L), (2L, 20L, 200L, 3L)), partitionCol = "pt")
+    ChangeLog.recordBatch(spark, fDir, Seq("id"), 1L)(
+      MergeUpsert.replaceAll(spark, fDir,
+        fdf((1L, 10L, 100L, 4L), (2L, 20L, 200L, 3L),
+          (3L, 10L, 100L, 5L)), partitionCol = "pt"))
+    def expected: DataFrame = spark.read.parquet(fDir)
+      .groupBy(col("k1"))
+      .agg(sum(col("m")).as("m"), count(lit(1)).as("n_rows"))
+    // The single-slot layout, by hand: one `gv_pt` partition stamped
+    // `_as_of` at the log head, no `_cfg`, figures planted WRONG so a
+    // refresh that kept the state would be caught.
+    MergeUpsert.replaceAll(spark, viewDir,
+      expected.withColumn("m", col("m") + 1000L)
+        .withColumn("_as_of", lit(1L))
+        .withColumn("gv_pt", lit("all")).localCheckpoint(),
+      partitionCol = "gv_pt")
+    Consumers.register(spark, fDir, MaterializedView.consumerName(viewDir),
+      1L, viewDir = Some(viewDir))
+
+    assert(StarJoinView.refresh(spark, fDir, Nil, viewDir, Seq("id"),
+      Seq("k1"), Seq("m" -> col("m"))) === Seq(1L))
+    val view = spark.read.parquet(viewDir)
+    assert(!view.columns.contains("_as_of"))
+    assert(cells(view.drop("_as_of_f", "gv_pt")) === cells(expected),
+      "the single-slot state must re-seed to the recompute")
+    val regs = Consumers.list(spark, fDir)
+    assert(!regs.exists(_.name.startsWith("mview-")),
+      s"an mview-* registration survived the re-seed: $regs")
+    assert(regs.map(r => (r.name, r.position)) ===
+      Seq((StarJoinView.consumerName(viewDir, "f"), 1L)))
   }
 }
