@@ -2,7 +2,6 @@ package graft
 
 import graft.text.MinHashDedup
 import graft.util.Num
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: verifies MinHashDedup.clusters against an exact
@@ -19,14 +18,7 @@ import org.apache.spark.sql.functions._
 object ExactDedupCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(32)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val sigs = MinHashDedup.signatures(docs).cache()

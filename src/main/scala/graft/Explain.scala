@@ -17,14 +17,7 @@ object Explain {
     val name = args.headOption.getOrElse(
       sys.error("usage: graft.Explain <queryName> [sfDir] [full]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(8)
     // `inner:` names expose the pre-checkpoint pipeline of queries whose
     // registered face is a localCheckpoint read (the checkpoint hides the
     // real plan behind an ExistingRDD — the r17 plan-evidence gap).
@@ -38,16 +31,8 @@ object Explain {
         graft.ops.EventOps.hllWauActivePlan(s, d)),
       // The pre-checkpoint session-envelope sub-job of
       // join_interval_overlap (the r18 exchange-elision surface).
-      "inner:join_interval_overlap" -> ((s, d) =>
-        graft.silver.Sessionize
-          .assignSessions(graft.ingest.Events.cleansed(s, d))
-          .groupBy(org.apache.spark.sql.functions.col("user_id"),
-            org.apache.spark.sql.functions.col("session_id"))
-          .agg(org.apache.spark.sql.functions
-            .min(org.apache.spark.sql.functions.col("ts_us")).as("s"),
-            org.apache.spark.sql.functions
-              .max(org.apache.spark.sql.functions.col("ts_us")).as("e"))
-          .select("session_id", "s", "e")),
+      "inner:join_interval_overlap" ->
+        graft.ops.IntervalJoin.sessionEnvelopes _,
       "inner:dedup_incremental" -> ((s, d) => {
         val idx = graft.sim.AnnIndex.dir(s, d, "incdedup")
         graft.sim.AnnIndex.ensure(idx)(

@@ -211,14 +211,9 @@ object PlanFingerprint {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("check")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSf)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-planfp")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(8)
+    // The committed fingerprints were recorded at 32 shuffle partitions.
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
       if (mode == "dump") {
         // Debug aid: print the canonical text (SPARK_GRAFT_ONLY to

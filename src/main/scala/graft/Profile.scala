@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-level profiling main (diagnostics, not part of the harness
   * contract): times labeled sub-plans of the expensive queries so a round
   * can see WHERE the seconds go before optimizing. Usage:
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(32)
     import org.apache.spark.sql.DataFrame
 
     def time[A](label: String)(f: => A): A = {
@@ -62,7 +53,6 @@ object Profile {
 
     // Incremental dedup volumes (round-9; r18: checkDelta stage split).
     if (sys.env.contains("SPARK_GRAFT_PROFILE_INCDEDUP")) {
-      import org.apache.spark.sql.functions._
       val idx = s"/tmp/graft-incdedup/${new java.io.File(sfDir).getName}"
       time("incdedup buildIndex")(
         graft.text.IncrementalDedup.buildIndex(spark, sfDir, idx))
@@ -73,10 +63,7 @@ object Profile {
       }
       out.unpersist()
       // Stage split: signatures, postings join, agreement, confirm.
-      val delta = spark.read.parquet(s"$sfDir/documents.parquet")
-        .withColumn("bucket",
-          expr(graft.text.TextOps.md5BucketExpr(10)))
-        .filter(col("bucket") >= 8)
+      val delta = graft.text.IncrementalDedup.deltaDocs(spark, sfDir)
       val dsigs = time("incdedup delta sigs") {
         val x = graft.text.MinHashDedup.signatures(delta).persist()
         println(s"  delta docs = ${x.count()}"); x

@@ -63,7 +63,8 @@ object SparkEntry {
     UserDaily.build(sessions(spark, "/root/testdata/sf0.001"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "silver_sessions" -> ((s, dir) => silver(s, dir)),
     "gold_user_daily" -> ((s, dir) => UserDaily.build(sessions(s, dir))),
     "gold_episode_daily" -> ((s, dir) =>
@@ -152,160 +153,11 @@ object SparkEntry {
     // Dataset-version diff (CDC shape): one full-outer join classifies
     // every key added/removed/changed/unchanged with null-safe cells.
     "table_diff_orders" -> graft.ops.TableDiff.ordersQuarterDiff _,
-    // The CDC composition end-to-end: a three-batch maintenance history
-    // recorded by ChangeLog.recordBatch (built once per JVM), collapsed
-    // with netDiff — must equal the DuckDB-computed ENDPOINT diff.
-    "cdc_orders_net" -> graft.runtime.ChangeLog.ordersChangeLogNet _,
-    // The other CDC consumer contract: replay(state0, log) — one
-    // log-scale collapse + anti-join + union, no per-batch
-    // re-execution — must reproduce the DuckDB-computed ENDPOINT state.
-    "cdc_orders_replay" -> graft.runtime.ChangeLog.ordersChangeLogReplay _,
-    // Log-driven incremental view maintenance (ops/CdcStarView with no
-    // dims, applied by ops/CdcView): the downstream aggregate is kept
-    // current by APPLYING the log's contribution delta — the base table
-    // is never re-read past the seed; oracle recomputes the endpoint
-    // view from scratch.
-    "cdc_view_orders_priority" ->
-      graft.runtime.ChangeLog.ordersPriorityViewMaintained _,
-    // The PERSISTED form of the same view (runtime/StarJoinView with no
-    // dims): seeded before the history's batches, caught up purely from
-    // the log with an atomically-committed position, served as a scan.
-    "cdc_mview_orders_priority" ->
-      graft.runtime.ChangeLog.ordersPriorityViewPersisted _,
-    // The NON-distributive twin: per-priority MIN/MAX (no signed fold
-    // can maintain it — a removed row may have been the extreme),
-    // refreshed by touched-group recompute: the log names the touched
-    // groups, the base is re-read only inside them, partition-pruned.
-    "cdc_minmax_orders_priority" ->
-      graft.runtime.ChangeLog.ordersPriorityMinMaxPersisted _,
-    // The EXACT-DISTINCT twin: per-priority countDistinct — the
-    // aggregate the reference golds lean on hardest (A2–A4), rejected
-    // from the signed fold by requireExactMeasures and maintained by
-    // the same touched-group recompute instead; the stored-HLL face
-    // (sketch_mau_stored) is its at-scale approximate twin.
-    "cdc_distinct_view_orders" ->
-      graft.runtime.ChangeLog.ordersPriorityDistinctPersisted _,
-    // The same persisted-view loop at GOLD grain over the REAL silver
-    // session log: a three-update incremental chain (9-column session
-    // key, real adds/changes/deletes) maintains a per-country view
-    // purely from the log — the oracle recomputes the endpoint
-    // aggregate from the full sessionization.
-    "cdc_view_sessions_country" ->
-      graft.runtime.ChangeLog.sessionsCountryViewPersisted _,
-    // SCD TYPE-2 from the log: every (key, version) validity interval
-    // in one events→intervals pass (ops/Scd2); the oracle re-derives
-    // the four states and intervalizes them independently through a
-    // presence grid, so every boundary — tombstone closes, the
-    // change-then-revert triple, the untouched still-current
-    // baseline — must match exactly.
-    "cdc_scd2_orders" -> graft.runtime.ChangeLog.ordersScd2History _,
     // Result cache (runtime/ResultCache): Q1 served through the
     // listing-signature cache — the second serve must HIT (its thunk
     // fails loud if forced) and the answer is a bare scan of the
     // materialized result; the oracle recomputes Q1 from scratch.
     "cache_q1_pricing" -> graft.runtime.ResultCache.q1PricingCached _,
-    // SCD2 consumption: every key probed at every position through the
-    // union+window as-of plan (never a range join); absent keys — not
-    // yet added, or tombstoned — must attach NULL, the case the naive
-    // as-of carry gets wrong. Oracle reads each state directly.
-    "cdc_scd2_asof" -> graft.runtime.ChangeLog.ordersScd2AsOf _,
-    // Serving twin: the SAME as-of probe under the SAME oracle, with
-    // the dimension read from the PERSISTED Scd2Store (pre-
-    // intervalized version rows) instead of an inline fromLog rebuild
-    // — the plan a 100 TB consumer runs; PlanSpec pins that no log or
-    // base-orders scan appears in it.
-    "cdc_scd2_asof_stored" ->
-      graft.runtime.ChangeLog.ordersScd2AsOfStored _,
-    // The incrementally-maintained SCD2 store (runtime/Scd2Store):
-    // seeded before the batches, extended across the log at
-    // O(entries + touched buckets) — served intervals must be
-    // cell-identical to the from-scratch rebuild (same oracle).
-    "cdc_scd2_store_orders" ->
-      graft.runtime.ChangeLog.ordersScd2StoreHistory _,
-    // History compaction (Scd2Store.archive): the same dimension in a
-    // DEDICATED store, its pre-position-3 closed versions split into
-    // the _archive sibling, served back through readHistory (live ∪
-    // archive) under the SAME oracle — the split may lose or
-    // duplicate nothing, while current-only reads keep scanning
-    // live buckets alone.
-    "cdc_scd2_archive_orders" ->
-      graft.runtime.ChangeLog.ordersScd2ArchiveHistory _,
-    // Time travel from the log (ChangeLog.snapshotAt): position 1's
-    // never-stored snapshot reconstructed from the CURRENT table +
-    // the later entries' pre-images — O(current + distance), the
-    // merge-maintained twin of Incremental.readAsOf.
-    "cdc_snapshot_at_orders" ->
-      graft.runtime.ChangeLog.ordersSnapshotAt1 _,
-    // Bounded-window net change (ChangeLog.changesBetween): what a
-    // position-1 consumer applies to reach position 2 — churn inside
-    // the window telescopes, revisions OUTSIDE it stay visible (the
-    // window bound is the thing the full-span net cannot check).
-    "cdc_changes_between_orders" ->
-      graft.runtime.ChangeLog.ordersChangesBetween1And2 _,
-    // Join-view IVM (ops/CdcStarView, one dim): the per-segment revenue view
-    // over orders ⋈ customer maintained from the orders log's SIGNED
-    // join delta (ΔA⋈B) — every fact change reaches the view through
-    // the join; the oracle recomputes the endpoint join from scratch.
-    "cdc_joinview_orders_mkt" ->
-      graft.runtime.ChangeLog.ordersJoinViewMaintained _,
-    // The PERSISTED two-log join view (runtime/StarJoinView, one dim):
-    // positions in BOTH change logs committed atomically with the data
-    // (the _as_of vector on the single-partition swap), both consumers
-    // registered, refreshed across an interleaved history where BOTH
-    // sides move — the serve-time refresh catches up a B-only removal
-    // span; the oracle recomputes the endpoint A₂ ⋈ B₂ from source.
-    "cdc_joinview_persisted" ->
-      graft.runtime.ChangeLog.ordersJoinViewPersisted _,
-    // The PARTITIONED join view (StarJoinView.refreshPartitioned): same
-    // definition over the same interleaved two-log history, but each
-    // refresh rewrites ONLY the segment partitions its span touches —
-    // per-partition _as_of vectors, vector file committed last,
-    // straggler top-up from a partition's OWN vector. Same oracle.
-    "cdc_joinview_partitioned" ->
-      graft.runtime.ChangeLog.ordersJoinViewPartitioned _,
-    // The LEFT-OUTER persisted join view (StarJoinView joinType="left"
-    // + CdcStarView.leftStarGroupDelta): the count-augmented outer
-    // delta — unmatched-A groups live null-extended and RETRACT when
-    // ΔB creates a key's first match, RESTORE when it removes the
-    // last; the history churns B's key set in both directions and the
-    // oracle recomputes the endpoint A₂ ⟕ B₂ with COALESCE(SUM, 0).
-    // Every reference gold join is left-outer — this is its
-    // maintained-view form.
-    "cdc_leftjoinview_persisted" ->
-      graft.runtime.ChangeLog.ordersLeftJoinViewPersisted _,
-    // Its PARTITIONED twin — partition-scoped rewrites on the A-side
-    // priority dim (never null; B-side dims are null for unmatched
-    // groups), per-partition vector stamps, vector file committed last.
-    "cdc_leftjoinview_partitioned" ->
-      graft.runtime.ChangeLog.ordersLeftJoinViewPartitioned _,
-    // The PERSISTED STAR view (runtime/StarJoinView + ops/CdcStarView):
-    // fact + TWO logged dims maintained from all three change logs —
-    // the K+1-position vector commits atomically with the data; the
-    // serve-time refresh catches up a dim-REMOVAL span; the oracle
-    // recomputes the endpoint three-way join from source.
-    "cdc_starview_persisted" ->
-      graft.runtime.ChangeLog.ordersStarViewPersisted _,
-    // The LEFT-OUTER star (StarJoinView joinType="left" +
-    // CdcStarView.leftStarGroupDelta): chained ⟕ — the reference's
-    // actual gold shape (J4) — with per-dim count-augmented
-    // zero-crossing corrections. The history fires BOTH directions:
-    // cust keys appear (the null-segment group must vanish entirely
-    // by the endpoint) and the prio-dim drop moves its facts into the
-    // null-class group at serve time, where the inner twin removes
-    // them. Oracle: endpoint F₁ ⟕ C₁ ⟕ P₂ with COALESCE(SUM, 0).
-    "cdc_leftstarview_persisted" ->
-      graft.runtime.ChangeLog.ordersLeftStarViewPersisted _,
-    // Its PARTITIONED twin — the LEFT × partitioned × star
-    // composition: partition-scoped rewrites on the FACT's priority
-    // dim (dim-side dims are null for unmatched groups), the
-    // K+1-vector split commit per partition.
-    "cdc_leftstarview_partitioned" ->
-      graft.runtime.ChangeLog.ordersLeftStarViewPartitioned _,
-    // Its PARTITIONED twin: per-partition _as_of vectors, the
-    // vector-position file last, touched-partitions-only rewrites.
-    // Same oracle.
-    "cdc_starview_partitioned" ->
-      graft.runtime.ChangeLog.ordersStarViewPartitioned _,
     // Q7/Q9/Q10/Q14: bilateral-pair disjunction, signed profit over a
     // LIKE-filtered dimension, returned-revenue top-k, and the
     // one-pass conditional-ratio month slice.
@@ -743,7 +595,7 @@ object SparkEntry {
     // PageRank driver loop.
     "graph_reachability" -> ((s, dir) =>
       graft.ops.Reachability.episodeReachability(s, dir)),
-  )
+  ) ++ graft.runtime.CdcFaces.queries // the 23 cdc_* faces
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

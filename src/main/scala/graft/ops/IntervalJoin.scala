@@ -63,37 +63,46 @@ object IntervalJoin {
   def selectArm(maxBucket: Long, cap: Long = HotBucketCap): Arm =
     if (maxBucket <= cap) ColdArm else SaltArm
 
+  /** Each session's [min start, max end] envelope (`session_id`, `s`,
+    * `e`) — the pre-checkpoint sub-plan of [[concurrentSessions]], and
+    * the plan-evidence surface of graft.Explain
+    * `inner:join_interval_overlap`. Gold-side convention: sessions over
+    * cleansed events (the silver dedup is its own materialization — the
+    * goldPre oracle preamble).
+    *
+    * Envelopes straight from the session ASSIGNMENT (r17): the silver
+    * aggregate's 9-key groupBy + 10 aggregate functions + state machine
+    * were all discarded by the envelope re-group — min/max ts_us over a
+    * session's EVENTS equals min(start_us)/max(end_us) over its silver
+    * rows by definition, so one corpus-scale aggregate replaces two and
+    * the wide silver projection never materializes (measured −0.4 s at
+    * sf0.1, identical output).
+    *
+    * groupBy (user_id, session_id), not session_id alone (r18, guide
+    * §2.4 exchange reuse): session_id is user-scoped ("<user>_<seq>"),
+    * so the grouping is identical — but with user_id among the keys the
+    * sessionize window's hash(user_id) partitioning satisfies the
+    * aggregate's required distribution and the envelope groupBy reuses
+    * that exchange instead of re-shuffling every event row on the
+    * derived string key. */
+  private[graft] def sessionEnvelopes(spark: SparkSession,
+                                      dir: String): DataFrame =
+    graft.silver.Sessionize
+      .assignSessions(graft.ingest.Events.cleansed(spark, dir))
+      .groupBy(col("user_id"), col("session_id"))
+      .agg(min(col("ts_us")).as("s"), max(col("ts_us")).as("e"))
+      .select("session_id", "s", "e")
+
   def concurrentSessions(spark: SparkSession, dir: String,
                          arm: Arm = AutoArm,
                          cap: Long = HotBucketCap): DataFrame = {
-    // Gold-side convention: sessions over cleansed events (the silver
-    // dedup is its own materialization — the goldPre oracle preamble).
     // localCheckpoint, not persist (the KnnEval convention): the
     // corpus-scale cleanse→sessionize derivation feeds the buckets
     // explode (which AutoArm's membership aggregate and BOTH salted-arm
     // sides re-read) AND the final n_concurrent join — without the
     // checkpoint the SaltArm path re-executes the derivation up to five
     // times, and a bare persist would leak past the lazy return.
-    // Envelopes straight from the session ASSIGNMENT (r17): the silver
-    // aggregate's 9-key groupBy + 10 aggregate functions + state machine
-    // were all discarded by the envelope re-group — min/max ts_us over a
-    // session's EVENTS equals min(start_us)/max(end_us) over its silver
-    // rows by definition, so one corpus-scale aggregate replaces two and
-    // the wide silver projection never materializes (measured −0.4 s at
-    // sf0.1, identical output).
-    // groupBy (user_id, session_id), not session_id alone (r18, guide
-    // §2.4 exchange reuse): session_id is user-scoped ("<user>_<seq>"),
-    // so the grouping is identical — but with user_id among the keys the
-    // sessionize window's hash(user_id) partitioning satisfies the
-    // aggregate's required distribution and the envelope groupBy reuses
-    // that exchange instead of re-shuffling every event row on the
-    // derived string key.
-    val sess = graft.silver.Sessionize
-      .assignSessions(graft.ingest.Events.cleansed(spark, dir))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(min(col("ts_us")).as("s"), max(col("ts_us")).as("e"))
-      .select("session_id", "s", "e")
-      .localCheckpoint()
+    val sess = sessionEnvelopes(spark, dir).localCheckpoint()
     // explode_outer + null filter: the bucket list is a DERIVED array
     // (the InferFiltersFromGenerate pitfall PlanSpec guards). NOT
     // checkpointed (r18): every consumer reads it straight off the sess

@@ -3297,7 +3297,7 @@ object OpsOracles {
       |  CAST(sum(n_changed) AS BIGINT) AS n_changed_cells
       |FROM j GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersChangeLogNet: the accumulated three-batch
+  /** Mirrors CdcFaces `cdc_orders_net`: the accumulated three-batch
     * change log must collapse to the ENDPOINT diff state0 → state3 —
     * computed here independently (the intermediate Sep-1997 add-then-
     * remove and the 1996 change-then-revert must net out to nothing).
@@ -3344,7 +3344,7 @@ object OpsOracles {
       |WHERE is_added OR is_removed OR n_changed > 0
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersChangeLogReplay: replay(state0, log) must
+  /** Mirrors CdcFaces `cdc_orders_replay`: replay(state0, log) must
     * reproduce the ENDPOINT state3 — computed here directly from the
     * source with the same deterministic transforms (the Spark side
     * instead re-derives state0 and applies the accumulated change
@@ -3373,7 +3373,7 @@ object OpsOracles {
       |FROM n
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersPriorityViewMaintained: the log-driven
+  /** Mirrors CdcFaces `cdc_view_orders_priority`: the log-driven
     * incremental view must equal the from-scratch endpoint recompute —
     * same integer-cents measure on both sides. */
   val ordersPriorityViewMaintained: String =
@@ -3399,7 +3399,7 @@ object OpsOracles {
       |FROM n
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersPriorityMinMaxPersisted: the endpoint
+  /** Mirrors CdcFaces `cdc_minmax_orders_priority`: the endpoint
     * per-priority MIN/MAX recomputed from scratch — the engine side
     * serves the touched-group-recompute-refreshed persisted view, so
     * a deletion that removed an extreme must have resurfaced the
@@ -3429,7 +3429,7 @@ object OpsOracles {
       |FROM n
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersScd2History: the SCD2 intervals the
+  /** Mirrors CdcFaces `cdc_scd2_orders`: the SCD2 intervals the
     * engine builds from the change log, re-derived here WITHOUT a log
     * — the four deterministic states are materialized, laid on a
     * key × state presence grid, change points detected with lag
@@ -3524,7 +3524,7 @@ object OpsOracles {
       |FROM vers WHERE is_open
       |GROUP BY 1, 2, 3""".stripMargin
 
-  /** Mirrors ChangeLog.ordersScd2AsOf: every key probed at every
+  /** Mirrors CdcFaces `cdc_scd2_asof`: every key probed at every
     * position must attach the priority of the STATE at that position
     * — keys not yet added or already dropped attach NULL. The oracle
     * skips the intervals entirely and reads each state directly,
@@ -3589,7 +3589,7 @@ object OpsOracles {
       |  min(k) AS min_key, max(k) AS max_key
       |FROM j GROUP BY 1, 2""".stripMargin
 
-  /** Mirrors ChangeLog.ordersChangesBetween1And2: the bounded-window
+  /** Mirrors CdcFaces `cdc_changes_between_orders`: the bounded-window
     * net change (1, 2] — state1 vs state2 diffed independently. The
     * 1996 change-then-revert keys DO appear here (the reverting batch
     * 3 sits outside the window) — the window bound itself is what the
@@ -3639,7 +3639,7 @@ object OpsOracles {
       |WHERE is_added OR is_removed OR n_changed > 0
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersJoinViewMaintained: the endpoint
+  /** Mirrors CdcFaces `cdc_joinview_orders_mkt`: the endpoint
     * orders ⋈ customer per-segment revenue recomputed from scratch —
     * the engine instead applies the orders log's signed join delta to
     * the state0 seed, so every add/remove/re-prioritization must
@@ -3663,7 +3663,7 @@ object OpsOracles {
       |FROM n JOIN customer c ON n.o_custkey = c.c_custkey
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersJoinViewPersisted: the endpoint A₂ ⋈ B₂
+  /** Mirrors CdcFaces `cdc_joinview_persisted`: the endpoint A₂ ⋈ B₂
     * per-segment revenue recomputed from the source tables — the
     * engine instead maintains the PERSISTED two-log join view
     * (runtime/StarJoinView, one dim) across the interleaved history
@@ -3717,7 +3717,7 @@ object OpsOracles {
       |WHERE o_orderdate < TIMESTAMP '1997-07-01'
       |  AND o_orderpriority = '1-URGENT'""".stripMargin
 
-  /** Mirrors ChangeLog.ordersLeftJoinViewPersisted (and its
+  /** Mirrors CdcFaces `cdc_leftjoinview_persisted` (and its
     * partitioned twin): the endpoint A₂ ⟕ B₂ recomputed from source —
     * the engine instead MAINTAINS the left-outer view across a
     * history where B keys appear (the %13 customers the seed lacked)
@@ -3751,7 +3751,7 @@ object OpsOracles {
       |FROM a LEFT JOIN b ON a.o_custkey = b.c_custkey
       |GROUP BY 1, 2""".stripMargin
 
-  /** Mirrors ChangeLog.ordersPriorityDistinctPersisted: the endpoint
+  /** Mirrors CdcFaces `cdc_distinct_view_orders`: the endpoint
     * per-priority COUNT(DISTINCT custkey) recomputed from scratch over
     * the same deterministic endpoint state as the min/max twin — the
     * engine maintains it by touched-group recompute from the log's
@@ -3778,7 +3778,7 @@ object OpsOracles {
       |FROM n
       |GROUP BY 1""".stripMargin
 
-  /** Mirrors ChangeLog.ordersLeftStarViewPersisted: the endpoint
+  /** Mirrors CdcFaces `cdc_leftstarview_persisted`: the endpoint
     * F₁ ⟕ C₁ ⟕ P₂ chained left star recomputed from source. The
     * endpoint customer dim is COMPLETE (the %13 keys appeared at
     * batch 1), so no NULL-segment group may survive — the mass
@@ -3815,7 +3815,7 @@ object OpsOracles {
       |LEFT JOIN p ON f.o_orderpriority = p.o_orderpriority
       |GROUP BY 1, 2""".stripMargin
 
-  /** Mirrors ChangeLog.ordersLeftStarViewPartitioned: the same
+  /** Mirrors CdcFaces `cdc_leftstarview_partitioned`: the same
     * endpoint left star at the finer (priority × segment × class)
     * grain — the partition dim must be fact-side (never null). */
   val ordersLeftStarViewPartitioned: String =
@@ -3846,7 +3846,7 @@ object OpsOracles {
       |LEFT JOIN p ON f.o_orderpriority = p.o_orderpriority
       |GROUP BY 1, 2, 3""".stripMargin
 
-  /** Mirrors ChangeLog.ordersStarViewPersisted: the endpoint
+  /** Mirrors CdcFaces `cdc_starview_persisted`: the endpoint
     * F₁ ⋈ C₁ ⋈ P₂ three-way star recomputed from source — fact at its
     * widened horizon, the customer dim with its deterministic segment
     * flip, the priority dim re-derived with the batch-1 reclass and
@@ -3877,7 +3877,7 @@ object OpsOracles {
       |JOIN p ON f.o_orderpriority = p.o_orderpriority
       |GROUP BY 1, 2""".stripMargin
 
-  /** Mirrors ChangeLog.ordersSnapshotAt1: the time-travel
+  /** Mirrors CdcFaces `cdc_snapshot_at_orders`: the time-travel
     * reconstruction of position 1 — state1 is simply the source
     * filtered to its date horizon (no transforms had happened yet),
     * computed here directly; the engine must UNWIND batches 2 and 3
@@ -3988,7 +3988,7 @@ object OpsOracles {
       |    * 1000000, 0) / 1000000.0 AS intercept
       |FROM s""".stripMargin
 
-  /** Mirrors ChangeLog.sessionsCountryViewPersisted: the per-country
+  /** Mirrors CdcFaces `cdc_view_sessions_country`: the per-country
     * view maintained purely from the SILVER change log must equal the
     * from-scratch per-country aggregate of the endpoint sessionization
     * (the incremental chain is exact, so the endpoint silver is the

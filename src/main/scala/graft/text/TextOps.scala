@@ -118,7 +118,7 @@ object TextOps {
     * single definition of the scheme [[hashSplit]], [[sampleStratified]]
     * and [[Packing.packSequences]] (and their DuckDB oracles) all rely
     * on being byte-identical. */
-  private[graft] def md5BucketExpr(mod: Long): String =
+  private[text] def md5BucketExpr(mod: Long): String =
     "cast(pmod(cast(conv(substring(md5(cast(doc_id as string)), 1, " +
       s"15), 16, 10) as bigint), ${mod}L) as int)"
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.runtime.{ChangeLog, Incremental}
+import graft.runtime.{CdcFaces, ChangeLog, Incremental}
 import org.apache.spark.sql.functions._
 
 /** The change-log CONSUMER contract: because entries land as batch_id
@@ -13,7 +13,7 @@ class CdcConsumerSpec extends SparkSpec {
   test("a consumer tails the log with readSince/readAsOf, pruned by " +
       "batch partition") {
     val dir = "/root/testdata/sf0.001"
-    ChangeLog.ordersChangeLogNet(spark, dir).collect() // builds the log
+    CdcFaces.queries("cdc_orders_net")(spark, dir).collect() // builds the log
     val log = ChangeLog.logDir(graft.sim.AnnIndex.dir(spark, dir,
       "cdc_orders"))
 

@@ -14,6 +14,18 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, dir)
       .queryExecution.explainString(SimpleMode)
 
+  test("every registered query has an oracle, and every CDC face is " +
+      "registered") {
+    // tools/check.py iterates the oracles only, so a query registered
+    // without one would go unchecked.
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size === 158)
+    graft.runtime.CdcFaces.queries.keys.foreach { n =>
+      assert(SparkEntry.queries.contains(n) &&
+        SparkEntry.oracleSql.contains(n), n)
+    }
+  }
+
   test("q1: shipdate filter pushed into the parquet scan, schema pruned") {
     val p = plan("q1_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), " +
@@ -664,7 +676,10 @@ class PlanSpec extends SparkSpec {
     // the registered plan is one scan of the tiny view, zero joins,
     // zero aggregates: the 100 TB serving argument in one line each.
     Seq("cdc_joinview_persisted", "cdc_joinview_partitioned",
-        "cdc_starview_persisted", "cdc_starview_partitioned").foreach { n =>
+        "cdc_starview_persisted", "cdc_starview_partitioned",
+        "cdc_leftjoinview_persisted", "cdc_leftjoinview_partitioned",
+        "cdc_leftstarview_persisted", "cdc_leftstarview_partitioned"
+    ).foreach { n =>
       val p = plan(n)
       assert("Scan parquet".r.findAllIn(p).size == 1, s"$n:\n$p")
       assert(p.contains("sum_cents:bigint") &&
