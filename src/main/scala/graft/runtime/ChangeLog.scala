@@ -232,21 +232,28 @@ object ChangeLog {
       write
       return
     }
-    if (!preCommitted) {
+    // The schema of a pre-image this call writes: reading it back then
+    // needs no schema-inference job. One resumed from an earlier
+    // attempt still infers it.
+    val preSchema = if (preCommitted) None else {
       // First durable step — BEFORE the write mutates the table. Sweep
       // first: a crashed prior writer's .backup-* partition must be
       // restored before the before-image is taken, or the batch would
       // mis-report restored rows as `added`.
       fs.delete(preP, true) // a partial (uncommitted) leftover
-      if (MergeUpsert.sweepAndHasData(fs, rootPath))
-        scope(spark.read.option("mergeSchema", "true").parquet(tableDir))
-          .write.mode("overwrite").parquet(preP.toString)
+      val written = Option.when(MergeUpsert.sweepAndHasData(fs, rootPath)) {
+        val pre = scope(
+          spark.read.option("mergeSchema", "true").parquet(tableDir))
+        pre.write.mode("overwrite").parquet(preP.toString)
+        pre.schema
+      }
       if (!fs.exists(preP)) fs.mkdirs(preP)
       val hasFooter = fs.listStatus(preP).exists { f =>
         f.isFile && f.getPath.getName.endsWith(".parquet") && f.getLen > 0
       }
       if (!hasFooter) touch(fs, new Path(preP, PreEmptyMarker))
       touch(fs, new Path(preP, PreCommitMarker))
+      written
     }
     write
     // The post-image read must survive a write that EMPTIED the table
@@ -262,7 +269,9 @@ object ChangeLog {
     val tableHasData = MergeUpsert.sweepAndHasData(fs, rootPath)
     if (!tableHasData && preEmpty) { fs.delete(preP, true); return }
     val base =
-      if (preEmpty) None else Some(spark.read.parquet(preP.toString))
+      if (preEmpty) None
+      else Some(preSchema.fold(spark.read)(spark.read.schema)
+        .parquet(preP.toString))
     val after =
       if (tableHasData)
         scope(spark.read.option("mergeSchema", "true").parquet(tableDir))

@@ -40,6 +40,16 @@ object Incremental {
       .sorted
   }
 
+  /** The committed batch ids [[readSince]] reads: those past a valid
+    * watermark, all of them when the watermark is absent or invalid.
+    * A listing, no data scan. */
+  def batchesSince(spark: SparkSession, tableDir: String,
+                   sinceExclusive: Option[Long]): Seq[Long] = {
+    val ids = batches(spark, tableDir)
+    sinceExclusive.filter(ids.contains)
+      .fold(ids)(wm => ids.filter(_ > wm))
+  }
+
   def highWatermark(spark: SparkSession, tableDir: String): Option[Long] =
     batches(spark, tableDir).lastOption
 

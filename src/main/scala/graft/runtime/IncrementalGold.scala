@@ -53,26 +53,31 @@ object IncrementalGold {
                      goldDir: String, affectedUsers: DataFrame,
                      changeLogBatch: Option[Long] = None,
                      producer: String = ChangeLog.DefaultProducer)
-      : Unit = {
-    val users = affectedUsers.select(col("user_id")).distinct()
-    val scoped = silver.join(users, Seq("user_id"), "left_semi")
-    def write(): Unit = MergeUpsert.upsertScoped(spark, goldDir,
-      graft.gold.UserDaily.build(scoped), Seq("user_id"), users)
-    changeLogBatch match {
-      case Some(b) => ChangeLog.recordBatch(spark, goldDir,
-        Seq("datetime", "user_id"), b,
-        df => df.join(users, Seq("user_id"), "left_semi"),
-        producer = producer)(write())
-      case None => write()
+      : Unit =
+    // Scans all of silver (semi-joined to the users) and of the gold.
+    Interpreted.whenSmall(spark, Interpreted.frameBytes(silver),
+        Interpreted.dirBytes(spark, goldDir)) {
+      val users = affectedUsers.select(col("user_id")).distinct()
+      val scoped = silver.join(users, Seq("user_id"), "left_semi")
+      def write(): Unit = MergeUpsert.upsertScoped(spark, goldDir,
+        graft.gold.UserDaily.build(scoped), Seq("user_id"), users)
+      changeLogBatch match {
+        case Some(b) => ChangeLog.recordBatch(spark, goldDir,
+          Seq("datetime", "user_id"), b,
+          df => df.join(users, Seq("user_id"), "left_semi"),
+          producer = producer)(write())
+        case None => write()
+      }
     }
-  }
 
   /** Exact date-scoped incremental recompute for a date-grain gold:
     * `build` runs over silver restricted to the halo dates, the stage
     * keeps only the affected dates (halo-edge rows would be computed
     * from truncated context), and the result upserts on
     * (datetime, grainCol). `backDays`/`fwdDays` are the table's silver
-    * dependency span b/f (scaladoc above). */
+    * dependency span b/f (scaladoc above). The execution-arm gate
+    * ([[Interpreted]]) measures the whole silver input and the whole
+    * gold, an upper bound of the halo dates the layer scans. */
   def dateScopedDelta(spark: SparkSession, silver: DataFrame,
                       goldDir: String, deltaDates: Seq[java.sql.Date],
                       build: DataFrame => DataFrame,
@@ -82,37 +87,40 @@ object IncrementalGold {
                       changeLogView: DataFrame => DataFrame = identity,
                       producer: String = ChangeLog.DefaultProducer)
       : Unit = {
-    if (deltaDates.isEmpty) return
-    def shift(d: java.sql.Date, days: Int): java.sql.Date =
-      java.sql.Date.valueOf(d.toLocalDate.plusDays(days.toLong))
-    val affected = deltaDates
-      .flatMap(d => (-fwdDays to backDays).map(shift(d, _))).distinct
-    val halo = affected
-      .flatMap(x => (-backDays to fwdDays).map(shift(x, _))).distinct
-    // Date literals, not strings: isin must compare at DateType so the
-    // partition filter prunes instead of casting the column.
-    val scoped = silver.filter(col("datetime").isin(halo: _*))
-    val stage = build(scoped).filter(col("datetime").isin(affected: _*))
-    // Replace, don't upsert: the stage is the COMPLETE recompute of
-    // the affected dates, so grains absent from it must be DROPPED —
-    // a keyed upsert would keep a (datetime, grain) row whose silver
-    // inputs vanished (deletion propagation); an affected date with no
-    // staged rows at all is deleted outright.
-    def write(): Unit =
-      MergeUpsert.replacePartitions(spark, goldDir, stage, affected)
-    changeLogBatch match {
-      // CDC publication ([[ChangeLog]]): the log scope is exactly the
-      // affected-date set this write can rewrite, so the before/after
-      // snapshots stay delta-scaled. `changeLogView` lets a table log
-      // at its CONTRACT grain (the sketch gold drops the serialized
-      // bytes — build-order-dependent — and logs the estimate).
-      case Some(b) => ChangeLog.recordBatch(spark, goldDir,
-        "datetime" +: grainCols, b,
-        df => changeLogView(
-          df.filter(col("datetime").isin(affected: _*))),
-        producer = producer)(write())
-      case None => write()
-    }
+    if (deltaDates.nonEmpty)
+      Interpreted.whenSmall(spark, Interpreted.frameBytes(silver),
+          Interpreted.dirBytes(spark, goldDir)) {
+        def shift(d: java.sql.Date, days: Int): java.sql.Date =
+          java.sql.Date.valueOf(d.toLocalDate.plusDays(days.toLong))
+        val affected = deltaDates
+          .flatMap(d => (-fwdDays to backDays).map(shift(d, _))).distinct
+        val halo = affected
+          .flatMap(x => (-backDays to fwdDays).map(shift(x, _))).distinct
+        // Date literals, not strings: isin must compare at DateType so the
+        // partition filter prunes instead of casting the column.
+        val scoped = silver.filter(col("datetime").isin(halo: _*))
+        val stage = build(scoped).filter(col("datetime").isin(affected: _*))
+        // Replace, don't upsert: the stage is the COMPLETE recompute of
+        // the affected dates, so grains absent from it must be DROPPED —
+        // a keyed upsert would keep a (datetime, grain) row whose silver
+        // inputs vanished (deletion propagation); an affected date with no
+        // staged rows at all is deleted outright.
+        def write(): Unit =
+          MergeUpsert.replacePartitions(spark, goldDir, stage, affected)
+        changeLogBatch match {
+          // CDC publication ([[ChangeLog]]): the log scope is exactly the
+          // affected-date set this write can rewrite, so the before/after
+          // snapshots stay delta-scaled. `changeLogView` lets a table log
+          // at its CONTRACT grain (the sketch gold drops the serialized
+          // bytes — build-order-dependent — and logs the estimate).
+          case Some(b) => ChangeLog.recordBatch(spark, goldDir,
+            "datetime" +: grainCols, b,
+            df => changeLogView(
+              df.filter(col("datetime").isin(affected: _*))),
+            producer = producer)(write())
+          case None => write()
+        }
+      }
   }
 
   /** Deletion-converge for a date-grain gold whose SILVER INPUT IS

@@ -2,7 +2,6 @@ package graft.runtime
 
 import graft.ingest.Events
 import graft.silver.{Dedup, Sessionize}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -77,61 +76,46 @@ object IncrementalSilver {
                      toSilver: org.apache.spark.sql.DataFrame =>
                        org.apache.spark.sql.DataFrame = null,
                      changeLog: Boolean = false,
-                     logIdOffset: Long = 0L): Delta = {
-    val derive = Option(toSilver).getOrElse(harnessSilver(asOfUs) _)
-    val hw = Incremental.highWatermark(spark, bronzeDir)
-    if (hw.isEmpty) return Delta(None, None, Nil) // no bronze data yet
-    if (hw == watermark && watermark.exists(w =>
-        Incremental.lineageValid(spark, bronzeDir, w)))
-      return Delta(watermark, None, Nil)
+                     logIdOffset: Long = 0L): Delta =
+    // The layer scans all of bronze (the affected users' history) and
+    // all of silver (their existing rows).
+    Interpreted.whenSmall(spark,
+        Interpreted.dirBytes(spark, bronzeDir, silverDir)) {
+      applyUpdate(spark, bronzeDir, silverDir, watermark,
+        Option(toSilver).getOrElse(harnessSilver(asOfUs) _), changeLog,
+        logIdOffset)
+    }
 
-    val newEvents = Incremental.readSince(spark, bronzeDir, watermark)
+  private def applyUpdate(spark: SparkSession, bronzeDir: String,
+                          silverDir: String, watermark: Option[Long],
+                          derive: org.apache.spark.sql.DataFrame =>
+                            org.apache.spark.sql.DataFrame,
+                          changeLog: Boolean, logIdOffset: Long): Delta = {
+    val batches = Incremental.batches(spark, bronzeDir)
+    val hw = batches.lastOption
+    if (hw.isEmpty) return Delta(None, None, Nil) // no bronze data yet
+    // A watermark equal to the last committed id is a valid one.
+    if (hw == watermark) return Delta(watermark, None, Nil)
+
+    // One bronze read for the delta and the history.
+    val bronze = spark.read.parquet(bronzeDir)
+    val newEvents = watermark.filter(batches.contains)
+      .fold(bronze)(w => bronze.filter(col("batch_id") > w))
     if (newEvents.isEmpty) return Delta(hw, None, Nil)
     // Checkpointed: the distinct's lineage is the bronze-delta scan,
-    // and the scope frame is read again by the history semi-join, the
-    // affected-dates semi-join, upsertScoped's planning AND the
-    // downstream gold deltas — without the checkpoint each re-runs the
-    // delta scan.
+    // and the scope frame is read again by the history semi-join,
+    // upsertScoped's planning AND the downstream gold deltas — without
+    // the checkpoint each re-runs the delta scan.
     val affectedUsers = newEvents.select(col("user_id")).distinct()
       .localCheckpoint()
 
-    val history = spark.read.parquet(bronzeDir)
+    val history = bronze
       .join(affectedUsers, Seq("user_id"), "left_semi")
       .drop("batch_id")
     // Materialized once: the windowed re-derivation is the dominant
-    // cost of an update, and both the affected-dates collect and the
-    // write below would otherwise each execute it from scratch.
+    // cost of an update, and the merge's staged-dates collect and its
+    // write would otherwise each execute it from scratch.
     val recomputed = derive(history).localCheckpoint()
-
-    val silverPath = new Path(silverDir)
-    val fs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Sweep-then-check, shared with every merge mode: heals crash
-    // leftovers (incl. `.trash-*` halves) BEFORE any read, and counts
-    // only visible data entries — a silver table a previous delta
-    // emptied down to its _SUCCESS marker must read as absent, not
-    // fail schema inference forever after.
-    val silverExists =
-      graft.silver.MergeUpsert.sweepAndHasData(fs, silverPath)
-
-    // Affected dates = the recomputed frame's dates ∪ the affected
-    // users' EXISTING silver dates (both metadata-scale collects, same
-    // as merge-upsert planning). The existing-dates side is the
-    // DELETION-propagation half: a late event can re-stamp or re-derive
-    // a user's rows OFF a date entirely (keep-latest moves an event's
-    // day; a session merge re-keys its rows), and that date never
-    // appears in the recompute — without it, downstream gold deltas
-    // would never recompute the vanished date. The scan is
-    // column-pruned to (user_id, datetime); a user-bucketed silver
-    // layout prunes it further at 100 TB.
-    val recomputedDates = recomputed.select(col("datetime")).distinct()
-      .collect().map(_.getDate(0)).toIndexedSeq
-    val existingDates =
-      if (!silverExists) IndexedSeq.empty[java.sql.Date]
-      else spark.read.parquet(silverDir)
-        .join(affectedUsers, Seq("user_id"), "left_semi")
-        .select(col("datetime")).distinct()
-        .collect().map(_.getDate(0)).toIndexedSeq
-    val affectedDates = (recomputedDates ++ existingDates).distinct
 
     // The write IS the scope-converging merge: within the affected
     // users, silver converges to the recompute exactly — stale rows
@@ -139,9 +123,20 @@ object IncrementalSilver {
     // staging-write + rename-swap protocol (the previous in-place
     // dynamic overwrite left a whole-job window where affected
     // partitions were deleted but not yet rewritten).
+    //
+    // Affected dates = the dates the merge rewrote: the recomputed
+    // frame's dates ∪ the affected users' EXISTING silver dates. The
+    // existing-dates side is the DELETION-propagation half: a late
+    // event can re-stamp or re-derive a user's rows OFF a date
+    // entirely (keep-latest moves an event's day; a session merge
+    // re-keys its rows), and that date never appears in the recompute
+    // — without it, downstream gold deltas would never recompute the
+    // vanished date.
+    var affectedDates = Seq.empty[java.sql.Date]
     def write(): Unit =
-      graft.silver.MergeUpsert.upsertScoped(spark, silverDir, recomputed,
-        Seq("user_id"), affectedUsers)
+      affectedDates = graft.silver.MergeUpsert.upsertScoped(spark,
+        silverDir, recomputed, Seq("user_id"), affectedUsers)
+        .map(_.asInstanceOf[java.sql.Date])
     if (changeLog)
       // Entry id = bronze endpoint + the warehouse's CDC id offset
       // ([[Pipeline.cdcIdOffsetPath]]) — keeps chain ids past any

@@ -307,14 +307,17 @@ object Pipeline {
     // second change log (the quarantine is already batch-lineage).
     if (toSilver == null && d.watermark != watermark)
       stage("quarantine") {
-        val delta = Incremental.readSince(spark, bronzeDir, watermark)
-        val batches = delta.select(org.apache.spark.sql.functions
-            .col("batch_id")).distinct()
-          .collect().map(_.get(0)).toIndexedSeq
-        MergeUpsert.replacePartitions(spark,
-          s"$warehouseDir/quarantine_events",
-          Events.rejects(Events.enrich(delta)), batches,
-          partitionCol = "batch_id")
+        // The delta's batch ids from the listing; the stage scans
+        // exactly those batch directories.
+        val batches = Incremental.batchesSince(spark, bronzeDir, watermark)
+        Interpreted.whenSmall(spark, Interpreted.dirBytes(spark,
+            batches.map(b => s"$bronzeDir/batch_id=$b"): _*)) {
+          val delta = Incremental.readSince(spark, bronzeDir, watermark)
+          MergeUpsert.replacePartitions(spark,
+            s"$warehouseDir/quarantine_events",
+            Events.rejects(Events.enrich(delta)), batches,
+            partitionCol = "batch_id")
+        }
       }
     d.affectedUsers.foreach { users =>
       val silver = spark.read.parquet(silverDir)

@@ -393,6 +393,15 @@ object StarJoinView {
   private def atHead(pos: Seq[Long], heads: Seq[Long]): Boolean =
     pos.indices.forall(i => pos(i) >= heads(i))
 
+  /** A refresh's execution arm ([[Interpreted]]): it scans the fact
+    * and dim tables (a seed joins them whole) and the view; the log
+    * span it folds is delta-sized. */
+  private def gated[T](spark: SparkSession, factDir: String,
+                       dims: Seq[DimSpec], viewDir: String)
+                      (body: => T): T =
+    Interpreted.whenSmall(spark, Interpreted.dirBytes(spark,
+      factDir +: dims.map(_.dir) :+ viewDir: _*))(body)
+
   /** Seed or incrementally refresh the star view. `joinType` is
     * `"inner"` or `"left"` (the CHAINED LEFT OUTER star — the
     * reference's actual gold shape; maintained by
@@ -405,29 +414,30 @@ object StarJoinView {
               viewDims: Seq[String],
               measures: Seq[(String, Column)],
               joinType: String = "inner",
-              fCols: Option[Seq[String]] = None): Seq[Long] = {
-    val loop = new Loop(spark, factDir, dims, viewDir, fKeys, viewDims,
-      measures, joinType, fCols, layout = "single")
-    val heads = loop.open()
-    def persist(v: DataFrame): Unit =
-      MergeUpsert.replaceAll(spark, viewDir,
-        v.withColumn(PartCol, lit("all")), partitionCol = PartCol)
-    positions(spark, viewDir, dims.size) match {
-      case None => loop.seed(heads)(persist)
-      case Some(pos) if atHead(pos, heads) =>
-        // Nothing new — heal a vector file the last commit's crash
-        // window left missing or lagging the data-committed vector.
-        if (!loop.loadVec().contains(pos)) loop.saveVec(pos)
-        loop.registered(pos)
-      case Some(pos) =>
-        val view = spark.read.parquet(viewDir)
-          .drop(loop.asOfCols :+ PartCol: _*)
-        persist(loop.stamp(CdcView.applyDelta(view,
-          loop.delta(pos, heads), viewDims, loop.names), heads))
-        loop.saveVec(heads)
-        loop.registered(heads)
+              fCols: Option[Seq[String]] = None): Seq[Long] =
+    gated(spark, factDir, dims, viewDir) {
+      val loop = new Loop(spark, factDir, dims, viewDir, fKeys, viewDims,
+        measures, joinType, fCols, layout = "single")
+      val heads = loop.open()
+      def persist(v: DataFrame): Unit =
+        MergeUpsert.replaceAll(spark, viewDir,
+          v.withColumn(PartCol, lit("all")), partitionCol = PartCol)
+      positions(spark, viewDir, dims.size) match {
+        case None => loop.seed(heads)(persist)
+        case Some(pos) if atHead(pos, heads) =>
+          // Nothing new — heal a vector file the last commit's crash
+          // window left missing or lagging the data-committed vector.
+          if (!loop.loadVec().contains(pos)) loop.saveVec(pos)
+          loop.registered(pos)
+        case Some(pos) =>
+          val view = spark.read.parquet(viewDir)
+            .drop(loop.asOfCols :+ PartCol: _*)
+          persist(loop.stamp(CdcView.applyDelta(view,
+            loop.delta(pos, heads), viewDims, loop.names), heads))
+          loop.saveVec(heads)
+          loop.registered(heads)
+      }
     }
-  }
 
   /** Large-view refresh. The view is hive-partitioned on `partDim`
     * (one of its dims — every group in exactly one partition) and a
@@ -457,7 +467,18 @@ object StarJoinView {
                          measures: Seq[(String, Column)],
                          partDim: String,
                          joinType: String = "inner",
-                         fCols: Option[Seq[String]] = None): Seq[Long] = {
+                         fCols: Option[Seq[String]] = None): Seq[Long] =
+    gated(spark, factDir, dims, viewDir) {
+      refreshParts(spark, factDir, dims, viewDir, fKeys, viewDims,
+        measures, partDim, joinType, fCols)
+    }
+
+  private def refreshParts(spark: SparkSession, factDir: String,
+                           dims: Seq[DimSpec], viewDir: String,
+                           fKeys: Seq[String], viewDims: Seq[String],
+                           measures: Seq[(String, Column)],
+                           partDim: String, joinType: String,
+                           fCols: Option[Seq[String]]): Seq[Long] = {
     require(viewDims.contains(partDim),
       s"partDim '$partDim' must be one of the view dims " +
         s"${viewDims.mkString("[", ", ", "]")} — a group must live " +

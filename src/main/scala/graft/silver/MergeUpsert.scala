@@ -93,30 +93,38 @@ object MergeUpsert {
     * prunes it further). A partition whose rewrite comes out EMPTY is
     * deleted via the trash protocol (scaladoc on [[dropPartitions]]).
     * Idempotent: re-running the same stage re-derives the same scope
-    * rows. */
+    * rows. Returns the affected partition values (staged first, then
+    * the scope's previous ones): the dates a date-scoped downstream
+    * must recompute. On a table's first write that is the staged
+    * values, which costs one more pass over the stage there. */
   def upsertScoped(spark: SparkSession, targetDir: String, stage: DataFrame,
                    scopeCols: Seq[String], scope: DataFrame,
-                   partitionCol: String = "datetime"): Unit = {
+                   partitionCol: String = "datetime"): Seq[Any] = {
     val rootPath = new Path(targetDir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sweepAndHasData(fs, rootPath)) {
+    val hasData = sweepAndHasData(fs, rootPath)
+    val stagedVals = stage.select(col(partitionCol)).distinct()
+      .collect().map(_.get(0)).toIndexedSeq
+    if (!hasData) {
       initialWrite(spark, targetDir, stage, partitionCol)
+      stagedVals
     } else {
       val target = spark.read.option("mergeSchema", "true").parquet(targetDir)
-      val stagedVals = stage.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)).toIndexedSeq
       val scopeVals = target
         .join(scope.select(scopeCols.map(col): _*).distinct(),
           scopeCols, "left_semi")
         .select(col(partitionCol)).distinct().collect()
         .map(_.get(0)).toIndexedSeq
       val affected = (stagedVals ++ scopeVals).distinct
-      if (affected.isEmpty) return // nothing staged, scope has no rows
-      val kept = target.filter(affectedPredicate(partitionCol, affected))
-        .join(scope.select(scopeCols.map(col): _*).distinct(),
-          scopeCols, "left_anti")
-      writeAndSwap(fs, rootPath, kept.unionByName(stage),
-        partitionCol, affected.map(partitionDirName(partitionCol, _)))
+      // Nothing staged and the scope has no rows: nothing to rewrite.
+      if (affected.nonEmpty) {
+        val kept = target.filter(affectedPredicate(partitionCol, affected))
+          .join(scope.select(scopeCols.map(col): _*).distinct(),
+            scopeCols, "left_anti")
+        writeAndSwap(fs, rootPath, kept.unionByName(stage),
+          partitionCol, affected.map(partitionDirName(partitionCol, _)))
+      }
+      affected
     }
   }
 
@@ -125,28 +133,21 @@ object MergeUpsert {
     * complete recompute of those partitions (so target rows there are
     * dropped wholesale, and a partition with no staged rows at all is
     * DELETED — the all-grains-vanished case). Partitions outside the
-    * list are untouched. Same staging-write + rename-swap crash
-    * protocol as [[upsert]]. */
+    * list are untouched, except that a staged value outside it swaps
+    * in wholesale like a listed one. One pass over the stage: the swap
+    * takes whatever partitions the staging write produced, and the
+    * drop set is the listed values that received no rows. Same
+    * staging-write + rename-swap crash protocol as [[upsert]]. */
   def replacePartitions(spark: SparkSession, targetDir: String,
                         stage: DataFrame, partitionVals: Seq[Any],
                         partitionCol: String = "datetime"): Unit = {
     val rootPath = new Path(targetDir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sweepAndHasData(fs, rootPath)) {
+    if (!sweepAndHasData(fs, rootPath))
       initialWrite(spark, targetDir, stage, partitionCol)
-    } else {
-      // Safety union: a staged value outside the declared list would
-      // otherwise swap in while its siblings' stale rows survive.
-      val stagedVals = stage.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)).toIndexedSeq
-      val affected = (partitionVals ++ stagedVals).distinct
-      if (affected.isEmpty) return
-      // The stage passes through unfiltered: `affected` is a superset
-      // of the staged partition values by construction, so a filter on
-      // it would be dead code costing one per-row evaluation.
-      writeAndSwap(fs, rootPath, stage,
-        partitionCol, affected.map(partitionDirName(partitionCol, _)))
-    }
+    else // names encoded before the write: a bad type fails first
+      writeAndSwap(fs, rootPath, stage, partitionCol,
+        partitionVals.distinct.map(partitionDirName(partitionCol, _)))
   }
 
   /** Converge the WHOLE table to the stage — the full-recompute shape

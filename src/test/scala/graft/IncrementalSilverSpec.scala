@@ -90,7 +90,7 @@ class IncrementalSilverSpec extends SparkSpec {
     // Nov 15 partition.
     Incremental.appendBatch(spark, bronze, rawDf(Seq(
       ev(1, 1, 0), ev(2, 1, 60), ev(20, 2, 92500))), 1L)
-    var wm = IncrementalSilver.update(spark, bronze, silver, None)
+    val wm = IncrementalSilver.update(spark, bronze, silver, None)
     assert(spark.read.parquet(silver)
       .filter(col("datetime") === "2023-11-15").count() == 1L)
 
@@ -101,7 +101,12 @@ class IncrementalSilverSpec extends SparkSpec {
     // puts Nov 15 in the rewrite scope at all.
     Incremental.appendBatch(spark, bronze,
       rawDf(Seq(ev(20, 2, 92900))), 2L)
-    wm = IncrementalSilver.update(spark, bronze, silver, wm)
+    val delta = IncrementalSilver.updateDetailed(spark, bronze, silver, wm)
+    assert(delta.watermark.contains(2L))
+    // The date the user's rows moved off is still in the downstream
+    // scope: the gold deltas must recompute it.
+    assert(delta.affectedDates.toSet == Set("2023-11-15", "2023-11-16")
+      .map(java.sql.Date.valueOf), delta.affectedDates.toString)
 
     val all = rawDf(Seq(ev(1, 1, 0), ev(2, 1, 60), ev(20, 2, 92500),
       ev(20, 2, 92900)))

@@ -219,6 +219,35 @@ class RuntimeSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(dir, "datetime=2024-01-02")))
   }
 
+  test("replacePartitions evaluates its stage exactly once: the swap " +
+      "and the drop set come from the one staging write") {
+    val dir = tmpDir("merge-replace-once")
+    MergeUpsert.upsert(spark, dir, sessionsDf(Seq(
+      ("a", "2024-01-01", 1.0), ("b", "2024-01-02", 2.0),
+      ("c", "2024-01-03", 3.0))), Seq("session_id", "datetime"))
+    val src = tmpDir("merge-replace-once-src")
+    // 01-01 is rewritten, 01-02 is listed but stages nothing (dropped),
+    // 01-04 is staged but not listed (swapped in), 01-03 is untouched.
+    sessionsDf(Seq(("a", "2024-01-01", 10.0), ("d", "2024-01-04", 4.0)))
+      .write.mode("overwrite").parquet(src)
+    val evals = spark.sparkContext.longAccumulator("stage-evaluations")
+    val counted = udf { (_: String) => evals.add(1); true }
+      .asNondeterministic()
+    val stage = spark.read.parquet(src).filter(counted(col("session_id")))
+    MergeUpsert.replacePartitions(spark, dir, stage, Seq(
+      java.sql.Date.valueOf("2024-01-01"),
+      java.sql.Date.valueOf("2024-01-02")))
+    assert(evals.value == 2L, s"stage rows evaluated ${evals.value} times")
+    val out = spark.read.parquet(dir)
+      .select(col("session_id"), col("max_value"))
+      .as[(String, Double)].collect().toMap
+    assert(out == Map("a" -> 10.0, "c" -> 3.0, "d" -> 4.0))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(
+      new org.apache.hadoop.fs.Path(dir, "datetime=2024-01-02")))
+  }
+
   test("scoped merge handles a NULL partition value end-to-end - " +
       "rewrite, deletion, and the hive default-partition directory") {
     val dir = tmpDir("merge-scoped-null")
