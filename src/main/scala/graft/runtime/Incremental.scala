@@ -40,16 +40,6 @@ object Incremental {
       .sorted
   }
 
-  /** The committed batch ids [[readSince]] reads: those past a valid
-    * watermark, all of them when the watermark is absent or invalid.
-    * A listing, no data scan. */
-  def batchesSince(spark: SparkSession, tableDir: String,
-                   sinceExclusive: Option[Long]): Seq[Long] = {
-    val ids = batches(spark, tableDir)
-    sinceExclusive.filter(ids.contains)
-      .fold(ids)(wm => ids.filter(_ > wm))
-  }
-
   def highWatermark(spark: SparkSession, tableDir: String): Option[Long] =
     batches(spark, tableDir).lastOption
 
@@ -58,19 +48,34 @@ object Incremental {
                    watermark: Long): Boolean =
     batches(spark, tableDir).contains(watermark)
 
+  /** C2 over committed ids already listed: the watermark a read
+    * resumes after — `sinceExclusive` while it is still one of `ids`,
+    * else None (history was rewritten, or nothing was read yet: read
+    * it all). */
+  private def validSince(ids: Seq[Long],
+                         sinceExclusive: Option[Long]): Option[Long] =
+    sinceExclusive.filter(ids.contains)
+
+  /** The committed batch ids of `ids` past the valid watermark: the
+    * batches [[readSince]] reads. */
+  def batchesSince(ids: Seq[Long], sinceExclusive: Option[Long]): Seq[Long] =
+    validSince(ids, sinceExclusive).fold(ids)(wm => ids.filter(_ > wm))
+
   /** Incremental scan: rows in batches after `sinceExclusive`; an invalid
     * or absent watermark falls back to the full table (the reference's
     * prev=None path). Partition pruning on batch_id keeps the scan to new
     * files only. */
   def readSince(spark: SparkSession, tableDir: String,
-                sinceExclusive: Option[Long]): DataFrame = {
-    val df = spark.read.parquet(tableDir)
-    sinceExclusive match {
-      case Some(wm) if lineageValid(spark, tableDir, wm) =>
-        df.filter(col("batch_id") > wm)
-      case _ => df
-    }
-  }
+                sinceExclusive: Option[Long]): DataFrame =
+    readSince(spark.read.parquet(tableDir), batches(spark, tableDir),
+      sinceExclusive)
+
+  /** [[readSince]] over a read `table` of the batch table whose
+    * committed ids `ids` the caller already listed. */
+  def readSince(table: DataFrame, ids: Seq[Long],
+                sinceExclusive: Option[Long]): DataFrame =
+    validSince(ids, sinceExclusive)
+      .fold(table)(wm => table.filter(col("batch_id") > wm))
 
   /** Time travel: the table AS OF batch `asOf` — every row whose batch
     * id is ≤ the requested watermark, i.e. exactly the table state a

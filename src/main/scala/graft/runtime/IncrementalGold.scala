@@ -54,9 +54,7 @@ object IncrementalGold {
                      changeLogBatch: Option[Long] = None,
                      producer: String = ChangeLog.DefaultProducer)
       : Unit =
-    // Scans all of silver (semi-joined to the users) and of the gold.
-    Interpreted.whenSmall(spark, Interpreted.frameBytes(silver),
-        Interpreted.dirBytes(spark, goldDir)) {
+    Interpreted.run(spark) {
       val users = affectedUsers.select(col("user_id")).distinct()
       val scoped = silver.join(users, Seq("user_id"), "left_semi")
       def write(): Unit = MergeUpsert.upsertScoped(spark, goldDir,
@@ -75,9 +73,7 @@ object IncrementalGold {
     * keeps only the affected dates (halo-edge rows would be computed
     * from truncated context), and the result upserts on
     * (datetime, grainCol). `backDays`/`fwdDays` are the table's silver
-    * dependency span b/f (scaladoc above). The execution-arm gate
-    * ([[Interpreted]]) measures the whole silver input and the whole
-    * gold, an upper bound of the halo dates the layer scans. */
+    * dependency span b/f (scaladoc above). */
   def dateScopedDelta(spark: SparkSession, silver: DataFrame,
                       goldDir: String, deltaDates: Seq[java.sql.Date],
                       build: DataFrame => DataFrame,
@@ -88,8 +84,7 @@ object IncrementalGold {
                       producer: String = ChangeLog.DefaultProducer)
       : Unit = {
     if (deltaDates.nonEmpty)
-      Interpreted.whenSmall(spark, Interpreted.frameBytes(silver),
-          Interpreted.dirBytes(spark, goldDir)) {
+      Interpreted.run(spark) {
         def shift(d: java.sql.Date, days: Int): java.sql.Date =
           java.sql.Date.valueOf(d.toLocalDate.plusDays(days.toLong))
         val affected = deltaDates

@@ -77,10 +77,7 @@ object IncrementalSilver {
                        org.apache.spark.sql.DataFrame = null,
                      changeLog: Boolean = false,
                      logIdOffset: Long = 0L): Delta =
-    // The layer scans all of bronze (the affected users' history) and
-    // all of silver (their existing rows).
-    Interpreted.whenSmall(spark,
-        Interpreted.dirBytes(spark, bronzeDir, silverDir)) {
+    Interpreted.run(spark) {
       applyUpdate(spark, bronzeDir, silverDir, watermark,
         Option(toSilver).getOrElse(harnessSilver(asOfUs) _), changeLog,
         logIdOffset)
@@ -99,8 +96,7 @@ object IncrementalSilver {
 
     // One bronze read for the delta and the history.
     val bronze = spark.read.parquet(bronzeDir)
-    val newEvents = watermark.filter(batches.contains)
-      .fold(bronze)(w => bronze.filter(col("batch_id") > w))
+    val newEvents = Incremental.readSince(bronze, batches, watermark)
     if (newEvents.isEmpty) return Delta(hw, None, Nil)
     // Checkpointed: the distinct's lineage is the bronze-delta scan,
     // and the scope frame is read again by the history semi-join,
@@ -125,7 +121,8 @@ object IncrementalSilver {
     // partitions were deleted but not yet rewritten).
     //
     // Affected dates = the dates the merge rewrote: the recomputed
-    // frame's dates ∪ the affected users' EXISTING silver dates. The
+    // frame's dates ∪ the affected users' EXISTING silver dates (the
+    // recomputed frame's alone when silver is written fresh). The
     // existing-dates side is the DELETION-propagation half: a late
     // event can re-stamp or re-derive a user's rows OFF a date
     // entirely (keep-latest moves an event's day; a session merge
@@ -136,6 +133,8 @@ object IncrementalSilver {
     def write(): Unit =
       affectedDates = graft.silver.MergeUpsert.upsertScoped(spark,
         silverDir, recomputed, Seq("user_id"), affectedUsers)
+        .getOrElse(recomputed.select(col("datetime")).distinct()
+          .collect().map(_.get(0)).toSeq)
         .map(_.asInstanceOf[java.sql.Date])
     if (changeLog)
       // Entry id = bronze endpoint + the warehouse's CDC id offset

@@ -1,22 +1,20 @@
 package graft.runtime
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** The execution arm of the incremental layers: below
-  * [[MaxInputBytes]] of input, a layer runs with Spark's code
-  * generation OFF.
+/** The execution arm of the micro-batch layers: inside [[run]], Spark's
+  * code generation is OFF.
   *
   * A micro-batch's fixed cost is dominated by Janino compiling the
   * generated classes of every plan it runs (hundreds per batch), and
   * nothing carries over to the next batch: the generated-class cache
   * holds 100 entries (`spark.sql.codegen.cache.maxEntries`, a static
   * conf) and batch ids, watermarks and positions are inlined into the
-  * generated source as literals. On delta-sized input the interpreted
-  * evaluators finish before the compiler would; on history-sized input
-  * codegen's per-row speed wins. The gate compares the bytes a layer
-  * scans, read from file metadata only (no Spark job), with one
-  * measured constant.
+  * generated source as literals. At the benchmark's history size (a
+  * 0.5 MB silver) the interpreted evaluators finish before the
+  * compiler would. With a history ~100× deeper (tens of MB per layer)
+  * codegen's per-row speed wins back on silver and some date golds;
+  * no workload measures that size yet (ROADMAP item 2).
   *
   * The scope sets two session confs and restores the caller's values
   * when the last open scope on that session exits, also on exception:
@@ -33,14 +31,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * interpreted too; they are correct either way. */
 object Interpreted {
 
-  /** Input size (bytes of the files a layer scans) up to which the
-    * interpreted arm runs. Measured on the micro-batch chain with both
-    * arms forced and the generator's users and sessions scaled ×10 and
-    * ×100 (CHANGES.md): every layer ran faster interpreted at 0.05–4 MB
-    * of input; at 23–38 MB silver and two date golds ran faster
-    * compiled, and their per-byte penalty puts the crossover at 7–8 MB. */
-  val MaxInputBytes: Long = 8L << 20
-
   private val Confs = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
@@ -53,57 +43,31 @@ object Interpreted {
   private val scopes =
     new java.util.IdentityHashMap[SparkSession, Scope]()
 
-  /** Whether inputs of these sizes (summed without overflow) take the
-    * interpreted arm. */
-  private[graft] def isSmall(inputBytes: Long*): Boolean =
-    inputBytes.map(BigInt(_)).sum <= MaxInputBytes
-
-  /** Runs `body` interpreted when the layer's inputs total at most
-    * [[MaxInputBytes]], as the caller's session is configured
-    * otherwise. */
-  def whenSmall[T](spark: SparkSession, inputBytes: Long*)(body: => T): T =
-    if (!isSmall(inputBytes: _*)) body
-    else {
-      scopes.synchronized {
-        val s = scopes.get(spark)
-        if (s != null) s.open += 1
-        else {
-          // Explicitly set values only: an unset key is unset again.
-          val conf = spark.sessionState.conf
-          scopes.put(spark, new Scope(1, Confs.map { case (k, _) =>
-            k -> Option.when(conf.contains(k))(conf.getConfString(k))
-          }))
-          Confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        }
+  /** Runs `body` with code generation off on `spark`'s session. */
+  def run[T](spark: SparkSession)(body: => T): T = {
+    scopes.synchronized {
+      val s = scopes.get(spark)
+      if (s != null) s.open += 1
+      else {
+        // Explicitly set values only: an unset key is unset again.
+        val conf = spark.sessionState.conf
+        scopes.put(spark, new Scope(1, Confs.map { case (k, _) =>
+          k -> Option.when(conf.contains(k))(conf.getConfString(k))
+        }))
+        Confs.foreach { case (k, v) => spark.conf.set(k, v) }
       }
-      try body
-      finally scopes.synchronized {
-        val s = scopes.get(spark)
-        s.open -= 1
-        if (s.open == 0) {
-          scopes.remove(spark)
-          s.saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
+    }
+    try body
+    finally scopes.synchronized {
+      val s = scopes.get(spark)
+      s.open -= 1
+      if (s.open == 0) {
+        scopes.remove(spark)
+        s.saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
         }
       }
     }
-
-  /** Total bytes of the files under `dirs` (a missing dir counts 0):
-    * the Hadoop content summary, a listing. */
-  private[graft] def dirBytes(spark: SparkSession, dirs: String*): Long =
-    dirs.map { d =>
-      val p = new Path(d)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
-
-  /** The optimizer's size estimate of `df`: for a file scan the bytes
-    * of its listed files, from the listing the read already made. An
-    * unknown size (a checkpointed frame) reads as `Long.MaxValue`, so
-    * it never selects the interpreted arm. */
-  private[graft] def frameBytes(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
+  }
 }

@@ -307,15 +307,14 @@ object Pipeline {
     // second change log (the quarantine is already batch-lineage).
     if (toSilver == null && d.watermark != watermark)
       stage("quarantine") {
-        // The delta's batch ids from the listing; the stage scans
-        // exactly those batch directories.
-        val batches = Incremental.batchesSince(spark, bronzeDir, watermark)
-        Interpreted.whenSmall(spark, Interpreted.dirBytes(spark,
-            batches.map(b => s"$bronzeDir/batch_id=$b"): _*)) {
-          val delta = Incremental.readSince(spark, bronzeDir, watermark)
+        // One listing serves the delta read and its batch ids.
+        val ids = Incremental.batches(spark, bronzeDir)
+        Interpreted.run(spark) {
           MergeUpsert.replacePartitions(spark,
             s"$warehouseDir/quarantine_events",
-            Events.rejects(Events.enrich(delta)), batches,
+            Events.rejects(Events.enrich(Incremental.readSince(
+              spark.read.parquet(bronzeDir), ids, watermark))),
+            Incremental.batchesSince(ids, watermark),
             partitionCol = "batch_id")
         }
       }

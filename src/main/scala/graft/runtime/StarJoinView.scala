@@ -393,15 +393,6 @@ object StarJoinView {
   private def atHead(pos: Seq[Long], heads: Seq[Long]): Boolean =
     pos.indices.forall(i => pos(i) >= heads(i))
 
-  /** A refresh's execution arm ([[Interpreted]]): it scans the fact
-    * and dim tables (a seed joins them whole) and the view; the log
-    * span it folds is delta-sized. */
-  private def gated[T](spark: SparkSession, factDir: String,
-                       dims: Seq[DimSpec], viewDir: String)
-                      (body: => T): T =
-    Interpreted.whenSmall(spark, Interpreted.dirBytes(spark,
-      factDir +: dims.map(_.dir) :+ viewDir: _*))(body)
-
   /** Seed or incrementally refresh the star view. `joinType` is
     * `"inner"` or `"left"` (the CHAINED LEFT OUTER star — the
     * reference's actual gold shape; maintained by
@@ -415,7 +406,7 @@ object StarJoinView {
               measures: Seq[(String, Column)],
               joinType: String = "inner",
               fCols: Option[Seq[String]] = None): Seq[Long] =
-    gated(spark, factDir, dims, viewDir) {
+    Interpreted.run(spark) {
       val loop = new Loop(spark, factDir, dims, viewDir, fKeys, viewDims,
         measures, joinType, fCols, layout = "single")
       val heads = loop.open()
@@ -468,7 +459,7 @@ object StarJoinView {
                          partDim: String,
                          joinType: String = "inner",
                          fCols: Option[Seq[String]] = None): Seq[Long] =
-    gated(spark, factDir, dims, viewDir) {
+    Interpreted.run(spark) {
       refreshParts(spark, factDir, dims, viewDir, fKeys, viewDims,
         measures, partDim, joinType, fCols)
     }

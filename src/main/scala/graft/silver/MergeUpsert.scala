@@ -93,23 +93,24 @@ object MergeUpsert {
     * prunes it further). A partition whose rewrite comes out EMPTY is
     * deleted via the trash protocol (scaladoc on [[dropPartitions]]).
     * Idempotent: re-running the same stage re-derives the same scope
-    * rows. Returns the affected partition values (staged first, then
-    * the scope's previous ones): the dates a date-scoped downstream
-    * must recompute. On a table's first write that is the staged
-    * values, which costs one more pass over the stage there. */
+    * rows. Returns the affected partition values of a merge into
+    * existing data (staged first, then the scope's previous ones): the
+    * dates a date-scoped downstream must recompute. None on a table's
+    * first write, where every staged value is affected: listing them
+    * would cost one more pass over the stage, which a caller holding a
+    * materialized stage can make cheaper. */
   def upsertScoped(spark: SparkSession, targetDir: String, stage: DataFrame,
                    scopeCols: Seq[String], scope: DataFrame,
-                   partitionCol: String = "datetime"): Seq[Any] = {
+                   partitionCol: String = "datetime"): Option[Seq[Any]] = {
     val rootPath = new Path(targetDir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = sweepAndHasData(fs, rootPath)
-    val stagedVals = stage.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toIndexedSeq
-    if (!hasData) {
+    if (!sweepAndHasData(fs, rootPath)) {
       initialWrite(spark, targetDir, stage, partitionCol)
-      stagedVals
+      None
     } else {
       val target = spark.read.option("mergeSchema", "true").parquet(targetDir)
+      val stagedVals = stage.select(col(partitionCol)).distinct()
+        .collect().map(_.get(0)).toIndexedSeq
       val scopeVals = target
         .join(scope.select(scopeCols.map(col): _*).distinct(),
           scopeCols, "left_semi")
@@ -124,7 +125,7 @@ object MergeUpsert {
         writeAndSwap(fs, rootPath, kept.unionByName(stage),
           partitionCol, affected.map(partitionDirName(partitionCol, _)))
       }
-      affected
+      Some(affected)
     }
   }
 

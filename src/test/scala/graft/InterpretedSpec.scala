@@ -1,12 +1,12 @@
 package graft
 
-import graft.runtime.Interpreted
+import graft.runtime.{Incremental, IncrementalSilver, Interpreted}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
-/** The incremental layers' execution arm: the interpreted scope
-  * compiles nothing, answers the same, restores the caller's confs on
-  * every exit path, and switches at the one size constant. */
+/** The micro-batch layers' execution arm: the interpreted scope
+  * compiles nothing, answers the same, and restores the caller's confs
+  * on every exit path. */
 class InterpretedSpec extends SparkSpec {
 
   private val Keys =
@@ -33,10 +33,10 @@ class InterpretedSpec extends SparkSpec {
     val k = 1000003L + System.nanoTime() % 1000000L
     // A first query in a fresh JVM compiles a few literal-independent
     // classes (session-wide, cached by source) even interpreted.
-    Interpreted.whenSmall(spark, 0L)(query(k + 1).collect())
+    Interpreted.run(spark)(query(k + 1).collect())
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val before = compiles.getCount
-    val inScope = Interpreted.whenSmall(spark, 0L)(query(k).collect().toSeq)
+    val inScope = Interpreted.run(spark)(query(k).collect().toSeq)
     assert(compiles.getCount == before,
       s"${compiles.getCount - before} classes compiled in the scope")
     val compiled = query(k).collect().toSeq
@@ -48,16 +48,16 @@ class InterpretedSpec extends SparkSpec {
       "nested scopes and two concurrent scopes") {
     val caller = confs
     assert(!interpreted)
-    assert(Interpreted.whenSmall(spark, 1L)(interpreted))
+    assert(Interpreted.run(spark)(interpreted))
     assert(confs == caller)
 
     intercept[IllegalStateException] {
-      Interpreted.whenSmall(spark, 1L)(throw new IllegalStateException())
+      Interpreted.run(spark)(throw new IllegalStateException())
     }
     assert(confs == caller)
 
-    Interpreted.whenSmall(spark, 1L) {
-      Interpreted.whenSmall(spark, 1L)(assert(interpreted))
+    Interpreted.run(spark) {
+      Interpreted.run(spark)(assert(interpreted))
       assert(interpreted, "the outer scope is still open")
     }
     assert(confs == caller)
@@ -65,7 +65,7 @@ class InterpretedSpec extends SparkSpec {
     // An explicitly set caller value is restored as set.
     spark.conf.set("spark.sql.codegen.wholeStage", "true")
     try {
-      Interpreted.whenSmall(spark, 1L)(assert(interpreted))
+      Interpreted.run(spark)(assert(interpreted))
       assert(spark.sessionState.conf.contains("spark.sql.codegen.wholeStage")
         && spark.conf.get("spark.sql.codegen.wholeStage") == "true")
     } finally spark.conf.unset("spark.sql.codegen.wholeStage")
@@ -77,7 +77,7 @@ class InterpretedSpec extends SparkSpec {
     val aOut = new java.util.concurrent.CountDownLatch(1)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def scope(name: String)(afterBothIn: => Unit): Thread = new Thread(() =>
-      Interpreted.whenSmall(spark, 1L) {
+      Interpreted.run(spark) {
         bothIn.countDown()
         bothIn.await()
         afterBothIn
@@ -94,25 +94,19 @@ class InterpretedSpec extends SparkSpec {
     assert(confs == caller)
   }
 
-  test("the arm switches at MaxInputBytes") {
-    val c = Interpreted.MaxInputBytes
-    assert(Interpreted.isSmall(c) && Interpreted.isSmall(c - 1, 1L))
-    assert(!Interpreted.isSmall(c + 1) && !Interpreted.isSmall(c, 1L))
-    assert(!Interpreted.isSmall(Long.MaxValue, Long.MaxValue),
-      "sizes sum without overflow")
-    assert(Interpreted.whenSmall(spark, c)(interpreted))
-    assert(!Interpreted.whenSmall(spark, c + 1)(interpreted))
-  }
-
-  test("the size probes read metadata: missing dirs count 0, a parquet " +
-      "dir its file bytes") {
-    val dir = tmpDir("interpreted-size")
-    spark.range(0, 1000).write.mode("overwrite").parquet(s"$dir/t")
-    val files = new java.io.File(s"$dir/t").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    assert(Interpreted.dirBytes(spark, s"$dir/missing") == 0L)
-    val listed = Interpreted.dirBytes(spark, s"$dir/t", s"$dir/missing")
-    assert(listed >= files && listed < files + 4096) // + _SUCCESS, .crc
-    assert(Interpreted.frameBytes(spark.read.parquet(s"$dir/t")) == files)
+  test("a micro-batch layer runs in the scope, and a fresh silver's " +
+      "affected dates are the recompute's") {
+    val dir = tmpDir("interpreted-layer")
+    Incremental.appendBatch(spark, s"$dir/bronze",
+      spark.range(0, 3).toDF("user_id"), 1L)
+    val day = java.sql.Date.valueOf("2024-01-01")
+    var derivedInScope = false
+    val d = IncrementalSilver.updateDetailed(spark, s"$dir/bronze",
+      s"$dir/silver", None, toSilver = { df =>
+        derivedInScope = interpreted
+        df.withColumn("datetime", lit(day))
+      })
+    assert(derivedInScope && !interpreted)
+    assert(d.watermark.contains(1L) && d.affectedDates == Seq(day))
   }
 }
