@@ -52,12 +52,12 @@ object PageRank {
     * sf0.1 on a 20-node/380-edge graph). Past either bound the
     * distributed co-partitioned join loop runs unchanged — the
     * billion-edge shape. Bounds sized in BYTES, not just rows (r18,
-    * the Reachability gate discipline; the r17 1M-row gate brushed the
-    * default 1 GB spark.driver.maxResultSize): a collected edge row is
-    * two boxed id strings + a Long ≈ 150 B, so 262,144 edges ≈ 40 MB of
-    * transient driver heap per collect — two orders inside the default
-    * driver budget, and the same ceiling the Reachability driver arm
-    * uses. Episode/content graphs are metadata-grain at any corpus size
+    * the Reachability gate discipline): a collected edge row is two
+    * boxed id strings + a Long ≈ 150 B, so the former 1M-row gate
+    * allowed ~150 MB per collect (an order of magnitude inside the
+    * default 1 GB spark.driver.maxResultSize), and 262,144 edges ≈ 40 MB of
+    * transient driver heap — well inside the default driver budget,
+    * and the same ceiling the Reachability driver arm uses. Episode/content graphs are metadata-grain at any corpus size
     * (nodes = catalog entries, edges = distinct adjacent pairs), so the
     * realistic instances stay far inside the gate either way. */
   val DriverRankMaxEdges: Long = 262144L

@@ -3,8 +3,9 @@ package graft.runtime
 import graft.ops.{Scd2, TableDiff}
 import graft.silver.MergeUpsert
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Per-batch CDC change-log publication for merge-maintained tables —
   * [[graft.ops.TableDiff]] composed with the incremental chain
@@ -15,73 +16,89 @@ import org.apache.spark.sql.functions._
   * every change-data-capture consumer — cache invalidation, downstream
   * incremental jobs, audit — needs the per-batch delta as a table.
   *
-  * [[recordBatch]] wraps one maintenance write: persist the scoped
-  * before-image of the target DURABLY (next to the log), run the
-  * write, diff before/after on the table's row key, and publish the
-  * non-`unchanged` rows as the batch's log entry. The log is itself a
-  * `batch_id`-partitioned table (the [[Incremental]] layout, so
-  * [[Incremental.readAsOf]]/`readSince` work on it), landed via
-  * [[MergeUpsert.replacePartitions]] on the batch partition — a
-  * RETRIED batch converges to its own entry instead of appending a
-  * duplicate, and a no-op delta (redelivered ingest) publishes an
-  * EMPTY entry. Entries carry both row images (`o_*`/`n_*`) plus
-  * `changed_cols`, so the log alone supports [[replay]].
+  * [[recordBatch]] wraps one maintenance write and publishes the
+  * non-`unchanged` rows of its scoped before/after diff as the batch's
+  * log entry. The log is itself a `batch_id`-partitioned table (the
+  * [[Incremental]] layout, so [[Incremental.readAsOf]]/`readSince`
+  * work on it); a no-op delta (redelivered ingest) publishes an EMPTY
+  * entry, i.e. no partition. Entries carry both row images
+  * (`o_*`/`n_*`) plus `changed_cols`, so the log alone supports
+  * [[replay]].
+  *
+  * Steady state — the entry is made ONCE, inside the merge: the write
+  * must perform exactly one [[MergeUpsert]] merge on the table (more
+  * or none fails loud). After its staging write and before its first
+  * partition rename, the merge diffs the live partitions it is about
+  * to replace or drop against the staged output, both under
+  * `scope` and both read under known schemas (footer metadata, no
+  * inference job), and commits that entry as a PENDING artifact under
+  * the log root — a hidden `.pending-<batch>` directory whose commit
+  * marker is written last. It then swaps its partitions, and the
+  * publish is one rename of the pending artifact to `batch_id=N`. No
+  * pre-image is copied and nothing is re-read after the swap.
   *
   * Crash/retry safety — the at-least-once replay of the incremental
-  * chain (re-consume from the old watermark) re-runs `write` as an
-  * idempotent no-op, which makes the live table USELESS as a
+  * chain (re-consume from the old watermark) re-runs `write`, often as
+  * an idempotent no-op, which makes the live table USELESS as a
   * before-image on retry (before == after ⇒ empty diff ⇒ the retry
-  * would erase the real entry). Two durable markers close every
+  * would erase the real entry). Three durable states close every
   * window:
   *
-  *  1. The before-image is persisted to a `_changelog_pre` sibling
-  *     directory BEFORE the write runs, and deleted only AFTER the
-  *     entry is published. A retry that finds a committed pre-image
-  *     (crash during the write, or after the write but before the
-  *     publish) diffs against the TRUE pre-batch state and publishes
-  *     the real entry.
-  *  2. A retry that finds the batch's log partition already published
-  *     WITHOUT a pre-image can only mean the batch completed its
-  *     publish (the pre-image outlives every earlier failure mode) —
-  *     the write re-runs for table convergence and the published
-  *     entry is KEPT, never recomputed from a post-batch "before"
-  *     image.
+  *  1. A COMMITTED pending entry `E` (crash anywhere between its
+  *     commit and the publish rename, whatever subset of partitions
+  *     the crash swapped): the retry rebuilds the true pre-state from
+  *     the live table plus `E` — the scoped live rows whose key `E`
+  *     does not name, plus `E`'s `o_` images of its non-`added` rows
+  *     ([[snapshotAt]]'s inverse; exact because every key the crashed
+  *     swap could have changed is named in `E`) — persists it as a
+  *     durable pre-image, drops `E`, and continues on the pre-image
+  *     protocol below. An UNCOMMITTED pending directory is a crash
+  *     before any rename: it is discarded (the writers' recovery sweep
+  *     and the next attempt both drop it) and the table is untouched.
+  *  2. A durable pre-image (the retry-only path): a `_changelog_pre`
+  *     sibling directory, committed by marker BEFORE the write runs
+  *     and deleted only AFTER the entry is published. The retry runs
+  *     the write, diffs the pre-image against the post-write table
+  *     and publishes the real entry through [[MergeUpsert]].
+  *  3. A retry that finds the batch's log partition already published
+  *     WITHOUT a pending entry or pre-image can only mean the batch
+  *     completed its publish — the write re-runs for table convergence
+  *     and the published entry is KEPT, never recomputed from a
+  *     post-batch "before" image.
   *
   * Schema evolution: every snapshot/log read passes
-  * `mergeSchema = true`, so a table evolved additively mid-history
-  * (the opt-in [[MergeUpsert.upsert]] path) reads under the UNION of
-  * its files' schemas — entries published before the evolution carry
-  * NULL for the new columns (the parquet widen-with-nulls semantics),
-  * and [[netDiff]]/[[replay]] operate on the union schema
-  * (ChangeLogSpec proves netDiff == endpoint diff and
-  * replay == snapshot across an evolution between batches).
+  * `mergeSchema = true` (or reads the footers' union), so a table
+  * evolved additively mid-history (the opt-in [[MergeUpsert.upsert]]
+  * path) reads under the UNION of its files' schemas — entries
+  * published before the evolution carry NULL for the new columns (the
+  * parquet widen-with-nulls semantics), and [[netDiff]]/[[replay]]
+  * operate on the union schema (ChangeLogSpec proves netDiff ==
+  * endpoint diff and replay == snapshot across an evolution between
+  * batches).
   *
-  * Scale shape: the before/after reads are scoped to the partitions
-  * the write can touch (the same affected-scope frames the incremental
-  * chain already derives), so the per-batch CDC bill is
-  * O(affected slice) — delta-scaled, like the maintenance it records
-  * (the durable pre-image write costs what the old localCheckpoint
-  * materialization did, paid to the warehouse filesystem instead of
-  * the block manager, and is what buys crash safety); the diff itself
-  * is ONE co-partitioned full-outer join ([[TableDiff.diff]]'s scale
-  * argument), and nothing collects. Unbounded partition growth — one
-  * `batch_id` partition per update forever, ~52k/year at the
-  * reference's 10-minute silver cadence (`airflow/dags/silver_dag
-  * .py:142`) — is bounded by [[checkpoint]], the watermark-safe
-  * collapse of old entries into one net base entry. */
+  * Scale shape: the diff reads only the partitions the merge rewrites
+  * (and, within them, the `scope`), so the per-batch CDC bill is
+  * O(affected slice) — delta-scaled, like the maintenance it records;
+  * the diff itself is ONE co-partitioned full-outer join
+  * ([[TableDiff.diff]]'s scale argument), and nothing collects.
+  * Unbounded partition growth — one `batch_id` partition per update
+  * forever, ~52k/year at the reference's 10-minute silver cadence
+  * (`airflow/dags/silver_dag.py:142`) — is bounded by [[checkpoint]],
+  * the watermark-safe collapse of old entries into one net base
+  * entry. */
 object ChangeLog {
 
   /** The log of the table at `tableDir` lives beside it. */
   def logDir(tableDir: String): String =
     tableDir.stripSuffix("/") + "_changelog"
 
-  /** Pre-images live in a SIBLING directory, never under the log
-    * root: the log's first-ever publish takes [[MergeUpsert]]'s
-    * initial-write branch, whose `mode("overwrite")` clears the whole
-    * log directory — a pre-image stored inside it would be destroyed
-    * BEFORE the entry is durable, re-opening the crash window the
-    * pre-image exists to close (a partial first publish would then
-    * read as "published" and be kept). */
+  /** Pre-images (the retry-only path) live in a SIBLING directory,
+    * never under the log root: the log root is a table, and a
+    * [[MergeUpsert]] first write into it (`mode("overwrite")`) would
+    * destroy anything stored inside it BEFORE the entry is durable.
+    * For the same reason no publish here ever takes that branch: a
+    * first entry lands by renaming its staged directory in, because a
+    * committed pending entry of another batch may live in the root. */
   private def preImagePath(tableDir: String, batchId: Long): Path =
     new Path(logDir(tableDir) + "_pre", s"batch-$batchId")
 
@@ -176,14 +193,179 @@ object ChangeLog {
     other.fields.filterNot(f => df.columns.contains(f.name))
       .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
 
+  /** The pending artifact of batch `batchId`'s entry: a hidden
+    * directory under the log root (invisible to every log read and
+    * listing), renamed to `batch_id=N` to publish. */
+  private def pendingPath(tableDir: String, batchId: Long): Path =
+    new Path(logDir(tableDir), s"$PendingPrefix$batchId")
+
+  private[graft] val PendingPrefix = ".pending-"
+
+  /** Commit marker of a pending entry: written LAST, so a pending
+    * directory without it is a crashed partial write — no partition
+    * was swapped yet, and every sweep drops it. */
+  private[graft] val PendingCommitMarker = "_GRAFT_PENDING_COMMITTED"
+
+  /** The entry a [[recordBatch]] expects its write's merge to build:
+    * bound to the calling thread while `write` runs. */
+  private[graft] final class Capture private[ChangeLog] (
+      val spark: SparkSession, val table: Path, val keys: Seq[String],
+      val scope: DataFrame => DataFrame, val pending: Path) {
+    private[ChangeLog] var merges = 0
+    private[ChangeLog] var committed = false
+  }
+
+  /** Open captures of the calling thread, innermost first. */
+  private val captures = new ThreadLocal[List[Capture]] {
+    override def initialValue(): List[Capture] = Nil
+  }
+
+  /** Called by every [[MergeUpsert]] mode before it touches its
+    * target: the capture of the [[recordBatch]] wrapping a write of
+    * this table, if any, with the merge counted. A second merge of the
+    * same table inside one recordBatch fails loud here, before it
+    * changes anything: one entry per batch is made by one merge. */
+  private[graft] def mergeOf(fs: org.apache.hadoop.fs.FileSystem,
+                             root: Path): Option[Capture] = {
+    val q = fs.makeQualified(root)
+    captures.get.find(_.table == q).map { c =>
+      c.merges += 1
+      require(c.merges == 1,
+        s"the write logged as one batch of ${c.table} merged into it " +
+          "more than once: its entry is made by one merge — split the " +
+          "write into one recordBatch per merge")
+      c
+    }
+  }
+
+  /** Called by the merge after its staging write, before its first
+    * partition rename: diff the scoped live partitions it is about to
+    * replace or drop (`liveDirs`) against the scoped staged output and
+    * commit the entry as `c`'s pending artifact. Both sides read under
+    * known schemas — the stage's, and the live partitions' footers —
+    * so no schema-inference job runs. An empty diff commits nothing
+    * (the empty entry is published as absence). */
+  private[graft] def commitPending(c: Capture,
+                                   fs: org.apache.hadoop.fs.FileSystem,
+                                   root: Path, staging: Path,
+                                   stagedSchema: StructType,
+                                   partitionCol: String,
+                                   staged: Seq[String],
+                                   liveDirs: Seq[String]): Unit = {
+    val spark = c.spark
+    def empty(schema: StructType): DataFrame =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val partField = stagedSchema(partitionCol)
+    val live = liveDirs.map(new Path(root, _)).filter(fs.exists)
+    val before =
+      if (live.isEmpty) empty(stagedSchema)
+      else {
+        val dataSchema = footerSchema(fs, live)
+          .getOrElse(spark.read.option("mergeSchema", "true")
+            .parquet(live.map(_.toString): _*).schema)
+        spark.read.schema(dataSchema.add(partField))
+          .option("basePath", root.toString)
+          .parquet(live.map(_.toString): _*)
+      }
+    val after =
+      if (staged.isEmpty) empty(stagedSchema)
+      else spark.read.schema(stagedSchema).parquet(staging.toString)
+    val (b, a) = (c.scope(before), c.scope(after))
+    // Both images under the UNION schema: the write may evolve the
+    // table additively, and TableDiff's intersection rule would
+    // otherwise DROP the new column from the evolution batch's entry.
+    // A column absent on one side reads as NULL there (the
+    // widen-with-nulls semantics every mergeSchema read applies).
+    if (stageEntry(fs, TableDiff.diff(alignToUnion(b, a.schema),
+        alignToUnion(a, b.schema), c.keys), c.pending)) {
+      touch(fs, new Path(c.pending, PendingCommitMarker))
+      c.committed = true
+    }
+  }
+
+  /** Write the non-`unchanged` rows of `diff` to `pending`; true when
+    * there are any (the footers say so), else the directory is removed:
+    * an empty entry publishes as absence. */
+  private def stageEntry(fs: org.apache.hadoop.fs.FileSystem,
+                         diff: DataFrame, pending: Path): Boolean = {
+    diff.filter(col("diff_status") =!= "unchanged")
+      .write.mode("overwrite").parquet(pending.toString)
+    val rows = footerRows(fs, pending) > 0L
+    if (!rows) fs.delete(pending, true)
+    rows
+  }
+
+  /** Publish a staged entry: one rename to its `batch_id` partition. */
+  private def renameToEntry(fs: org.apache.hadoop.fs.FileSystem,
+                            pending: Path, tableDir: String,
+                            batchId: Long): Unit = {
+    val dst = new Path(logDir(tableDir), s"batch_id=$batchId")
+    if (!fs.rename(pending, dst))
+      throw new java.io.IOException(s"publish rename $pending -> $dst failed")
+  }
+
+  /** Parquet files directly under `dir`, skipping hidden and empty
+    * ones. */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
+    }
+
+  private def footer(fs: org.apache.hadoop.fs.FileSystem,
+                     f: org.apache.hadoop.fs.FileStatus) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromStatus(f, fs.getConf))
+    try r.getFooter finally r.close()
+  }
+
+  /** Rows in the parquet files directly under `dir`, from their
+    * footers — read on the driver, no job. */
+  private def footerRows(fs: org.apache.hadoop.fs.FileSystem,
+                         dir: Path): Long =
+    dataFiles(fs, dir).map { f =>
+      footer(fs, f).getBlocks.toArray.iterator
+        .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata
+          .BlockMetaData].getRowCount).sum
+    }.sum
+
+  /** The union of the Spark schemas stamped into the footers of the
+    * files directly under each of `dirs` (one footer per directory:
+    * every writer here writes a directory in one pass, so its files
+    * share a schema) — read on the driver, no inference job. None when
+    * a directory holds no footer carrying one (a foreign writer's
+    * files, or none at all): the caller then infers. */
+  private def footerSchema(fs: org.apache.hadoop.fs.FileSystem,
+                           dirs: Seq[Path]): Option[StructType] = {
+    val per = dirs.map { d =>
+      dataFiles(fs, d).headOption.flatMap { f =>
+        Option(footer(fs, f).getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+      }
+    }
+    if (per.isEmpty || per.exists(_.isEmpty)) None
+    else Some(per.flatten.reduce { (u, s) =>
+      s.fields.filterNot(f => u.fieldNames.contains(f.name))
+        .foldLeft(u)(_.add(_))
+    })
+  }
+
+  /** The footer key Spark's parquet writer stores the row schema under
+    * (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
   /** Wrap one maintenance write of the keyed table at `tableDir` (row
     * key `keys`, at most one row per key — the [[TableDiff.diff]]
     * snapshot contract): publish what `write` changed as batch
-    * `batchId`'s log entry. `scope` restricts both snapshot reads to
-    * the slice the write can touch; it MUST cover every partition the
-    * write rewrites (a change outside the scope would go unrecorded)
-    * and must be deterministic across retries of the same batch.
-    * Crash/retry protocol in the object scaladoc. */
+    * `batchId`'s log entry. `write` performs exactly one
+    * [[MergeUpsert]] merge on the table (none or more fails loud).
+    * `scope` restricts both images to the slice the write can touch;
+    * it MUST cover every row the write changes (a change outside the
+    * scope would go unrecorded) and must be deterministic across
+    * retries of the same batch. Protocol in the object scaladoc. */
   def recordBatch(spark: SparkSession, tableDir: String,
                   keys: Seq[String], batchId: Long,
                   scope: DataFrame => DataFrame = identity,
@@ -207,18 +389,29 @@ object ChangeLog {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ld = logDir(tableDir)
     val preP = preImagePath(tableDir, batchId)
+    val pending = pendingPath(tableDir, batchId)
+    val pendingCommitted = fs.exists(new Path(pending, PendingCommitMarker))
+    if (pendingCommitted && !fs.exists(new Path(preP, PreCommitMarker)))
+      // A crash after the merge committed its entry: rebuild the true
+      // pre-state from the live table plus the entry, durably, before
+      // anything else runs. The pending entry retires once the
+      // pre-image carrying it is committed.
+      commitPreImage(fs, preP,
+        preStateFrom(spark, fs, rootPath, tableDir, keys, scope, pending))
+    if (fs.exists(pending)) fs.delete(pending, true) // or a partial one
     val preCommitted = fs.exists(new Path(preP, PreCommitMarker))
     val published = fs.exists(new Path(ld, s"batch_id=$batchId"))
     if (published && !preCommitted) {
-      // Retry after a completed publish (the pre-image is deleted only
-      // once the entry is durable): the live table is post-batch, so a
-      // fresh diff would be empty and would ERASE the real entry. Run
-      // the write for table convergence; keep the entry — PROVIDED the
-      // entry is OURS. A different producer's entry at this id is an
-      // id-space collision, not a retry: keeping it would silently
-      // drop THIS write's delta from the log (and recomputing would
-      // silently erase theirs) — either way a consumer's
-      // replay == snapshot contract breaks. Fail loud instead.
+      // Retry after a completed publish (the pending entry and the
+      // pre-image both retire only once the entry is durable): the
+      // live table is post-batch, so a fresh diff would be empty and
+      // would ERASE the real entry. Run the write for table
+      // convergence; keep the entry — PROVIDED the entry is OURS. A
+      // different producer's entry at this id is an id-space
+      // collision, not a retry: keeping it would silently drop THIS
+      // write's delta from the log (and recomputing would silently
+      // erase theirs) — either way a consumer's replay == snapshot
+      // contract breaks. Fail loud instead.
       producerOf(fs, tableDir, batchId).filter(_ != producer)
         .foreach { other =>
           sys.error(s"batch $batchId of $ld was published by producer " +
@@ -230,31 +423,76 @@ object ChangeLog {
             "caller must pick ids past the log's high watermark")
         }
       write
-      return
-    }
-    // The schema of a pre-image this call writes: reading it back then
-    // needs no schema-inference job. One resumed from an earlier
-    // attempt still infers it.
-    val preSchema = if (preCommitted) None else {
-      // First durable step — BEFORE the write mutates the table. Sweep
-      // first: a crashed prior writer's .backup-* partition must be
-      // restored before the before-image is taken, or the batch would
-      // mis-report restored rows as `added`.
-      fs.delete(preP, true) // a partial (uncommitted) leftover
-      val written = Option.when(MergeUpsert.sweepAndHasData(fs, rootPath)) {
-        val pre = scope(
-          spark.read.option("mergeSchema", "true").parquet(tableDir))
-        pre.write.mode("overwrite").parquet(preP.toString)
-        pre.schema
-      }
-      if (!fs.exists(preP)) fs.mkdirs(preP)
-      val hasFooter = fs.listStatus(preP).exists { f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet") && f.getLen > 0
-      }
-      if (!hasFooter) touch(fs, new Path(preP, PreEmptyMarker))
-      touch(fs, new Path(preP, PreCommitMarker))
-      written
-    }
+    } else if (!preCommitted) {
+      // Steady state: the merge makes the entry (object scaladoc).
+      val c = new Capture(spark, fs.makeQualified(rootPath), keys, scope,
+        pending)
+      captures.set(c :: captures.get)
+      try write finally captures.set(captures.get.filterNot(_ eq c))
+      require(c.merges == 1,
+        s"the write logged as batch $batchId of $tableDir performed no " +
+          "MergeUpsert merge on it: nothing can be diffed, and an " +
+          "empty entry must not publish silently")
+      // Stamp the producer (the collision guard above reads it) before
+      // the publish rename: a crash between the two leaves the pending
+      // entry, whose retry re-publishes and re-stamps.
+      writeProducerMarker(fs, tableDir, batchId, producer)
+      if (c.committed) renameToEntry(fs, pending, tableDir, batchId)
+    } else publishFromPreImage(spark, fs, rootPath, tableDir, keys,
+      batchId, scope, producer, preP, pending)(write)
+  }
+
+  /** The batch's true pre-state from the live table and its committed
+    * pending entry `E` ([[snapshotAt]]'s inverse): the scoped live rows
+    * whose key `E` does not name, plus `E`'s `o_` images of its
+    * non-`added` rows. Exact whatever subset of partitions the crashed
+    * swap renamed — a key the crash left changed is named in `E`, and
+    * every key `E` does not name reads the same before and after the
+    * swap. A table with no data left contributes no live rows. */
+  private def preStateFrom(spark: SparkSession,
+                           fs: org.apache.hadoop.fs.FileSystem,
+                           rootPath: Path, tableDir: String,
+                           keys: Seq[String],
+                           scope: DataFrame => DataFrame,
+                           pending: Path): DataFrame = {
+    val e = spark.read.parquet(pending.toString)
+    val vals = valCols(e, keys)
+    val restored = e.filter(col("diff_status") =!= "added")
+      .select(keys.map(col) ++ vals.map(c => col(s"o_$c").as(c)): _*)
+    if (!MergeUpsert.sweepAndHasData(fs, rootPath)) restored
+    else scope(spark.read.option("mergeSchema", "true").parquet(tableDir))
+      .join(e.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(restored, allowMissingColumns = true)
+  }
+
+  /** Persist `pre` as batch pre-image `preP`, committed by its marker
+    * last (a directory without it is a crashed partial write). An empty
+    * `pre` is marked as such — it may leave no footer to read a
+    * schema from. */
+  private def commitPreImage(fs: org.apache.hadoop.fs.FileSystem,
+                             preP: Path, pre: DataFrame): Unit = {
+    fs.delete(preP, true) // a partial (uncommitted) leftover
+    pre.write.mode("overwrite").parquet(preP.toString)
+    if (!fs.exists(preP)) fs.mkdirs(preP)
+    if (footerRows(fs, preP) == 0L) touch(fs, new Path(preP, PreEmptyMarker))
+    touch(fs, new Path(preP, PreCommitMarker))
+  }
+
+  /** The retry-only path: a committed durable pre-image holds the
+    * batch's true pre-state. Run the write, diff the pre-image against
+    * the post-write table, publish the entry, then retire the
+    * pre-image. A first publish stages the entry at `pending` and
+    * renames it in, like the steady state; a republish swaps the
+    * published partition. Neither overwrites the log root, where
+    * another batch's committed pending entry may live. */
+  private def publishFromPreImage(spark: SparkSession,
+                                  fs: org.apache.hadoop.fs.FileSystem,
+                                  rootPath: Path, tableDir: String,
+                                  keys: Seq[String], batchId: Long,
+                                  scope: DataFrame => DataFrame,
+                                  producer: String, preP: Path,
+                                  pending: Path)
+                                 (write: => Unit): Unit = {
     write
     // The post-image read must survive a write that EMPTIED the table
     // (full-horizon retention, a zero-row recompute): an emptied
@@ -269,31 +507,24 @@ object ChangeLog {
     val tableHasData = MergeUpsert.sweepAndHasData(fs, rootPath)
     if (!tableHasData && preEmpty) { fs.delete(preP, true); return }
     val base =
-      if (preEmpty) None
-      else Some(preSchema.fold(spark.read)(spark.read.schema)
-        .parquet(preP.toString))
+      if (preEmpty) None else Some(spark.read.parquet(preP.toString))
     val after =
       if (tableHasData)
         scope(spark.read.option("mergeSchema", "true").parquet(tableDir))
       else base.get.filter(lit(false))
     val before = base.getOrElse(after.filter(lit(false)))
-    // Align both images to the UNION schema before diffing: the write
-    // may have evolved the table additively, and TableDiff's
-    // intersection rule would otherwise DROP the new column from the
-    // evolution batch's entry — the log would never learn the column
-    // existed, and replay would reproduce a pre-evolution table. A
-    // column absent on one side reads as NULL there (the same
-    // widen-with-nulls semantics every mergeSchema read applies), so
-    // the evolution batch honestly logs null→value changes.
-    val entry = TableDiff.diff(alignToUnion(before, after.schema),
-        alignToUnion(after, before.schema), keys)
-      .filter(col("diff_status") =!= "unchanged")
-      .withColumn("batch_id", lit(batchId))
-    MergeUpsert.replacePartitions(spark, ld, entry,
-      Seq(batchId), partitionCol = "batch_id")
-    // Entry durable: stamp the producer (the collision guard above
-    // reads it), then retire the pre-image. A crash between the two
-    // marker steps is benign — the pre-image outlives it, so a retry
+    val diff = TableDiff.diff(alignToUnion(before, after.schema),
+      alignToUnion(after, before.schema), keys)
+    if (fs.exists(new Path(logDir(tableDir), s"batch_id=$batchId")))
+      MergeUpsert.replacePartitions(spark, logDir(tableDir),
+        diff.filter(col("diff_status") =!= "unchanged")
+          .withColumn("batch_id", lit(batchId)),
+        Seq(batchId), partitionCol = "batch_id")
+    else if (stageEntry(fs, diff, pending))
+      renameToEntry(fs, pending, tableDir, batchId)
+    // Entry durable: stamp the producer (the collision guard reads
+    // it), then retire the pre-image. A crash between the two marker
+    // steps is benign — the pre-image outlives it, so a retry
     // re-publishes and re-stamps.
     writeProducerMarker(fs, tableDir, batchId, producer)
     fs.delete(preP, true)
@@ -354,6 +585,63 @@ object ChangeLog {
       }
     }
 
+  /** The log's entries in (`p0`, `p1`], listed once — the ids come
+    * from the partition LISTING, no job. [[rows]] hands each consumer
+    * a FRESH relation over them (two consumers of one span may meet in
+    * one join plan, and a shared relation would be a self-join). A
+    * one-entry span reads that entry's partition alone under its
+    * footer schema: no schema-inference job, no `batch_id` column. A
+    * longer span reads the log under its union schema, filtered to the
+    * span. */
+  final class Span private[ChangeLog] (spark: SparkSession,
+                                       tableDir: String, p0: Long,
+                                       p1: Long, val ids: Seq[Long]) {
+    def single: Boolean = ids.size == 1
+    private lazy val entryDir =
+      new Path(logDir(tableDir), s"batch_id=${ids.head}")
+    private lazy val entrySchema: Option[StructType] = footerSchema(
+      entryDir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      Seq(entryDir))
+    def rows(): DataFrame =
+      if (single)
+        entrySchema.fold(spark.read)(spark.read.schema)
+          .parquet(entryDir.toString)
+      else readSince(spark, tableDir, Some(p0)).get
+        .filter(col("batch_id") <= p1)
+  }
+
+  /** The [[Span]] of the log in (`p0`, `p1`]. `p0` obeys the collapse
+    * boundary ([[readSince]]: behind it fails loud); `p1` past the
+    * head just clamps to it. Fails loud for a table with no log. */
+  def span(spark: SparkSession, tableDir: String, p0: Long,
+           p1: Long = Long.MaxValue): Span = {
+    val all = Incremental.batches(spark, logDir(tableDir))
+    if (all.isEmpty)
+      sys.error(s"no change log under ${logDir(tableDir)} — history " +
+        "and net changes come from the log; enable CDC on the table " +
+        "first")
+    collapseBoundary(spark, tableDir).foreach { b =>
+      require(p0 >= b,
+        s"consumer watermark $p0 predates the collapse boundary $b of " +
+          s"${logDir(tableDir)}: its unconsumed entries were folded " +
+          "into the base entry — re-seed the consumer from a table " +
+          "snapshot, then tail from the boundary")
+    }
+    new Span(spark, tableDir, p0, p1, all.filter(i => i > p0 && i <= p1))
+  }
+
+  /** True when the table publishes a change log with at least one
+    * entry — from the listing, no job (`readLog(...).isDefined`
+    * without the read). */
+  def hasLog(spark: SparkSession, tableDir: String): Boolean =
+    Incremental.batches(spark, logDir(tableDir)).nonEmpty
+
+  /** The NET change of a span ([[netDiff]]). A one-entry span's net is
+    * the entry itself: an entry already holds one non-`unchanged` diff
+    * row per key, which is exactly what the collapse would rebuild. */
+  def net(span: Span, keys: Seq[String]): DataFrame =
+    if (span.single) span.rows() else netDiff(span.rows(), keys)
+
   /** The NET change between two positions: exactly what a consumer
     * holding the table's state at `p0` must apply to hold it at `p1`
     * — [[netDiff]] of the (p0, p1] span, so intermediate churn
@@ -361,14 +649,12 @@ object ChangeLog {
     * nets to nothing, an add-then-remove never appears). `p0` obeys
     * the collapse boundary ([[readSince]]); `p1` past the head just
     * clamps to it. Log-scale: one bounded partition-pruned scan into
-    * the one netDiff aggregate + diff join. */
+    * the one netDiff aggregate + diff join — or, for a one-entry span,
+    * the entry as it is ([[net]]). */
   def changesBetween(spark: SparkSession, tableDir: String,
                      keys: Seq[String], p0: Long, p1: Long): DataFrame = {
     require(p0 <= p1, s"changesBetween($p0, $p1): p0 must be <= p1")
-    val span = readSince(spark, tableDir, Some(p0)).getOrElse(
-      sys.error(s"no change log under ${logDir(tableDir)}"))
-      .filter(col("batch_id") <= p1)
-    netDiff(span, keys)
+    net(span(spark, tableDir, p0, p1), keys)
   }
 
   /** TIME TRAVEL over a merge-maintained table, from the log alone:
@@ -403,21 +689,33 @@ object ChangeLog {
     * removed by orderly (logged) deletion, including whole-table
     * wipes, DO reconstruct. */
   def snapshotAt(spark: SparkSession, tableDir: String,
-                 keys: Seq[String], pos: Long): DataFrame = {
-    val span = readSince(spark, tableDir, Some(pos)).getOrElse(
-      sys.error(s"no change log under ${logDir(tableDir)} — " +
-        "snapshotAt reconstructs history from the log; enable CDC " +
-        "on the table first"))
-    val vals = valCols(span, keys)
-    val firstS = struct(
-      (col("diff_status") +: vals.map(c => col(s"o_$c"))): _*)
-    val first = span.groupBy(keys.map(col): _*)
-      .agg(min_by(firstS, col("batch_id")).as("_first"))
-      .localCheckpoint() // log-scale; feeds both the anti-join and restore
-    val restored = first
-      .filter(col("_first.diff_status") =!= "added")
-      .select(keys.map(col) ++
-        vals.map(c => col(s"_first.o_$c").as(c)): _*)
+                 keys: Seq[String], pos: Long): DataFrame =
+    snapshotAt(spark, tableDir, keys, span(spark, tableDir, pos))
+
+  /** [[snapshotAt]] from a span already listed (its `p0` is the
+    * position). A one-entry span's first-change images are that
+    * entry's rows, so it needs no aggregate and no checkpoint, and the
+    * entry's schema types the current-table read. */
+  def snapshotAt(spark: SparkSession, tableDir: String,
+                 keys: Seq[String], span: Span): DataFrame = {
+    val log = span.rows()
+    val vals = valCols(log, keys)
+    val (touched, restored) =
+      if (span.single)
+        (log.select(keys.map(col): _*),
+          log.filter(col("diff_status") =!= "added")
+            .select(keys.map(col) ++ vals.map(c => col(s"o_$c").as(c)): _*))
+      else {
+        val firstS = struct(
+          (col("diff_status") +: vals.map(c => col(s"o_$c"))): _*)
+        val first = log.groupBy(keys.map(col): _*)
+          .agg(min_by(firstS, col("batch_id")).as("_first"))
+          .localCheckpoint() // log-scale; feeds both the anti-join and restore
+        (first.select(keys.map(col): _*),
+          first.filter(col("_first.diff_status") =!= "added")
+            .select(keys.map(col) ++
+              vals.map(c => col(s"_first.o_$c").as(c)): _*))
+      }
     // A table emptied by a delete-capable write has no parquet footer
     // to read a schema from — the history is then carried ENTIRELY by
     // the log's pre-images (every current row was removed, so every
@@ -426,10 +724,18 @@ object ChangeLog {
     val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!tfs.exists(tp) || !MergeUpsert.sweepAndHasData(tfs, tp))
       return restored
-    val current = spark.read.option("mergeSchema", "true")
-      .parquet(tableDir)
+    // Only the log's columns come out, so a one-entry span reads the
+    // table under the entry's key and `o_` types: no inference job.
+    val current =
+      if (span.single)
+        spark.read.schema(StructType(
+            keys.map(log.schema(_).copy(nullable = true)) ++
+            vals.map(c => log.schema(s"o_$c").copy(name = c,
+              nullable = true))))
+          .parquet(tableDir)
+      else spark.read.option("mergeSchema", "true").parquet(tableDir)
     val untouched = current
-      .join(first.select(keys.map(col): _*), keys, "left_anti")
+      .join(touched, keys, "left_anti")
       .select(keys.map(col) ++ vals.map(col): _*)
     untouched.unionByName(restored, allowMissingColumns = true)
   }

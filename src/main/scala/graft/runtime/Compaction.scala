@@ -104,7 +104,8 @@ object Compaction {
     * [[graft.silver.MergeUpsert.upsert]]. Backups first — a
     * between-renames backup must be restored before its staging twin
     * is discarded — then drop every leftover `.compact-*` /
-    * `.staging-*` / `.trash-*` working directory. Returns the number
+    * `.staging-*` / `.trash-*` working directory and every uncommitted
+    * `.pending-*` change-log entry. Returns the number
     * of directories repaired or removed. */
   private[graft] def recoverySweep(fs: FileSystem, root: Path): Int = {
     var actions = 0
@@ -126,7 +127,13 @@ object Compaction {
       // data is dead, so recovery completes the delete rather than
       // restoring it (MergeUpsert.dropPartitions).
       n.startsWith(".compact-") || n.startsWith(".staging-") ||
-        n.startsWith(".trash-")
+        n.startsWith(".trash-") ||
+        // A change-log root's pending entry (ChangeLog.recordBatch):
+        // an uncommitted one is a crash before any partition swapped,
+        // so it is dead; a COMMITTED one is the only record of a
+        // crashed batch's changes and stays for its retry.
+        (n.startsWith(ChangeLog.PendingPrefix) && !fs.exists(
+          new Path(s.getPath, ChangeLog.PendingCommitMarker)))
     }.foreach { st => fs.delete(st.getPath, true); actions += 1 }
     actions
   }

@@ -287,7 +287,7 @@ object Forget {
     // would stage, with the deletion delta published all the same.
     if (affectedDates.nonEmpty) {
       def cdc(dir: String): Option[Long] =
-        if (ChangeLog.readLog(spark, dir).isDefined) Some(batchId)
+        if (ChangeLog.hasLog(spark, dir)) Some(batchId)
         else None
       readIfData(spark, silverDir) match {
         case Some(silver) =>

@@ -103,9 +103,9 @@ object IncrementalGold {
         def write(): Unit =
           MergeUpsert.replacePartitions(spark, goldDir, stage, affected)
         changeLogBatch match {
-          // CDC publication ([[ChangeLog]]): the log scope is exactly the
-          // affected-date set this write can rewrite, so the before/after
-          // snapshots stay delta-scaled. `changeLogView` lets a table log
+          // CDC publication ([[ChangeLog]]): the merge diffs exactly the
+          // affected-date partitions it rewrites, and the log scope names
+          // the same set. `changeLogView` lets a table log
           // at its CONTRACT grain (the sketch gold drops the serialized
           // bytes — build-order-dependent — and logs the estimate).
           case Some(b) => ChangeLog.recordBatch(spark, goldDir,

@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * codegen's per-row speed wins back on silver and some date golds;
   * no workload measures that size yet (ROADMAP item 2).
   *
-  * The scope sets two session confs and restores the caller's values
+  * The scope sets three session confs and restores the caller's values
   * when the last open scope on that session exits, also on exception:
   *  - `spark.sql.codegen.wholeStage=false`;
   *  - `spark.sql.codegen.factoryMode=NO_CODEGEN`, an INTERNAL conf
@@ -24,16 +24,27 @@ import org.apache.spark.sql.SparkSession
   *    projections, predicates and orderings to their interpreted
   *    forms; Spark's own test harness uses it to run its suites
   *    interpreted. The Spark version is pinned by the build's local
-  *    jars; InterpretedSpec fails if the key stops taking effect.
-  * The scope changes no plan and no code path of the engine: the same
-  * physical operators run, evaluated instead of compiled. Queries
-  * another thread runs on the same session while a scope is open run
-  * interpreted too; they are correct either way. */
+  *    jars; InterpretedSpec fails if the key stops taking effect;
+  *  - `spark.sql.optimizer.dynamicPartitionPruning.enabled=false`.
+  *    Interpreted, a dynamic-pruning filter that the optimizer pushes
+  *    through a union into a branch that is not a partitioned scan
+  *    fails its task ("IN dynamicpruning#… has not finished"; the same
+  *    plan compiled runs). A join view's span-start state is such a
+  *    union (the live rows a one-entry log span does not name, plus
+  *    the entry's old images), semi-joined to a moving dim's keys on
+  *    the fact's partition column; StarJoinViewSpec pins it. At delta
+  *    size the pruning saves nothing worth its broadcast subquery.
+  * Apart from the dropped pruning filters the scope changes no plan
+  * and no code path of the engine: the same physical operators run,
+  * evaluated instead of compiled. Queries another thread runs on the
+  * same session while a scope is open run interpreted too; they are
+  * correct either way. */
 object Interpreted {
 
   private val Confs = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false")
 
   /** Open scopes per session, and the caller's conf values the last
     * one to exit restores. Identity-keyed: a session's conf is its

@@ -95,7 +95,7 @@ object Pipeline {
     // snapshot, then ChangeLog.checkpoint/delete).
     stage("cdc_guard") {
       loggedTables.map(_._1).foreach { t =>
-        require(ChangeLog.readLog(spark, s"$warehouseDir/$t").isEmpty,
+        require(!ChangeLog.hasLog(spark, s"$warehouseDir/$t"),
           s"$warehouseDir/$t has a CDC change log: a full recompute " +
             "would rewrite the table without publishing its delta, " +
             "breaking every log consumer's replay contract — run " +
@@ -467,7 +467,7 @@ object Pipeline {
                   pos: Long): Map[String, org.apache.spark.sql.DataFrame] =
     loggedTables.flatMap { case (t, keys) =>
       val dir = s"$warehouseDir/$t"
-      if (ChangeLog.readLog(spark, dir).isDefined)
+      if (ChangeLog.hasLog(spark, dir))
         Some(t -> ChangeLog.snapshotAt(spark, dir, keys, pos))
       else None
     }.toMap

@@ -139,7 +139,7 @@ object Retention {
       "gold_platform_device_daily", "gold_country_daily",
       "gold_user_sketch")
     val willPublish = aggGolds.exists { t =>
-      ChangeLog.readLog(spark, s"$warehouseDir/$t").isDefined &&
+      ChangeLog.hasLog(spark, s"$warehouseDir/$t") &&
         readIfData(spark, s"$warehouseDir/$t")
           .exists(d => !d.filter(oldDt).isEmpty)
     }
@@ -285,7 +285,7 @@ object Retention {
         receipts += (t -> n)
         if (dates.nonEmpty) {
           val (grain, view) = grains(t)
-          val cdc = if (ChangeLog.readLog(spark, dir).isDefined)
+          val cdc = if (ChangeLog.hasLog(spark, dir))
             Some(batchId) else None
           IncrementalGold.dateScopedPurge(spark, dir, dates, grain,
             backDays = 0, fwdDays = 0, changeLogBatch = cdc,

@@ -323,34 +323,37 @@ object StarJoinView {
       * telescopes from ANY starting vector (each term's identity holds
       * per side independently), which is what lets
       * [[refreshPartitioned]] top up straggler partitions from their
-      * OWN vectors. readSince fails loud when a position predates its
+      * OWN vectors. ChangeLog.span fails loud when a position predates its
       * log's collapse boundary — unreachable while the view is
       * registered. */
     def delta(pos: Seq[Long], heads: Seq[Long]): DataFrame = {
-      // An UNLOGGED side never moves: its span-start state IS its
-      // current state, read directly — snapshotAt needs a log and
-      // fails loud without one (the thunks are lazy, so a side whose
-      // start state no term needs never pays the check either).
-      def startState(dir: String, keys: Seq[String], p: Long): DataFrame =
-        if (ChangeLog.readLog(spark, dir).isEmpty) read(dir)
-        else ChangeLog.snapshotAt(spark, dir, keys, p)
-      def net(dir: String, keys: Seq[String], i: Int): Option[DataFrame] =
-        if (pos(i) >= heads(i)) None
-        else Some(ChangeLog.netDiff(
-          ChangeLog.readSince(spark, dir, Some(pos(i))).get, keys))
-      val fNet = net(factDir, fKeys, 0)
+      // Each moving log is listed ONCE: its span up to the head read
+      // at open() feeds both the side's net and its span-start state.
+      // A side that did not move — including an UNLOGGED side (head
+      // −1 from open()'s listing) — is at its current state, read
+      // directly (the thunks are lazy, so a side whose start state no
+      // term needs never pays a read either).
+      val spans = inputs.zipWithIndex.map { case ((dir, _), i) =>
+        Option.when(pos(i) < heads(i))(
+          ChangeLog.span(spark, dir, pos(i), heads(i)))
+      }
+      def startState(dir: String, keys: Seq[String], i: Int): DataFrame =
+        spans(i).fold(read(dir))(ChangeLog.snapshotAt(spark, dir, keys, _))
+      def net(keys: Seq[String], i: Int): Option[DataFrame] =
+        spans(i).map(ChangeLog.net(_, keys))
+      val fNet = net(fKeys, 0)
         .map(projectNet(_, fKeys, allJoinKeys, fCols))
       val sides = dims.zipWithIndex.map { case (d, i) =>
         CdcStarView.Side(d.keys, d.joinKeys,
           projectPlain(read(d.dir), d.keys, d.joinKeys, d.cols),
-          net = net(d.dir, d.keys, i + 1)
+          net = net(d.keys, i + 1)
             .map(projectNet(_, d.keys, d.joinKeys, d.cols)),
           atStart = () => projectPlain(
-            startState(d.dir, d.keys, pos(i + 1)), d.keys, d.joinKeys,
+            startState(d.dir, d.keys, i + 1), d.keys, d.joinKeys,
             d.cols))
       }
       def fStart(): DataFrame = projectPlain(
-        startState(factDir, fKeys, pos.head), fKeys, allJoinKeys, fCols)
+        startState(factDir, fKeys, 0), fKeys, allJoinKeys, fCols)
       if (joinType == "left")
         CdcStarView.leftStarGroupDelta(fNet, fKeys,
           fAtStart = fStart _, sides, viewDims, measures)

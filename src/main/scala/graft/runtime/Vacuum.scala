@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * [[Compaction.recoverySweep]] first) — the correctness story never
   * depends on this object. What the per-writer sweep cannot cover is
   * a table NOBODY writes again: a crashed writer's `.backup-*` /
-  * `.staging-*` / `.compact-*` / `.trash-*` entries linger, invisible
+  * `.staging-*` / `.compact-*` / `.trash-*` entries (and a change
+  * log's uncommitted `.pending-*` entry) linger, invisible
   * to reads (dot-prefixed) but holding disk — and a between-renames
   * backup holds the ONLY copy of a partition that reads as MISSING
   * until something restores it. At warehouse scale "every table gets

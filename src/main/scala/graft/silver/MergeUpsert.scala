@@ -48,10 +48,9 @@ object MergeUpsert {
   def upsert(spark: SparkSession, targetDir: String, stage: DataFrame,
              keyCols: Seq[String], partitionCol: String = "datetime",
              evolveSchema: Boolean = false): Unit = {
-    val rootPath = new Path(targetDir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sweepAndHasData(fs, rootPath)) {
-      initialWrite(spark, targetDir, stage, partitionCol)
+    val t = open(spark, targetDir)
+    if (!sweepAndHasData(t.fs, t.root)) {
+      initialWrite(spark, t, stage, partitionCol)
     } else {
       // Affected partitions only: metadata-scale collect (dates, not rows).
       val affected = stage.select(col(partitionCol)).distinct()
@@ -72,7 +71,7 @@ object MergeUpsert {
         .unionByName(stage, allowMissingColumns = evolveSchema)
       // Plain upsert never deletes a partition: every affected value
       // has staged rows by construction, so dropEmpty = Nil.
-      writeAndSwap(fs, rootPath, merged, partitionCol, Nil)
+      writeAndSwap(t, merged, partitionCol, Nil)
     }
   }
 
@@ -102,10 +101,9 @@ object MergeUpsert {
   def upsertScoped(spark: SparkSession, targetDir: String, stage: DataFrame,
                    scopeCols: Seq[String], scope: DataFrame,
                    partitionCol: String = "datetime"): Option[Seq[Any]] = {
-    val rootPath = new Path(targetDir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sweepAndHasData(fs, rootPath)) {
-      initialWrite(spark, targetDir, stage, partitionCol)
+    val t = open(spark, targetDir)
+    if (!sweepAndHasData(t.fs, t.root)) {
+      initialWrite(spark, t, stage, partitionCol)
       None
     } else {
       val target = spark.read.option("mergeSchema", "true").parquet(targetDir)
@@ -122,7 +120,7 @@ object MergeUpsert {
         val kept = target.filter(affectedPredicate(partitionCol, affected))
           .join(scope.select(scopeCols.map(col): _*).distinct(),
             scopeCols, "left_anti")
-        writeAndSwap(fs, rootPath, kept.unionByName(stage),
+        writeAndSwap(t, kept.unionByName(stage),
           partitionCol, affected.map(partitionDirName(partitionCol, _)))
       }
       Some(affected)
@@ -142,12 +140,11 @@ object MergeUpsert {
   def replacePartitions(spark: SparkSession, targetDir: String,
                         stage: DataFrame, partitionVals: Seq[Any],
                         partitionCol: String = "datetime"): Unit = {
-    val rootPath = new Path(targetDir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sweepAndHasData(fs, rootPath))
-      initialWrite(spark, targetDir, stage, partitionCol)
+    val t = open(spark, targetDir)
+    if (!sweepAndHasData(t.fs, t.root))
+      initialWrite(spark, t, stage, partitionCol)
     else // names encoded before the write: a bad type fails first
-      writeAndSwap(fs, rootPath, stage, partitionCol,
+      writeAndSwap(t, stage, partitionCol,
         partitionVals.distinct.map(partitionDirName(partitionCol, _)))
   }
 
@@ -165,16 +162,29 @@ object MergeUpsert {
     * protocol; idempotent. */
   def replaceAll(spark: SparkSession, targetDir: String, stage: DataFrame,
                  partitionCol: String = "datetime"): Unit = {
-    val rootPath = new Path(targetDir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sweepAndHasData(fs, rootPath)) {
-      initialWrite(spark, targetDir, stage, partitionCol)
+    val t = open(spark, targetDir)
+    if (!sweepAndHasData(t.fs, t.root)) {
+      initialWrite(spark, t, stage, partitionCol)
     } else {
-      val existingDirs = fs.listStatus(rootPath)
+      val existingDirs = t.fs.listStatus(t.root)
         .filter(_.isDirectory).map(_.getPath.getName)
         .filter(_.startsWith(s"$partitionCol=")).toIndexedSeq
-      writeAndSwap(fs, rootPath, stage, partitionCol, existingDirs)
+      writeAndSwap(t, stage, partitionCol, existingDirs)
     }
+  }
+
+  /** One merge's target: its root, filesystem, and the change-log
+    * capture of the [[graft.runtime.ChangeLog.recordBatch]] wrapping
+    * this write of it, if any — the merge then makes the batch's log
+    * entry before its swap ([[writeAndSwap]]). */
+  private final case class Target(root: Path,
+                                  fs: org.apache.hadoop.fs.FileSystem,
+                                  log: Option[graft.runtime.ChangeLog.Capture])
+
+  private def open(spark: SparkSession, targetDir: String): Target = {
+    val root = new Path(targetDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Target(root, fs, graft.runtime.ChangeLog.mergeOf(fs, root))
   }
 
   /** Shared preamble of every merge mode: heal a previous writer's
@@ -278,10 +288,10 @@ object MergeUpsert {
     * partition-path encoding exactly (escaped chars, timestamp
     * formatting, null → __HIVE_DEFAULT_PARTITION__); only the delete
     * side, which has nothing to list, uses [[partitionDirName]]. */
-  private def writeAndSwap(fs: org.apache.hadoop.fs.FileSystem,
-                           rootPath: Path, merged: DataFrame,
+  private def writeAndSwap(t: Target, merged: DataFrame,
                            partitionCol: String,
                            dropIfEmpty: Seq[String]): Unit = {
+    val (fs, rootPath) = (t.fs, t.root)
     val uuid = java.util.UUID.randomUUID().toString
     val stagingDir = new Path(rootPath, s".staging-$uuid")
     merged.write.partitionBy(partitionCol).mode("overwrite")
@@ -294,7 +304,14 @@ object MergeUpsert {
         .filter(s => s.isDirectory &&
           s.getPath.getName.startsWith(s"$partitionCol="))
         .map(_.getPath.getName)
+      // A logged write: its entry (live partitions about to be replaced
+      // or dropped vs the staged output) commits BEFORE the first
+      // rename, so every crash window below leaves it durable.
+      t.log.foreach(graft.runtime.ChangeLog.commitPending(_, fs, rootPath,
+        stagingDir, merged.schema, partitionCol, written.toSeq,
+        (written ++ dropIfEmpty).distinct.toSeq))
       written.foreach { part =>
+        beforeSwap.get()(part)
         val tgt = new Path(rootPath, part)
         val stg = new Path(stagingDir, part)
         // Backup name ENCODES the partition (shared BackupSep
@@ -322,15 +339,25 @@ object MergeUpsert {
     } finally fs.delete(stagingDir, true)
   }
 
+  /** Test seam: runs with each partition's name before its swap, on
+    * the writing thread (the crash-window specs throw from it). */
+  private[graft] val beforeSwap = new ThreadLocal[String => Unit] {
+    override def initialValue(): String => Unit = _ => ()
+  }
+
   /** The shared initial-write branch: a plain partitioned overwrite,
     * followed by the same writer-maintained skipping reconcile as
     * [[writeAndSwap]] (all leaves — an initial write after
     * [[graft.runtime.DataSkipping.enablePartitioned]] happens when a
-    * table was emptied and re-seeded). */
-  private def initialWrite(spark: SparkSession, targetDir: String,
-                           stage: DataFrame, partitionCol: String): Unit = {
-    stage.write.partitionBy(partitionCol).mode("overwrite")
-      .parquet(targetDir)
-    graft.runtime.DataSkipping.maintain(spark, targetDir, Seq.empty)
-  }
+    * table was emptied and re-seeded). A LOGGED first write goes
+    * through [[writeAndSwap]] instead, so its entry (every row
+    * `added`) commits before any partition lands. */
+  private def initialWrite(spark: SparkSession, t: Target,
+                           stage: DataFrame, partitionCol: String): Unit =
+    if (t.log.isDefined) writeAndSwap(t, stage, partitionCol, Nil)
+    else {
+      stage.write.partitionBy(partitionCol).mode("overwrite")
+        .parquet(t.root.toString)
+      graft.runtime.DataSkipping.maintain(spark, t.root.toString, Seq.empty)
+    }
 }

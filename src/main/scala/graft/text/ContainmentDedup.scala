@@ -205,6 +205,28 @@ object ContainmentDedup {
     if (est <= PrefixBudgetPerDoc * nDocs) ExactArm else CappedArm
   }
 
+  /** The one stats action that gates every hint downstream: row count,
+    * total token count (trigram-broadcast gate), and the prefix side's
+    * bytes (prefix-broadcast gate). The prefix side holds
+    * Σ_doc (n − ⌈t′·n⌉ + 1) rows; each costs ~64 B of fixed-width
+    * fields (token, id, n, the two block keys' slots and word padding)
+    * plus its doc's `lang` and `source` bytes, summed per slot here — a
+    * flat per-row figure would under-count long block keys. */
+  private[graft] def gateStats(base: DataFrame,
+                               threshold: Double): (Long, Long, Long) = {
+    val tp = tPrime(threshold)
+    val n = size(col("tg"))
+    val slots = when(n > 0,
+      n.cast("long") - ceil(lit(tp) * n).cast("long") + lit(1L))
+      .otherwise(lit(0L))
+    val keyBytes = coalesce(octet_length(col("lang")), lit(0)) +
+      coalesce(octet_length(col("source")), lit(0))
+    val r = base.agg(count(lit(1)),
+      coalesce(sum(n), lit(0L)),
+      coalesce(sum(slots * (lit(64L) + keyBytes)), lit(0L))).head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
   /** The candidates → confirm pipeline WITHOUT the terminal checkpoint —
     * the plan-evidence surface (graft.Explain `inner:dedup_containment`).
     * Leaves the trigram/token persists live; [[pairs]] wraps it and
@@ -213,18 +235,7 @@ object ContainmentDedup {
       threshold: Double = 0.7, arm: Arm = AutoArm)
       : (DataFrame, Seq[DataFrame]) = {
     val base = TextOps.hashedTrigrams(s, dir).persist()
-    val tp = tPrime(threshold)
-    // One stats action gates every hint downstream: row count, total
-    // token count (trigram-broadcast gate), and the total prefix-slot
-    // count Σ_doc (n − ⌈t′·n⌉ + 1) (prefix-broadcast gate).
-    val r = base.agg(count(lit(1)),
-      coalesce(sum(size(col("tg"))), lit(0L)),
-      coalesce(sum(when(size(col("tg")) > 0,
-        size(col("tg")).cast("long")
-          - ceil(lit(tp) * size(col("tg"))).cast("long") + lit(1L))
-        .otherwise(lit(0L))), lit(0L))).head()
-    val (nDocs, totTokens, prefixSlots) =
-      (r.getLong(0), r.getLong(1), r.getLong(2))
+    val (nDocs, totTokens, prefixBytes) = gateStats(base, threshold)
     val pref = prefixPlan(base, threshold).persist()
     val capped = arm match {
       case ExactArm  => false
@@ -235,9 +246,8 @@ object ContainmentDedup {
     // One linear candidates → confirm plan; the narrow confirmed output
     // is the only materialization, after which the token/trigram caches
     // release instead of leaking into long-lived sessions.
-    // ~64 B per prefix row (two dims + token + id + n).
     val cands = candidates(pref, probeTokens(base), threshold, capped,
-      prefixSlots * 64L)
+      prefixBytes)
     // Pair dedup BEFORE the confirm: a pair sharing k prefix tokens is
     // generated k times (measured 13× at sf0.1 — 3.27 M pre- vs 251 k
     // post-distinct), and re-scoring the duplicates through the confirm

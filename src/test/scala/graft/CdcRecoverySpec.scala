@@ -1,8 +1,9 @@
 package graft
 
 import graft.ops.TableDiff
-import graft.runtime.{ChangeLog, Incremental}
+import graft.runtime.{ChangeLog, Compaction, Incremental, Vacuum}
 import graft.silver.MergeUpsert
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,8 +11,10 @@ import org.apache.spark.sql.types._
 /** The change log's durability and lifecycle contracts, each against a
   * tiny keyed table so the failure injection is surgical:
   *
-  *  - crash/retry protocol of [[ChangeLog.recordBatch]] (the durable
-  *    pre-image + keep-on-republish rules): a retry after a PARTIAL
+  *  - crash/retry protocol of [[ChangeLog.recordBatch]] (the pending
+  *    entry the merge commits before its swap, the durable pre-image
+  *    a retry rebuilds from it, the keep-on-republish rule, and the
+  *    sweeps' handling of pending entries): a retry after a PARTIAL
   *    chain failure must not erase the published entry, and a crash
   *    between the table write and the log publish must still produce
   *    the REAL entry on retry — both were silent-data-loss windows of
@@ -127,6 +130,174 @@ class CdcRecoverySpec extends SparkSpec {
     assertSame(
       ChangeLog.replay(df((1L, "a", "g1"), (2L, "b", "g2")), e, Seq("id")),
       spark.read.parquet(dir), "replay after crash-retry")
+  }
+
+  private lazy val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+    spark.sparkContext.hadoopConfiguration)
+
+  private def pendingOf(dir: String, b: Long): Path =
+    new Path(ChangeLog.logDir(dir), s"${ChangeLog.PendingPrefix}$b")
+
+  private def committedPending(dir: String, b: Long): Boolean =
+    fs.exists(new Path(pendingOf(dir, b), ChangeLog.PendingCommitMarker))
+
+  private def entryOf(dir: String, b: Long): DataFrame =
+    ChangeLog.readLog(spark, dir).get
+      .filter(col("batch_id") === b).drop("batch_id")
+
+  private def diffOf(before: DataFrame, after: DataFrame): DataFrame =
+    TableDiff.diff(before, after, Seq("id"))
+      .filter(col("diff_status") =!= "unchanged")
+
+  /** Run `body`, which must crash just before the merge's `n`-th
+    * partition swap (1-based) — the writer dying at that point of its
+    * rename sequence. */
+  private def crashBeforeSwap(n: Int)(body: => Unit): Unit = {
+    var swaps = 0
+    MergeUpsert.beforeSwap.set { part =>
+      swaps += 1
+      if (swaps == n)
+        throw new IllegalStateException(s"crash before swapping $part")
+    }
+    try {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.startsWith("crash before swapping"))
+    } finally MergeUpsert.beforeSwap.remove()
+  }
+
+  private def logged(dir: String, b: Long, state: DataFrame): Unit =
+    ChangeLog.recordBatch(spark, dir, Seq("id"), b)(
+      MergeUpsert.replaceAll(spark, dir, state, partitionCol = "grp"))
+
+  private val state0 = Seq((1L, "a", "g1"), (2L, "b", "g2"), (3L, "c", "g3"))
+  private val state1 = Seq((1L, "a1", "g1"), (2L, "b1", "g2"),
+    (4L, "d", "g3"))
+  private val state2 = Seq((1L, "a2", "g1"), (3L, "c", "g3"),
+    (5L, "e", "g4"))
+
+  test("folded protocol: a crash after the pending entry commits and " +
+      "before the first rename leaves the table untouched, and a " +
+      "retry with a different write publishes exactly its diff") {
+    val dir = tmpDir("cdc-fold-first") + "/t"
+    MergeUpsert.replaceAll(spark, dir, df(state0: _*), partitionCol = "grp")
+    crashBeforeSwap(1)(logged(dir, 1L, df(state1: _*)))
+    assertSame(spark.read.parquet(dir), df(state0: _*),
+      "table after a crash before any rename")
+    assert(ChangeLog.readLog(spark, dir).isEmpty,
+      "a crashed batch must not have published")
+    assert(committedPending(dir, 1L),
+      "the entry must be committed before the first rename")
+    logged(dir, 1L, df(state2: _*))
+    assertSame(entryOf(dir, 1L), diffOf(df(state0: _*), df(state2: _*)),
+      "entry of the retried batch")
+    assert(!fs.exists(pendingOf(dir, 1L)))
+    assertSame(spark.read.parquet(dir), df(state2: _*), "table")
+  }
+
+  test("folded protocol: a crash between two partition renames is " +
+      "healed exactly by the retry — the pre-state comes from the live " +
+      "table plus the committed entry") {
+    val dir = tmpDir("cdc-fold-mid") + "/t"
+    MergeUpsert.replaceAll(spark, dir, df(state0: _*), partitionCol = "grp")
+    crashBeforeSwap(2)(logged(dir, 1L, df(state1: _*)))
+    // One partition swapped, the others not: the live table is neither
+    // the pre- nor the post-state.
+    val mixed = spark.read.parquet(dir).localCheckpoint()
+    assert(sortedCells(mixed) != sortedCells(df(state0: _*)) &&
+      sortedCells(mixed) != sortedCells(df(state1: _*)))
+    assert(committedPending(dir, 1L))
+    logged(dir, 1L, df(state1: _*))
+    assertSame(entryOf(dir, 1L), diffOf(df(state0: _*), df(state1: _*)),
+      "entry after a between-renames crash")
+    assertSame(spark.read.parquet(dir), df(state1: _*), "table")
+    // The pre-image the retry rebuilt retired with the publish: a
+    // further retry is the keep-on-republish path.
+    logged(dir, 1L, df(state1: _*))
+    assertSame(entryOf(dir, 1L), diffOf(df(state0: _*), df(state1: _*)),
+      "entry after a second retry")
+  }
+
+  test("folded protocol: a retry whose write differs from the crashed " +
+      "attempt's publishes exactly TableDiff(true pre-state, final " +
+      "state)") {
+    val dir = tmpDir("cdc-fold-differ") + "/t"
+    MergeUpsert.replaceAll(spark, dir, df(state0: _*), partitionCol = "grp")
+    crashBeforeSwap(2)(logged(dir, 1L, df(state1: _*)))
+    logged(dir, 1L, df(state2: _*))
+    val e = entryOf(dir, 1L)
+    assertSame(e, diffOf(df(state0: _*), df(state2: _*)),
+      "entry of a retry with a different write")
+    assertSame(ChangeLog.replay(df(state0: _*),
+        ChangeLog.readLog(spark, dir).get, Seq("id")),
+      spark.read.parquet(dir), "replay after the retry")
+  }
+
+  test("folded protocol: the first publish into a table with no log " +
+      "root yet — a first write that crashed mid-swap — retries to an " +
+      "entry that adds every row") {
+    val dir = tmpDir("cdc-fold-new") + "/t"
+    crashBeforeSwap(2)(logged(dir, 1L, df(state1: _*)))
+    val ld = new Path(ChangeLog.logDir(dir))
+    assert(fs.listStatus(ld).map(_.getPath.getName).toSeq ===
+      Seq(s"${ChangeLog.PendingPrefix}1"),
+      "the log root holds the pending entry alone")
+    logged(dir, 1L, df(state1: _*))
+    assertSame(entryOf(dir, 1L), diffOf(df(), df(state1: _*)),
+      "first entry after a crashed first write")
+    // The next batch publishes beside it (no overwrite of the root).
+    logged(dir, 2L, df(state2: _*))
+    assert(Incremental.batches(spark, ChangeLog.logDir(dir)) ===
+      Seq(1L, 2L))
+    assertSame(entryOf(dir, 2L), diffOf(df(state1: _*), df(state2: _*)),
+      "second entry")
+  }
+
+  test("folded protocol: Vacuum.sweep and Compaction keep a committed " +
+      "pending entry and delete an uncommitted one") {
+    val wh = tmpDir("cdc-fold-sweep")
+    val dir = s"$wh/t"
+    MergeUpsert.replaceAll(spark, dir, df(state0: _*), partitionCol = "grp")
+    crashBeforeSwap(2)(logged(dir, 1L, df(state1: _*)))
+    val ld = ChangeLog.logDir(dir)
+    // A crash while writing an entry: files, no commit marker.
+    def plantPartial(): Path = {
+      val p = new Path(ld, s"${ChangeLog.PendingPrefix}9")
+      fs.mkdirs(p)
+      fs.create(new Path(p, "part-00000.parquet")).close()
+      p
+    }
+    val partial = plantPartial()
+    Vacuum.sweep(spark, wh)
+    assert(committedPending(dir, 1L), "vacuum dropped a committed entry")
+    assert(!fs.exists(partial), "vacuum kept an uncommitted entry")
+    plantPartial()
+    Compaction.compact(spark, ld)
+    assert(committedPending(dir, 1L),
+      "compaction dropped a committed entry")
+    assert(!fs.exists(partial), "compaction kept an uncommitted entry")
+    logged(dir, 1L, df(state1: _*))
+    assertSame(entryOf(dir, 1L), diffOf(df(state0: _*), df(state1: _*)),
+      "entry after the sweeps and the retry")
+  }
+
+  test("a logged write must merge into its table exactly once") {
+    val dir = tmpDir("cdc-fold-merges") + "/t"
+    MergeUpsert.replaceAll(spark, dir, df(state0: _*), partitionCol = "grp")
+    val none = intercept[IllegalArgumentException] {
+      ChangeLog.recordBatch(spark, dir, Seq("id"), 1L)(())
+    }
+    assert(none.getMessage.contains("performed no MergeUpsert merge"))
+    val twice = intercept[IllegalArgumentException] {
+      ChangeLog.recordBatch(spark, dir, Seq("id"), 1L) {
+        MergeUpsert.replaceAll(spark, dir, df(state1: _*),
+          partitionCol = "grp")
+        MergeUpsert.replaceAll(spark, dir, df(state2: _*),
+          partitionCol = "grp")
+      }
+    }
+    assert(twice.getMessage.contains("more than once"))
+    assert(ChangeLog.readLog(spark, dir).isEmpty,
+      "neither write may publish an entry")
   }
 
   test("additive schema evolution mid-history: netDiff == endpoint " +

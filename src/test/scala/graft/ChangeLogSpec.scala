@@ -3,6 +3,7 @@ package graft
 import graft.ingest.Events
 import graft.ops.TableDiff
 import graft.runtime.{ChangeLog, Incremental, Pipeline}
+import graft.streaming.SilverLoop
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,6 +17,10 @@ import org.apache.spark.sql.functions._
   * including a REDELIVERED batch (silver unchanged ⇒ every gold's log
   * entry is empty) and a late re-stamped event that DELETES a
   * (datetime, user) gold grain (the log carries the `removed` row).
+  * One-entry spans of those logs take the entry as it is
+  * ([[ChangeLog.net]], [[ChangeLog.snapshotAt]]): the same net as the
+  * general collapse, the same snapshot as the frozen one; and the gold
+  * join view refreshed over a multi-entry span equals its recompute.
   * Snapshots are frozen table reads — the endpoint-snapshot role
   * `Incremental.readAsOf` plays for batch-logged tables, taken here by
   * materializing the merge-maintained table after each batch. */
@@ -85,12 +90,16 @@ class ChangeLogSpec extends SparkSpec {
     var wm = Pipeline.runDailyIncremental(spark, bronze, wh, None)
     assert(wm.contains(1L))
     val snap1 = golds.map { case (t, _) => t -> freeze(wh, t) }.toMap
+    // The gold join view, seeded here and refreshed only after batch 4:
+    // its refresh then reads a multi-entry span of each log.
+    SilverLoop.refreshGoldJoinView(spark, wh)
 
     // Batch 2: the remaining days.
     Incremental.appendBatch(spark, bronze,
       raw.filter(to_date(col("ts")) >= lit(cut)), 2L)
     wm = Pipeline.runDailyIncremental(spark, bronze, wh, wm)
     assert(wm.contains(2L))
+    val snap2 = golds.map { case (t, _) => t -> freeze(wh, t) }.toMap
 
     // Batch 3: REDELIVERY — the first date's events arrive again,
     // byte-identical. Silver converges to itself, so every gold's
@@ -143,6 +152,48 @@ class ChangeLogSpec extends SparkSpec {
       assertSame(ChangeLog.replay(snap1(table), span, keys),
         snapF(table), s"$table replay")
     }
+
+    // One-entry spans take the entry as it is: every one-entry span's
+    // net equals the general collapse, and snapshotAt over a one-entry
+    // span equals the frozen snapshot (as the multi-entry one does).
+    for ((table, keys) <- golds) {
+      val dir = s"$wh/$table"
+      val log = ChangeLog.readLog(spark, dir).get
+      val ids = Incremental.batches(spark, ChangeLog.logDir(dir))
+      val spans = (0L +: ids).zip(ids).flatMap { case (prev, id) =>
+        Seq(prev -> id, (id - 1L) -> id).distinct }
+      for ((p0, p1) <- spans) {
+        val span = ChangeLog.span(spark, dir, p0, p1)
+        assert(span.single, s"$table ($p0, $p1] is one entry")
+        assertSame(ChangeLog.net(span, keys), ChangeLog.netDiff(
+            log.filter(col("batch_id") > p0 && col("batch_id") <= p1), keys),
+          s"$table one-entry net over ($p0, $p1]")
+      }
+      // Positions 1 and 2 (= 3: the redelivery changed nothing): at
+      // least one of the two spans to the head is a single entry.
+      val at = Seq(1L -> snap1(table), 2L -> snap2(table))
+      assert(at.exists(p => ChangeLog.span(spark, dir, p._1).single),
+        s"$table has no one-entry span to the head")
+      for ((p, snap) <- at)
+        assertSame(ChangeLog.snapshotAt(spark, dir, keys, p), snap,
+          s"$table snapshotAt($p)")
+    }
+
+    // The join view refreshed over the (1, 4] spans equals its
+    // recompute from the current golds.
+    SilverLoop.refreshGoldJoinView(spark, wh)
+    assertSame(
+      spark.read.parquet(s"$wh/gold_episode_webtoon_jview")
+        .drop("_as_of_f", "_as_of_d0"),
+      spark.read.parquet(s"$wh/gold_episode_daily")
+        .join(spark.read.parquet(s"$wh/gold_webtoon_daily"),
+          Seq("datetime", "webtoon_id"), "left")
+        .groupBy(col("datetime"))
+        .agg(sum(col("sessions")).as("ep_sessions"),
+          sum(coalesce(col("total_sessions"), lit(0L)))
+            .as("wt_sessions_fanout"),
+          count(lit(1)).as("n_rows")),
+      "join view after a multi-entry span")
 
     // The deletion surfaced as a `removed` row for the vanished grain.
     val userLog = ChangeLog.readLog(spark, s"$wh/gold_user_daily").get

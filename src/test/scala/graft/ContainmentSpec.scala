@@ -86,4 +86,21 @@ class ContainmentSpec extends SparkSpec {
     assert(pairsOf(out).subsetOf(base),
       "capped candidates must never invent a pair the exact measure rejects")
   }
+
+  test("the prefix-broadcast estimate counts the block keys' bytes") {
+    // Two corpora with identical trigram sets, one with 200-byte lang
+    // and source values: every prefix slot carries both strings.
+    val tg = Seq(Seq(1L, 2L, 3L, 4L, 5L), Seq(2L, 3L, 4L))
+    def base(key: String) = tg.zipWithIndex
+      .map { case (t, i) => (i.toLong, key, key, t) }
+      .toDF("doc_id", "lang", "source", "tg")
+    val (nS, tokS, shortBytes) = ContainmentDedup.gateStats(base("en"), 0.7)
+    val long = "x" * 200
+    val (nL, tokL, longBytes) = ContainmentDedup.gateStats(base(long), 0.7)
+    assert((nS, tokS) === ((2L, 8L)) && (nL, tokL) === ((2L, 8L)))
+    val slots = (shortBytes / (64L + 4L))
+    assert(slots * (64L + 4L) === shortBytes && slots > 0L)
+    assert(longBytes === slots * (64L + 400L),
+      s"long block keys must raise the estimate: $shortBytes -> $longBytes")
+  }
 }

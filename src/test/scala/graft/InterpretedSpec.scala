@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 class InterpretedSpec extends SparkSpec {
 
   private val Keys =
-    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled")
   private def confs = Keys.map { k =>
     val c = spark.sessionState.conf
     k -> Option.when(c.contains(k))(c.getConfString(k))

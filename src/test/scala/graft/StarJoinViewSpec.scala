@@ -521,4 +521,50 @@ class StarJoinViewSpec extends SparkSpec {
     assert(regs.map(r => (r.name, r.position)) ===
       Seq((StarJoinView.consumerName(viewDir, "f"), 1L)))
   }
+
+  test("a one-entry fact span with a moving dim: the span-start fact " +
+      "(live rows plus the entry's old images) semi-joined to the " +
+      "dim's keys on the fact's partition column refreshes exactly") {
+    import spark.implicits._
+    val wh = tmpDir("sjv-one-entry")
+    val (fDir, dDir, vDir) = (s"$wh/f", s"$wh/d", s"$wh/v")
+    val dates = (1 to 5).map(i => java.sql.Date.valueOf(s"2024-01-0$i"))
+    val fKeys = Seq("datetime", "webtoon_id", "episode_id")
+    val dKeys = Seq("datetime", "webtoon_id")
+    // The fact is far larger than one dim entry, as in the gold view:
+    // that is when the optimizer plans a pruning filter on the fact's
+    // datetime partitions from the dim side.
+    def fact(b: Long) = (for (d <- dates; w <- 0 until 10; e <- 0 until 40)
+      yield (d, s"w$w", s"e$e",
+        (w * 40 + e).toLong + (if (w == 0 && e == 0) b else 0L)))
+      .toDF("datetime", "webtoon_id", "episode_id", "sessions")
+    def dim(b: Long) = (for (d <- dates; w <- 0 until 10)
+      yield (d, s"w$w", w.toLong + (if (w == 1) b else 0L)))
+      .toDF("datetime", "webtoon_id", "total_sessions")
+    def batch(b: Long): Unit = {
+      ChangeLog.recordBatch(spark, fDir, fKeys, b)(
+        MergeUpsert.replaceAll(spark, fDir, fact(b)))
+      ChangeLog.recordBatch(spark, dDir, dKeys, b)(
+        MergeUpsert.replaceAll(spark, dDir, dim(b)))
+    }
+    def refresh(): Seq[Long] = StarJoinView.refreshPartitioned(spark, fDir,
+      Seq(DimSpec(dDir, dKeys, dKeys, Some(Seq("total_sessions")))),
+      vDir, fKeys, Seq("datetime"),
+      Seq(("ep", col("sessions")), ("fan", col("total_sessions"))),
+      partDim = "datetime", joinType = "left",
+      fCols = Some(Seq("sessions")))
+    batch(1L)
+    refresh()
+    batch(2L)
+    assert(ChangeLog.span(spark, fDir, 1L).single &&
+      ChangeLog.span(spark, dDir, 1L).single)
+    assert(refresh() === Seq(2L, 2L))
+    assert(cells(spark.read.parquet(vDir).drop("_as_of_f", "_as_of_d0")) ===
+      cells(spark.read.parquet(fDir)
+        .join(spark.read.parquet(dDir), dKeys, "left")
+        .groupBy(col("datetime"))
+        .agg(sum(col("sessions")).as("ep"),
+          sum(coalesce(col("total_sessions"), lit(0L))).as("fan"),
+          count(lit(1)).as("n_rows"))))
+  }
 }
