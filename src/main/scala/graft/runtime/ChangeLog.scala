@@ -353,6 +353,28 @@ object ChangeLog {
     })
   }
 
+  /** The parquet table at `dir` read under its footers' schema
+    * ([[footerSchema]] over every directory holding its data files,
+    * on the driver): no schema-inference job. Partition columns still
+    * come from the directory names. A footer without Spark's schema
+    * falls back to a `mergeSchema` read. */
+  private[graft] def readByFooters(spark: SparkSession,
+                                   dir: String): DataFrame = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataDirs(d: Path): Seq[Path] = {
+      val (subdirs, files) = fs.listStatus(d).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith(".") || n.startsWith("_")
+      }.partition(_.isDirectory)
+      (if (files.exists(_.getLen > 0)) Seq(d) else Nil) ++
+        subdirs.flatMap(st => dataDirs(st.getPath))
+    }
+    footerSchema(fs, dataDirs(root))
+      .fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+      .parquet(dir)
+  }
+
   /** The footer key Spark's parquet writer stores the row schema under
     * (`ParquetReadSupport.SPARK_METADATA_KEY`). */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
@@ -827,23 +849,13 @@ object ChangeLog {
     * deliberately BREAKS the replay contract for the purged keys (by
     * design — the contract becomes "a history in which they never
     * existed"; all other keys replay unchanged, ForgetSpec pins it).
-    * Only partitions that actually hold matching rows rewrite
-    * (metadata-scale batch-id collect); an entry purged empty becomes
+    * Only entries that actually hold matching rows rewrite
+    * ([[MergeUpsert.eraseFailing]]); an entry purged empty becomes
     * absence, the empty-entry convention. Returns purged row count. */
-  def purge(spark: SparkSession, tableDir: String, keep: Column): Long = {
-    readLog(spark, tableDir).map { log =>
-      val hit = log.filter(!keep)
-      val nPurged = hit.count()
-      if (nPurged > 0L) {
-        val batches = hit.select(col("batch_id")).distinct()
-          .collect().map(_.get(0)).toIndexedSeq
-        MergeUpsert.replacePartitions(spark, logDir(tableDir),
-          log.filter(col("batch_id").isin(batches: _*) && keep),
-          batches, partitionCol = "batch_id")
-      }
-      nPurged
-    }.getOrElse(0L)
-  }
+  def purge(spark: SparkSession, tableDir: String, keep: Column): Long =
+    readLog(spark, tableDir)
+      .map(MergeUpsert.eraseFailing(spark, logDir(tableDir), _, keep))
+      .getOrElse(0L)
 
   /** The log as a Structured Streaming source — a downstream job tails
     * it with a CHECKPOINT instead of a watermark file: the

@@ -125,7 +125,7 @@ object Compaction {
       // .trash-*: a partition DELETE that crashed between its two steps
       // (rename-out, then delete) — unlike a backup, trash means the
       // data is dead, so recovery completes the delete rather than
-      // restoring it (MergeUpsert.dropPartitions).
+      // restoring it (MergeUpsert.dropPartitionDirs).
       n.startsWith(".compact-") || n.startsWith(".staging-") ||
         n.startsWith(".trash-") ||
         // A change-log root's pending entry (ChangeLog.recordBatch):

@@ -1,8 +1,9 @@
 package graft.runtime
 
 import graft.silver.MergeUpsert
+import graft.silver.MergeUpsert.readIfData
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Right-to-be-forgotten over the incremental warehouse: remove every
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * scoped machinery, so the bill is delta-scaled:
   *
   *  - BRONZE rewrites only the batch partitions that hold the user's
-  *    events ([[MergeUpsert.replacePartitions]] — the affected-batch
-  *    list is a metadata-scale collect);
+  *    events ([[MergeUpsert.eraseFailing]] — the affected-batch list
+  *    is a metadata-scale collect);
   *  - SILVER and the user-keyed gold converge to "user absent" via
   *    [[MergeUpsert.upsertScoped]] with an EMPTY recompute of the user
   *    scope — exactly the deletion-propagation path the incremental
@@ -27,10 +28,10 @@ import org.apache.spark.sql.functions._
   *    hash until rebuilt). When the purge emptied silver ENTIRELY
   *    (single-user warehouse, or a retry after a prior crash), the
   *    recompute has no rows and no schema to run over — the affected
-  *    date partitions then converge to ABSENCE directly
-  *    ([[IncrementalGold.dateScopedPurge]]), which is the same result
-  *    the empty recompute would stage. Either way, a table that
-  *    publishes a change log publishes this delta like any other
+  *    date partitions then converge to ABSENCE directly (the same
+  *    [[IncrementalGold.DateGold.converge]] with no silver), which is
+  *    the result the empty recompute would stage. Either way, a table
+  *    that publishes a change log publishes this delta like any other
   *    batch — aggregates are not personal data, and downstream
   *    consumers need to learn the numbers moved;
   *  - the user-KEYED change logs (silver, user gold) are PURGED
@@ -62,14 +63,14 @@ import org.apache.spark.sql.functions._
   * only copies of those dates still converges on retry, because the
   * retry reads the sidecar instead of the purged surfaces.
   *
-  * Publish-id discipline: the aggregate deltas take the next id past
-  * every log's and the chain's high watermark, and the warehouse's
-  * durable CDC id offset ([[Pipeline.cdcIdOffsetPath]]) is bumped past
-  * it BEFORE publishing — the next chain update (whose id the
+  * Publish-id discipline: the aggregate deltas publish at the id
+  * [[Pipeline.reserveCdcId]] reserves — past every log's and the
+  * chain's high watermark, with the durable CDC id offset bumped past
+  * it BEFORE publishing — so the next chain update (whose id the
   * streaming engine's epoch counter fixes) lands strictly after this
   * op's entries instead of colliding with them, with
   * [[ChangeLog.recordBatch]]'s producer guard failing loud as the
-  * backstop. The caller no longer owes any id coordination.
+  * backstop. The caller owes no id coordination.
   *
   * Single-writer assumption, like every maintenance op here: the op
   * must not race the chain or a view refresh.
@@ -92,19 +93,6 @@ object Forget {
   private def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** A table that a delete-capable mode emptied down to its `_SUCCESS`
-    * marker has no parquet footer to infer a schema from — for a purge
-    * that state simply means "no trace left" (a retried forget must
-    * not crash on the emptiness the first attempt produced). */
-  private def readIfData(spark: SparkSession,
-                         dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && MergeUpsert.sweepAndHasData(fs, p))
-      Some(spark.read.parquet(dir))
-    else None
   }
 
   /** Durable copy of the aggregate-gold recompute scope: the affected
@@ -201,7 +189,8 @@ object Forget {
     import spark.implicits._
     val keep: Column = !(col("user_id") <=> lit(userId))
     val silverDir = s"$warehouseDir/silver_sessions"
-    val userGoldDir = s"$warehouseDir/gold_user_daily"
+    val userGold = IncrementalGold.UserGoldTable
+    val userGoldDir = s"$warehouseDir/$userGold"
     val quarDir = s"$warehouseDir/quarantine_events"
     val receipts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
 
@@ -219,52 +208,20 @@ object Forget {
     if (affectedDates.nonEmpty)
       savePendingDates(spark, warehouseDir, userId, affectedDates)
 
-    // Aggregate deltas publish past every existing watermark — and the
-    // durable CDC id offset is bumped past THEM before publishing, so
-    // the next chain update (engine-epoch-keyed) cannot collide.
-    val logged = Pipeline.loggedTables.map(_._1)
-    val idOffset = Pipeline.cdcIdOffset(spark, warehouseDir)
-    val bronzeHw = Incremental.highWatermark(spark, bronzeDir)
-    val batchId = 1L + (
-      (bronzeHw.getOrElse(0L) + idOffset) +:
-        logged.map(t => Incremental.highWatermark(spark,
-          ChangeLog.logDir(s"$warehouseDir/$t")).getOrElse(0L))).max
-    val nextEndpointMin = bronzeHw.map(_ + 1L).getOrElse(0L)
-    val bumped = math.max(idOffset, batchId + 1L - nextEndpointMin)
-    // Only an op that will PUBLISH owns an id worth reserving — a
-    // no-op forget (unknown user) must not widen the id space.
-    if (bumped != idOffset && affectedDates.nonEmpty)
-      Incremental.saveWatermark(spark,
-        Pipeline.cdcIdOffsetPath(warehouseDir), bumped)
+    // Only an op that will PUBLISH reserves an id — a no-op forget
+    // (unknown user) must not widen the id space.
+    val batchId = Pipeline.reserveCdcId(spark, bronzeDir, warehouseDir,
+      publish = affectedDates.nonEmpty)
 
     // 1. Bronze: rewrite only the batch partitions holding the user.
     // The scope comes either from a full scan (the default path) or
     // from the caller's KeyIndex lookup — in which case bronze is only
     // ever READ partition-pruned to the batches being rewritten.
     readIfData(spark, bronzeDir).foreach { bronze =>
-      bronzeBatches match {
-        case Some(batches) =>
-          if (batches.isEmpty) receipts += ("bronze" -> 0L)
-          else {
-            val scoped = bronze.filter(col("batch_id").isin(batches: _*))
-            val n = scoped.filter(!keep).count()
-            receipts += ("bronze" -> n)
-            if (n > 0)
-              MergeUpsert.replacePartitions(spark, bronzeDir,
-                scoped.filter(keep), batches, partitionCol = "batch_id")
-          }
-        case None =>
-          val hit = bronze.filter(!keep)
-          val n = hit.count()
-          receipts += ("bronze" -> n)
-          if (n > 0) {
-            val batches = hit.select(col("batch_id")).distinct()
-              .collect().map(_.get(0)).toIndexedSeq
-            MergeUpsert.replacePartitions(spark, bronzeDir,
-              bronze.filter(col("batch_id").isin(batches: _*) && keep),
-              batches, partitionCol = "batch_id")
-          }
-      }
+      val scoped = bronzeBatches.fold(bronze)(batches =>
+        bronze.filter(col("batch_id").isin(batches: _*)))
+      receipts += ("bronze" ->
+        MergeUpsert.eraseFailing(spark, bronzeDir, scoped, keep))
     }
 
     // 2. Silver / user gold: empty recompute of the user scope —
@@ -283,65 +240,25 @@ object Forget {
     // silver; tables that already publish CDC publish this delta too.
     // A silver the purge EMPTIED has no rows and no schema to
     // recompute from — the affected dates then converge to absence
-    // directly (dateScopedPurge), which is what the empty recompute
-    // would stage, with the deletion delta published all the same.
+    // directly, which is what the empty recompute would stage, with
+    // the deletion delta published all the same.
     if (affectedDates.nonEmpty) {
-      def cdc(dir: String): Option[Long] =
-        if (ChangeLog.hasLog(spark, dir)) Some(batchId)
-        else None
-      readIfData(spark, silverDir) match {
-        case Some(silver) =>
-          Seq(
-            ("gold_episode_daily",
-              IncrementalGold.episodeDailyDelta(spark, silver, _: String,
-                affectedDates, _: Option[Long], producer = "forget")),
-            ("gold_webtoon_daily",
-              IncrementalGold.webtoonDailyDelta(spark, silver, _: String,
-                affectedDates, _: Option[Long], producer = "forget")),
-            ("gold_platform_device_daily",
-              IncrementalGold.platformDeviceDailyDelta(spark, silver,
-                _: String, affectedDates, _: Option[Long],
-                producer = "forget")),
-            ("gold_country_daily",
-              IncrementalGold.countryDailyDelta(spark, silver, _: String,
-                affectedDates, _: Option[Long], producer = "forget")),
-            ("gold_user_sketch",
-              IncrementalGold.userSketchDelta(spark, silver, _: String,
-                affectedDates, _: Option[Long], producer = "forget"))
-          ).foreach { case (t, run) =>
-            val dir = s"$warehouseDir/$t"
-            if (exists(spark, dir)) run(dir, cdc(dir))
-          }
-        case None =>
-          Seq(
-            ("gold_episode_daily",
-              Seq("webtoon_id", "episode_id"), 0, identity[DataFrame] _),
-            ("gold_webtoon_daily", Seq("webtoon_id"), 1,
-              identity[DataFrame] _),
-            ("gold_platform_device_daily",
-              Seq("platform", "device", "browser"), 0,
-              identity[DataFrame] _),
-            ("gold_country_daily", Seq("country"), 1,
-              identity[DataFrame] _),
-            ("gold_user_sketch", Seq.empty[String], 0,
-              (df: DataFrame) =>
-                df.select(col("datetime"), col("dau_est")))
-          ).foreach { case (t, grain, back, view) =>
-            val dir = s"$warehouseDir/$t"
-            if (exists(spark, dir)) {
-              val dropped = readIfData(spark, dir).map(
+      val silver = readIfData(spark, silverDir)
+      IncrementalGold.dateGolds.foreach { g =>
+        val dir = s"$warehouseDir/${g.table}"
+        if (exists(spark, dir)) {
+          if (silver.isEmpty)
+            receipts += (s"${g.table} (empty-silver date purge)" ->
+              readIfData(spark, dir).map(
                 _.filter(col("datetime").isin(affectedDates: _*)).count())
-                .getOrElse(0L)
-              receipts += (s"$t (empty-silver date purge)" -> dropped)
-              IncrementalGold.dateScopedPurge(spark, dir, affectedDates,
-                grain, backDays = back, fwdDays = 0,
-                changeLogBatch = cdc(dir), changeLogView = view,
-                producer = "forget")
-            }
-          }
+                .getOrElse(0L))
+          g.delta(spark, silver, dir, affectedDates,
+            Option.when(ChangeLog.hasLog(spark, dir))(batchId),
+            producer = "forget")
+        }
       }
     }
-    val userGoldPurged = purgeScoped(userGoldDir, "gold_user_daily")
+    val userGoldPurged = purgeScoped(userGoldDir, userGold)
 
     // 4. User-keyed change logs: erase the user's images, then
     // invalidate every view registered on a log whose inputs this op
@@ -355,20 +272,12 @@ object Forget {
         Consumers.invalidateAll(spark, dir)
     }
     purgeLog(silverDir, "silver_sessions", silverPurged)
-    purgeLog(userGoldDir, "gold_user_daily", userGoldPurged)
+    purgeLog(userGoldDir, userGold, userGoldPurged)
 
     // 5. Quarantine: the user's rejected raw rows, per source batch.
     readIfData(spark, quarDir).foreach { q =>
-      val hit = q.filter(!keep)
-      val n = hit.count()
-      receipts += ("quarantine_events" -> n)
-      if (n > 0) {
-        val batches = hit.select(col("batch_id")).distinct()
-          .collect().map(_.get(0)).toIndexedSeq
-        MergeUpsert.replacePartitions(spark, quarDir,
-          q.filter(col("batch_id").isin(batches: _*) && keep),
-          batches, partitionCol = "batch_id")
-      }
+      receipts += ("quarantine_events" ->
+        MergeUpsert.eraseFailing(spark, quarDir, q, keep))
     }
     // Complete: the durable date sidecar may retire.
     val pp = new Path(pendingPath(warehouseDir, userId))

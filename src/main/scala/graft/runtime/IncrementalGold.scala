@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    the exact recompute scope is the affected-user slice across its
   *    full history — per-user history is catalog-behavior bounded, so
   *    the cost is delta-users × their history, never the corpus.
-  *  - '''Date-grain golds''' ([[dateScopedDelta]]): a date-X row reads
+  *  - '''Date-grain golds''' ([[DateGold]]): a date-X row reads
   *    silver dates [X−b, X+f] only (webtoon and country retention are
   *    both yesterday-referencing at the ROW grain: b=1, f=0;
   *    episode/platform are within-date: b=f=0). A silver delta on
@@ -40,6 +40,10 @@ import org.apache.spark.sql.functions._
   * crash-safe, and only affected datetime partitions rewrite. */
 object IncrementalGold {
 
+  /** The user gold's table name and row key. */
+  val UserGoldTable = "gold_user_daily"
+  val UserGoldKeys: Seq[String] = Seq("datetime", "user_id")
+
   /** Exact user-scoped incremental user gold: recompute
     * [[graft.gold.UserDaily]] over the affected users' full history
     * and converge the target to it on the USER scope — including
@@ -48,7 +52,10 @@ object IncrementalGold {
     * dropped, which a plain keyed upsert cannot express
     * (MergeUpsert.upsertScoped). `affectedUsers` is one `user_id`
     * column (typically the delta's distinct users); the semi-join
-    * scoping lets AQE broadcast it when small. */
+    * scoping lets AQE broadcast it when small. The recompute is
+    * materialized by its first use (the merge's staged-dates collect,
+    * or a first write), so the write does not run the build over that
+    * history again. */
   def userDailyDelta(spark: SparkSession, silver: DataFrame,
                      goldDir: String, affectedUsers: DataFrame,
                      changeLogBatch: Option[Long] = None,
@@ -58,185 +65,173 @@ object IncrementalGold {
       val users = affectedUsers.select(col("user_id")).distinct()
       val scoped = silver.join(users, Seq("user_id"), "left_semi")
       def write(): Unit = MergeUpsert.upsertScoped(spark, goldDir,
-        graft.gold.UserDaily.build(scoped), Seq("user_id"), users)
+        graft.gold.UserDaily.build(scoped).localCheckpoint(eager = false),
+        Seq("user_id"), users)
       changeLogBatch match {
-        case Some(b) => ChangeLog.recordBatch(spark, goldDir,
-          Seq("datetime", "user_id"), b,
-          df => df.join(users, Seq("user_id"), "left_semi"),
+        case Some(b) => ChangeLog.recordBatch(spark, goldDir, UserGoldKeys,
+          b, df => df.join(users, Seq("user_id"), "left_semi"),
           producer = producer)(write())
         case None => write()
       }
     }
 
-  /** Exact date-scoped incremental recompute for a date-grain gold:
-    * `build` runs over silver restricted to the halo dates, the stage
-    * keeps only the affected dates (halo-edge rows would be computed
-    * from truncated context), and the result upserts on
-    * (datetime, grainCol). `backDays`/`fwdDays` are the table's silver
-    * dependency span b/f (scaladoc above). */
-  def dateScopedDelta(spark: SparkSession, silver: DataFrame,
-                      goldDir: String, deltaDates: Seq[java.sql.Date],
-                      build: DataFrame => DataFrame,
-                      grainCols: Seq[String],
-                      backDays: Int, fwdDays: Int,
-                      changeLogBatch: Option[Long] = None,
-                      changeLogView: DataFrame => DataFrame = identity,
-                      producer: String = ChangeLog.DefaultProducer)
-      : Unit = {
-    if (deltaDates.nonEmpty)
-      Interpreted.run(spark) {
-        def shift(d: java.sql.Date, days: Int): java.sql.Date =
-          java.sql.Date.valueOf(d.toLocalDate.plusDays(days.toLong))
-        val affected = deltaDates
-          .flatMap(d => (-fwdDays to backDays).map(shift(d, _))).distinct
-        val halo = affected
-          .flatMap(x => (-backDays to fwdDays).map(shift(x, _))).distinct
-        // Date literals, not strings: isin must compare at DateType so the
-        // partition filter prunes instead of casting the column.
-        val scoped = silver.filter(col("datetime").isin(halo: _*))
-        val stage = build(scoped).filter(col("datetime").isin(affected: _*))
-        // Replace, don't upsert: the stage is the COMPLETE recompute of
-        // the affected dates, so grains absent from it must be DROPPED —
-        // a keyed upsert would keep a (datetime, grain) row whose silver
-        // inputs vanished (deletion propagation); an affected date with no
-        // staged rows at all is deleted outright.
-        def write(): Unit =
-          MergeUpsert.replacePartitions(spark, goldDir, stage, affected)
-        changeLogBatch match {
-          // CDC publication ([[ChangeLog]]): the merge diffs exactly the
-          // affected-date partitions it rewrites, and the log scope names
-          // the same set. `changeLogView` lets a table log
-          // at its CONTRACT grain (the sketch gold drops the serialized
-          // bytes — build-order-dependent — and logs the estimate).
-          case Some(b) => ChangeLog.recordBatch(spark, goldDir,
-            "datetime" +: grainCols, b,
-            df => changeLogView(
-              df.filter(col("datetime").isin(affected: _*))),
-            producer = producer)(write())
-          case None => write()
+  /** One date-grain gold, declared once: its table, its grain beside
+    * `datetime`, its silver dependency span b/f (`backDays`/`fwdDays`,
+    * scaladoc above), its build over a silver slice, and the view its
+    * change log publishes (identity, or a CONTRACT grain: the sketch
+    * gold drops the serialized bytes — build-order-dependent — and
+    * logs the estimate). The chain, [[Forget]] and [[Retention]] all
+    * write a date gold through [[converge]] on its row here. */
+  final case class DateGold(table: String, grainCols: Seq[String],
+                            backDays: Int, fwdDays: Int,
+                            build: DataFrame => DataFrame,
+                            logView: DataFrame => DataFrame = identity) {
+    def keys: Seq[String] = "datetime" +: grainCols
+
+    /** [[converge]] on the gold dates a silver change on `deltaDates`
+      * can move: ∪_{d} [d−f, d+b]. */
+    def delta(spark: SparkSession, silver: Option[DataFrame],
+              goldDir: String, deltaDates: Seq[java.sql.Date],
+              changeLogBatch: Option[Long] = None,
+              producer: String = ChangeLog.DefaultProducer): Unit =
+      converge(spark, silver, goldDir, shift(deltaDates, -fwdDays, backDays),
+        changeLogBatch, producer)
+
+    /** Exact date-scoped recompute: [[build]] runs over silver
+      * restricted to the halo of the `affected` dates, the stage keeps
+      * only the affected dates (halo-edge rows would be computed from
+      * truncated context), and those date partitions converge to it.
+      * With no `silver` the input is gone (a purge emptied silver, or
+      * an expiry drops the dates): the recompute would stage nothing,
+      * so the affected partitions converge to ABSENCE, and a gold that
+      * never materialized is left alone. Where the table publishes a
+      * change log, the change publishes like any other batch. */
+    def converge(spark: SparkSession, silver: Option[DataFrame],
+                 goldDir: String, affected: Seq[java.sql.Date],
+                 changeLogBatch: Option[Long] = None,
+                 producer: String = ChangeLog.DefaultProducer): Unit =
+      if (affected.nonEmpty)
+        Interpreted.run(spark) {
+          // Date literals, not strings: isin must compare at DateType so
+          // the partition filter prunes instead of casting the column.
+          val stage = silver match {
+            case Some(s) => Some(build(s.filter(col("datetime")
+              .isin(shift(affected, -backDays, fwdDays): _*)))
+              .filter(col("datetime").isin(affected: _*)))
+            case None =>
+              MergeUpsert.readIfData(spark, goldDir).map(_.filter(lit(false)))
+          }
+          // Replace, don't upsert: the stage is the COMPLETE recompute
+          // of the affected dates, so grains absent from it must be
+          // DROPPED — a keyed upsert would keep a (datetime, grain) row
+          // whose silver inputs vanished (deletion propagation); an
+          // affected date with no staged rows is deleted outright.
+          stage.foreach { st =>
+            def write(): Unit =
+              MergeUpsert.replacePartitions(spark, goldDir, st, affected)
+            changeLogBatch match {
+              // The merge diffs exactly the affected-date partitions it
+              // rewrites, and the log scope names the same set.
+              case Some(b) => ChangeLog.recordBatch(spark, goldDir, keys, b,
+                df => logView(df.filter(col("datetime").isin(affected: _*))),
+                producer = producer)(write())
+              case None => write()
+            }
+          }
         }
-      }
   }
 
-  /** Deletion-converge for a date-grain gold whose SILVER INPUT IS
-    * GONE — the right-to-be-forgotten edge ([[Forget.forgetUser]])
-    * where the purge emptied silver entirely, so the usual
-    * [[dateScopedDelta]] recompute has no rows AND no schema to run
-    * over. The recompute over empty silver would stage nothing for
-    * the affected dates; this applies exactly that result directly —
-    * the affected date partitions converge to ABSENCE (they were
-    * computed from rows that no longer exist), and where the table
-    * publishes CDC the deletion delta publishes like any other batch.
-    * A gold that never materialized is a no-op. */
-  def dateScopedPurge(spark: SparkSession, goldDir: String,
-                      deltaDates: Seq[java.sql.Date],
-                      grainCols: Seq[String],
-                      backDays: Int, fwdDays: Int,
-                      changeLogBatch: Option[Long] = None,
-                      changeLogView: DataFrame => DataFrame = identity,
-                      producer: String = ChangeLog.DefaultProducer)
-      : Unit = {
-    if (deltaDates.isEmpty) return
-    val goldPath = new org.apache.hadoop.fs.Path(goldDir)
-    val fs = goldPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(goldPath) ||
-      !MergeUpsert.sweepAndHasData(fs, goldPath)) return
-    def shift(d: java.sql.Date, days: Int): java.sql.Date =
-      java.sql.Date.valueOf(d.toLocalDate.plusDays(days.toLong))
-    val affected = deltaDates
-      .flatMap(d => (-fwdDays to backDays).map(shift(d, _))).distinct
-    val empty = spark.read.parquet(goldDir).filter(lit(false))
-    def write(): Unit =
-      MergeUpsert.replacePartitions(spark, goldDir, empty, affected)
-    changeLogBatch match {
-      case Some(b) => ChangeLog.recordBatch(spark, goldDir,
-        "datetime" +: grainCols, b,
-        df => changeLogView(
-          df.filter(col("datetime").isin(affected: _*))),
-        producer = producer)(write())
-      case None => write()
-    }
-  }
+  private def shift(dates: Seq[java.sql.Date], from: Int,
+                    to: Int): Seq[java.sql.Date] =
+    dates.flatMap(d => (from to to)
+      .map(n => java.sql.Date.valueOf(d.toLocalDate.plusDays(n.toLong))))
+      .distinct
 
-  /** [[dateScopedDelta]] pre-bound for the episode gold (within-date:
-    * b = f = 0). */
+  /** Episode gold: within-date, b = f = 0. */
+  val EpisodeGold: DateGold = DateGold("gold_episode_daily",
+    Seq("webtoon_id", "episode_id"), backDays = 0, fwdDays = 0,
+    graft.gold.EpisodeDaily.build(_))
+
+  /** Webtoon gold. The retention block groups by `date_add(datetime,
+    * 1)` — the gold row at date X describes YESTERDAY's users (X−1)
+    * returning at X — so a date-X row reads silver [X−1, X]: b=1, f=0
+    * (the lead() in the plan looks forward, but the anchor shifts the
+    * result one day forward too). Episode gold (the deepest-episode
+    * input) is within-date, covered by the same halo. */
+  val WebtoonGold: DateGold = DateGold("gold_webtoon_daily",
+    Seq("webtoon_id"), backDays = 1, fwdDays = 0,
+    s => graft.gold.WebtoonDaily.build(s, graft.gold.EpisodeDaily.build(s)))
+
+  /** Platform/device gold: within-date, b = f = 0. */
+  val PlatformDeviceGold: DateGold = DateGold("gold_platform_device_daily",
+    Seq("platform", "device", "browser"), backDays = 0, fwdDays = 0,
+    graft.gold.PlatformDeviceDaily.build(_))
+
+  /** Country gold: retention lags one day back, b = 1, f = 0. */
+  val CountryGold: DateGold = DateGold("gold_country_daily",
+    Seq("country"), backDays = 1, fwdDays = 0,
+    graft.gold.CountryDaily.build(_))
+
+  /** Sketch gold ([[SketchGold]]; within-date: b = f = 0). This is the
+    * deletion-capable path — the chain's silver deltas can MOVE a
+    * user's sessions off a date, which HLL union cannot express, so
+    * the chain always rebuilds the affected days' sketches from their
+    * (already re-derived) silver slice; [[SketchGold.unionDelta]]'s
+    * O(delta) additive path is for append-only feeds. It logs at the
+    * contract grain: the serialized sketch is a build-order-dependent
+    * byte string (a redelivered no-op batch could re-serialize
+    * differently and flag a spurious change); the estimate is a pure
+    * function of the day's user SET. */
+  val UserSketchGold: DateGold = DateGold("gold_user_sketch", Seq.empty,
+    backDays = 0, fwdDays = 0, SketchGold.silverDailySketch(_),
+    logView = _.select(col("datetime"), col("dau_est")))
+
+  /** Every date gold, in the chain's write order. */
+  val dateGolds: Seq[DateGold] = Seq(EpisodeGold, WebtoonGold,
+    PlatformDeviceGold, CountryGold, UserSketchGold)
+
   def episodeDailyDelta(spark: SparkSession, silver: DataFrame,
                         goldDir: String,
                         deltaDates: Seq[java.sql.Date],
                         changeLogBatch: Option[Long] = None,
                         producer: String = ChangeLog.DefaultProducer)
       : Unit =
-    dateScopedDelta(spark, silver, goldDir, deltaDates,
-      graft.gold.EpisodeDaily.build(_),
-      Seq("webtoon_id", "episode_id"), backDays = 0, fwdDays = 0,
-      changeLogBatch = changeLogBatch, producer = producer)
+    EpisodeGold.delta(spark, Some(silver), goldDir, deltaDates,
+      changeLogBatch, producer)
 
-  /** [[dateScopedDelta]] pre-bound for the platform/device gold
-    * (within-date: b = f = 0). */
-  def platformDeviceDailyDelta(spark: SparkSession, silver: DataFrame,
-                               goldDir: String,
-                               deltaDates: Seq[java.sql.Date],
-                               changeLogBatch: Option[Long] = None,
-                               producer: String =
-                                 ChangeLog.DefaultProducer): Unit =
-    dateScopedDelta(spark, silver, goldDir, deltaDates,
-      graft.gold.PlatformDeviceDaily.build(_),
-      Seq("platform", "device", "browser"), backDays = 0, fwdDays = 0,
-      changeLogBatch = changeLogBatch, producer = producer)
-
-  /** [[dateScopedDelta]] pre-bound for the webtoon gold. The retention
-    * block groups by `date_add(datetime, 1)` — the gold row at date X
-    * describes YESTERDAY's users (X−1) returning at X — so a date-X
-    * row reads silver [X−1, X]: b=1, f=0 (the lead() in the plan looks
-    * forward, but the anchor shifts the result one day forward too).
-    * Episode gold (the deepest-episode input) is within-date, covered
-    * by the same halo. */
   def webtoonDailyDelta(spark: SparkSession, silver: DataFrame,
                         goldDir: String,
                         deltaDates: Seq[java.sql.Date],
                         changeLogBatch: Option[Long] = None,
                         producer: String = ChangeLog.DefaultProducer)
       : Unit =
-    dateScopedDelta(spark, silver, goldDir, deltaDates,
-      s => graft.gold.WebtoonDaily.build(s,
-        graft.gold.EpisodeDaily.build(s)),
-      Seq("webtoon_id"), backDays = 1, fwdDays = 0,
-      changeLogBatch = changeLogBatch, producer = producer)
+    WebtoonGold.delta(spark, Some(silver), goldDir, deltaDates,
+      changeLogBatch, producer)
 
-  /** [[dateScopedDelta]] pre-bound for the sketch gold
-    * ([[SketchGold]]; within-date: b = f = 0). This is the
-    * deletion-capable path — the chain's silver deltas can MOVE a
-    * user's sessions off a date, which HLL union cannot express, so
-    * the chain always rebuilds the affected days' sketches from their
-    * (already re-derived) silver slice; [[SketchGold.unionDelta]]'s
-    * O(delta) additive path is for append-only feeds. */
-  def userSketchDelta(spark: SparkSession, silver: DataFrame,
-                      goldDir: String,
-                      deltaDates: Seq[java.sql.Date],
-                      changeLogBatch: Option[Long] = None,
-                      producer: String = ChangeLog.DefaultProducer)
-      : Unit =
-    dateScopedDelta(spark, silver, goldDir, deltaDates,
-      SketchGold.silverDailySketch(_),
-      Seq.empty, backDays = 0, fwdDays = 0,
-      changeLogBatch = changeLogBatch, producer = producer,
-      // Log at the contract grain: the serialized sketch is a
-      // build-order-dependent byte string (a redelivered no-op batch
-      // could re-serialize differently and flag a spurious change);
-      // the estimate is a pure function of the day's user SET.
-      changeLogView = _.select(col("datetime"), col("dau_est")))
+  def platformDeviceDailyDelta(spark: SparkSession, silver: DataFrame,
+                               goldDir: String,
+                               deltaDates: Seq[java.sql.Date],
+                               changeLogBatch: Option[Long] = None,
+                               producer: String =
+                                 ChangeLog.DefaultProducer): Unit =
+    PlatformDeviceGold.delta(spark, Some(silver), goldDir, deltaDates,
+      changeLogBatch, producer)
 
-  /** [[dateScopedDelta]] pre-bound for the country gold (retention
-    * lags one day back). */
   def countryDailyDelta(spark: SparkSession, silver: DataFrame,
                        goldDir: String,
                        deltaDates: Seq[java.sql.Date],
                        changeLogBatch: Option[Long] = None,
                        producer: String = ChangeLog.DefaultProducer)
       : Unit =
-    dateScopedDelta(spark, silver, goldDir, deltaDates,
-      graft.gold.CountryDaily.build(_),
-      Seq("country"), backDays = 1, fwdDays = 0,
-      changeLogBatch = changeLogBatch, producer = producer)
+    CountryGold.delta(spark, Some(silver), goldDir, deltaDates,
+      changeLogBatch, producer)
+
+  def userSketchDelta(spark: SparkSession, silver: DataFrame,
+                      goldDir: String,
+                      deltaDates: Seq[java.sql.Date],
+                      changeLogBatch: Option[Long] = None,
+                      producer: String = ChangeLog.DefaultProducer)
+      : Unit =
+    UserSketchGold.delta(spark, Some(silver), goldDir, deltaDates,
+      changeLogBatch, producer)
 }

@@ -206,9 +206,7 @@ object Pipeline {
     // The bucketed layout table is deliberately EXCLUDED: its file
     // count IS its bucket spec, which a coalesce would destroy.
     val compacted = stage("compact") {
-      Seq("silver_sessions", "gold_user_daily", "gold_episode_daily",
-        "gold_webtoon_daily", "gold_platform_device_daily",
-        "gold_country_daily", "gold_user_sketch").map { t =>
+      loggedTables.map { case (t, _) =>
         Compaction.compact(spark, s"$warehouseDir/$t").count()
       }.sum
     }
@@ -331,29 +329,16 @@ object Pipeline {
       // boundary filters correctly), never readAsOf on arbitrary
       // bronze ids. A retried update overwrites its own log partition.
       val cdc = if (changeLog) d.watermark.map(_ + idOffset) else None
-      stage("gold_user_daily") {
+      val userGold = IncrementalGold.UserGoldTable
+      stage(userGold) {
         IncrementalGold.userDailyDelta(spark, silver,
-          s"$warehouseDir/gold_user_daily", users, cdc)
+          s"$warehouseDir/$userGold", users, cdc)
       }
-      stage("gold_episode_daily") {
-        IncrementalGold.episodeDailyDelta(spark, silver,
-          s"$warehouseDir/gold_episode_daily", d.affectedDates, cdc)
-      }
-      stage("gold_webtoon_daily") {
-        IncrementalGold.webtoonDailyDelta(spark, silver,
-          s"$warehouseDir/gold_webtoon_daily", d.affectedDates, cdc)
-      }
-      stage("gold_platform_device_daily") {
-        IncrementalGold.platformDeviceDailyDelta(spark, silver,
-          s"$warehouseDir/gold_platform_device_daily", d.affectedDates, cdc)
-      }
-      stage("gold_country_daily") {
-        IncrementalGold.countryDailyDelta(spark, silver,
-          s"$warehouseDir/gold_country_daily", d.affectedDates, cdc)
-      }
-      stage("gold_user_sketch") {
-        IncrementalGold.userSketchDelta(spark, silver,
-          s"$warehouseDir/gold_user_sketch", d.affectedDates, cdc)
+      IncrementalGold.dateGolds.foreach { g =>
+        stage(g.table) {
+          g.delta(spark, Some(silver), s"$warehouseDir/${g.table}",
+            d.affectedDates, cdc)
+        }
       }
     }
     // Log retention (the compaction tail of the CDC surface): fold
@@ -389,8 +374,9 @@ object Pipeline {
     * the OLD entry and silently dropping the logic change's delta
     * (the exact loss mode the keep-entry rule exists to prevent on
     * real retries). So the warehouse's durable CDC id offset bumps
-    * past every published entry first, and the reprocess lands at
-    * ids strictly after the history it revises. Ids stay monotonic;
+    * past every published entry first ([[reserveCdcId]]), and the
+    * reprocess lands at ids strictly after the history it revises.
+    * Ids stay monotonic;
     * `readSince` consumers see the change as one more span.
     *
     * Use it for: a cleanse-rule fix, a sessionization-parameter
@@ -413,18 +399,9 @@ object Pipeline {
                           toSilver: org.apache.spark.sql.DataFrame =>
                             org.apache.spark.sql.DataFrame = null)
       : Option[Long] = {
-    val bronzeHw = Incremental.highWatermark(spark, bronzeDir)
-      .getOrElse(return None) // nothing ingested — nothing to reprocess
-    val idOffset = cdcIdOffset(spark, warehouseDir)
-    val logHwMax = (0L +: loggedTables.map { case (t, _) =>
-      Incremental.highWatermark(spark,
-        ChangeLog.logDir(s"$warehouseDir/$t")).getOrElse(0L)
-    }).max
-    val needed = 1L + math.max(bronzeHw + idOffset, logHwMax)
-    val bumped = needed - bronzeHw
-    if (bumped > idOffset)
-      Incremental.saveWatermark(spark, cdcIdOffsetPath(warehouseDir),
-        bumped)
+    // Nothing ingested — nothing to reprocess.
+    if (Incremental.highWatermark(spark, bronzeDir).isEmpty) return None
+    reserveCdcId(spark, bronzeDir, warehouseDir, publish = true)
     runDailyIncremental(spark, bronzeDir, warehouseDir,
       watermark = None, asOfUs = asOfUs, onFailure = onFailure,
       toSilver = toSilver)
@@ -451,6 +428,32 @@ object Pipeline {
     Incremental.loadWatermark(spark, cdcIdOffsetPath(warehouseDir))
       .getOrElse(0L)
 
+  /** The one out-of-band publish-id reservation ([[Forget]],
+    * [[Retention]], [[reprocessPublishing]]): the next id is one past
+    * both the chain's current endpoint id (bronze high watermark +
+    * offset) and every logged table's log head. When `publish` — only
+    * an op that will publish owns an id worth reserving; a no-op must
+    * not widen the id space — the durable offset is bumped BEFORE the
+    * op publishes, so that the chain's next endpoint (at least the
+    * bronze high watermark + 1, or 0 with no bronze) lands strictly
+    * past the reserved id. Returns the reserved id. */
+  private[graft] def reserveCdcId(spark: SparkSession, bronzeDir: String,
+                                  warehouseDir: String,
+                                  publish: Boolean): Long = {
+    val idOffset = cdcIdOffset(spark, warehouseDir)
+    val bronzeHw = Incremental.highWatermark(spark, bronzeDir)
+    val next = 1L + ((bronzeHw.getOrElse(0L) + idOffset) +:
+      loggedTables.map { case (t, _) =>
+        Incremental.highWatermark(spark,
+          ChangeLog.logDir(s"$warehouseDir/$t")).getOrElse(0L)
+      }).max
+    val bumped = next + 1L - bronzeHw.fold(0L)(_ + 1L)
+    if (publish && bumped > idOffset)
+      Incremental.saveWatermark(spark, cdcIdOffsetPath(warehouseDir),
+        bumped)
+    next
+  }
+
   /** CONSISTENT CROSS-TABLE TIME TRAVEL: the warehouse's logged
     * tables, each reconstructed AS OF log position `pos`
     * ([[ChangeLog.snapshotAt]]). Consistency is free by construction:
@@ -476,13 +479,8 @@ object Pipeline {
     * one source of truth shared by the collapse hook and any consumer
     * that tails the logs. (The sketch gold logs at its CONTRACT grain:
     * per-date estimate, not the build-order-dependent bytes.) */
-  def loggedTables: Seq[(String, Seq[String])] = Seq(
-    "silver_sessions" -> graft.silver.Sessionize.SessionKey,
-    "gold_user_daily" -> Seq("datetime", "user_id"),
-    "gold_episode_daily" -> Seq("datetime", "webtoon_id", "episode_id"),
-    "gold_webtoon_daily" -> Seq("datetime", "webtoon_id"),
-    "gold_platform_device_daily" ->
-      Seq("datetime", "platform", "device", "browser"),
-    "gold_country_daily" -> Seq("datetime", "country"),
-    "gold_user_sketch" -> Seq("datetime"))
+  def loggedTables: Seq[(String, Seq[String])] =
+    Seq("silver_sessions" -> graft.silver.Sessionize.SessionKey,
+      IncrementalGold.UserGoldTable -> IncrementalGold.UserGoldKeys) ++
+      IncrementalGold.dateGolds.map(g => g.table -> g.keys)
 }

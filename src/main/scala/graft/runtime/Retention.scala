@@ -1,8 +1,9 @@
 package graft.runtime
 
 import graft.silver.MergeUpsert
+import graft.silver.MergeUpsert.readIfData
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** EVENT-TIME RETENTION over the incremental warehouse: expire every
@@ -40,15 +41,16 @@ import org.apache.spark.sql.functions._
   *    get the out-of-band compliance signal, the standing CDC caveat.
   *  - AGGREGATE golds (episode/webtoon/platform/country/sketch):
   *    aggregates are not the expired data — their date-partition
-  *    deletions PUBLISH as ordinary change-log entries
-  *    ([[IncrementalGold.dateScopedPurge]]), so log-driven views
-  *    stay maintainable with no re-seed.
+  *    deletions PUBLISH as ordinary change-log entries (each gold's
+  *    [[IncrementalGold.DateGold.converge]] with no silver, at its
+  *    registered grain and log view), so log-driven views stay
+  *    maintainable with no re-seed.
   *
-  * Publish-id discipline: as in [[Forget]], the aggregate deltas take
-  * one id past every watermark and the warehouse's durable CDC id
-  * offset bumps past it BEFORE publishing, so the chain's next
-  * engine-epoch id cannot collide; [[ChangeLog.recordBatch]]'s
-  * producer guard backstops.
+  * Publish-id discipline: as in [[Forget]], the aggregate deltas
+  * publish at the id [[Pipeline.reserveCdcId]] reserves, one past
+  * every watermark, with the durable CDC id offset bumped past it
+  * BEFORE publishing, so the chain's next engine-epoch id cannot
+  * collide; [[ChangeLog.recordBatch]]'s producer guard backstops.
   *
   * Crash/retry: every step scopes from its OWN surface's current
   * content, so a retry expires exactly what remains and converges; a
@@ -107,15 +109,6 @@ object Retention {
     if (fs.exists(p)) fs.delete(p, false)
   }
 
-  private def readIfData(spark: SparkSession,
-                         dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && MergeUpsert.sweepAndHasData(fs, p))
-      Some(spark.read.parquet(dir))
-    else None
-  }
-
   /** Expire every row with event time strictly before `cutoff` (rows
     * AT the cutoff date are retained). Bronze/quarantine age by
     * `to_date(ts)`; silver and the golds by their `datetime`
@@ -126,7 +119,8 @@ object Retention {
       : Receipt = {
     val receipts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val silverDir = s"$warehouseDir/silver_sessions"
-    val userGoldDir = s"$warehouseDir/gold_user_daily"
+    val userGold = IncrementalGold.UserGoldTable
+    val userGoldDir = s"$warehouseDir/$userGold"
     val quarDir = s"$warehouseDir/quarantine_events"
     val old: Column = to_date(col("ts")) < lit(cutoff)
     val oldDt: Column = col("datetime") < lit(cutoff)
@@ -134,65 +128,33 @@ object Retention {
     // Will any aggregate gold publish? Only then is an id reserved
     // (a no-op retention must not widen the id space) — the Forget
     // discipline.
-    val aggGolds = Seq(
-      "gold_episode_daily", "gold_webtoon_daily",
-      "gold_platform_device_daily", "gold_country_daily",
-      "gold_user_sketch")
-    val willPublish = aggGolds.exists { t =>
-      ChangeLog.hasLog(spark, s"$warehouseDir/$t") &&
-        readIfData(spark, s"$warehouseDir/$t")
-          .exists(d => !d.filter(oldDt).isEmpty)
+    val willPublish = IncrementalGold.dateGolds.exists { g =>
+      val dir = s"$warehouseDir/${g.table}"
+      ChangeLog.hasLog(spark, dir) &&
+        readIfData(spark, dir).exists(d => !d.filter(oldDt).isEmpty)
     }
-    val idOffset = Pipeline.cdcIdOffset(spark, warehouseDir)
-    val bronzeHw = Incremental.highWatermark(spark, bronzeDir)
-    val batchId = 1L + (
-      (bronzeHw.getOrElse(0L) + idOffset) +:
-        Pipeline.loggedTables.map { case (t, _) =>
-          Incremental.highWatermark(spark,
-            ChangeLog.logDir(s"$warehouseDir/$t")).getOrElse(0L)
-        }).max
-    val nextEndpointMin = bronzeHw.map(_ + 1L).getOrElse(0L)
-    val bumped = math.max(idOffset, batchId + 1L - nextEndpointMin)
-    if (bumped != idOffset && willPublish)
-      Incremental.saveWatermark(spark,
-        Pipeline.cdcIdOffsetPath(warehouseDir), bumped)
+    val batchId = Pipeline.reserveCdcId(spark, bronzeDir, warehouseDir,
+      publish = willPublish)
 
     // 1./2. Bronze and quarantine (batch_id-partitioned, raw-event
     // shaped): batches wholly old delete; straddlers rewrite in place
-    // keeping young rows — batch ids never move.
-    def expireBatched(dir: String, name: String): Seq[Long] =
-      readIfData(spark, dir).map { t =>
-        val perBatch = t.groupBy(col("batch_id"))
-          .agg(sum(when(old, 1L).otherwise(0L)).as("n_old"),
-            count(lit(1)).as("n_all"))
-          .filter(col("n_old") > 0)
-          .collect()
-          .map(r => (r.get(0).toString.toLong, r.getLong(1),
-            r.getLong(2)))
-        receipts += (name -> perBatch.map(_._2).sum)
-        val whole = perBatch.filter(b => b._2 == b._3).map(_._1).toSeq
-        val straddle = perBatch.filterNot(b => b._2 == b._3)
-          .map(_._1).toSeq
-        // The index-reconcile scope persists DURABLY before the
-        // rewrites erase the evidence (the Forget pendingDates
-        // pattern): a crash after the bronze rewrite but before the
-        // index rewrite would otherwise leave a retry with no way to
-        // know which batches' pairs went stale.
-        if (dir == bronzeDir && keyIndexCol.isDefined &&
-            (whole ++ straddle).nonEmpty)
-          savePendingBatches(spark, warehouseDir,
-            (loadPendingBatches(spark, warehouseDir) ++ whole ++
-              straddle).distinct)
-        if (whole.nonEmpty)
-          MergeUpsert.replacePartitions(spark, dir,
-            t.filter(lit(false)), whole, partitionCol = "batch_id")
-        if (straddle.nonEmpty)
-          MergeUpsert.replacePartitions(spark, dir,
-            t.filter(col("batch_id").isin(straddle: _*) && !old),
-            straddle, partitionCol = "batch_id")
-        whole ++ straddle
-      }.getOrElse(Seq.empty)
-    expireBatched(bronzeDir, "bronze")
+    // keeping young rows — batch ids never move. The index-reconcile
+    // scope persists DURABLY before the bronze rewrite erases the
+    // evidence (the Forget pendingDates pattern): a crash after the
+    // bronze rewrite but before the index rewrite would otherwise
+    // leave a retry with no way to know which batches' pairs went
+    // stale.
+    def expireBatched(dir: String, name: String,
+                      beforeRewrite: Seq[Any] => Unit = _ => ()): Unit =
+      readIfData(spark, dir).foreach { t =>
+        receipts += (name -> MergeUpsert.eraseFailing(spark, dir, t, !old,
+          beforeRewrite = beforeRewrite))
+      }
+    expireBatched(bronzeDir, "bronze", batches =>
+      if (keyIndexCol.isDefined)
+        savePendingBatches(spark, warehouseDir,
+          (loadPendingBatches(spark, warehouseDir) ++
+            batches.map(_.toString.toLong)).distinct))
     expireBatched(quarDir, "quarantine_events")
 
     // Bronze's key index, when one is maintained ([[KeyIndex]],
@@ -261,36 +223,23 @@ object Retention {
         Consumers.invalidateAll(spark, dir)
     }
     expireRowImaged(silverDir, "silver_sessions")
-    expireRowImaged(userGoldDir, "gold_user_daily")
+    expireRowImaged(userGoldDir, userGold)
 
     // 4. Aggregate golds: date-partition deletions published as
     // ordinary change-log entries (log-driven views stay
-    // maintainable). Each scopes its dates from its own surface.
-    val grains: Map[String, (Seq[String], DataFrame => DataFrame)] = Map(
-      "gold_episode_daily" ->
-        (Seq("webtoon_id", "episode_id"), identity[DataFrame] _),
-      "gold_webtoon_daily" -> (Seq("webtoon_id"), identity[DataFrame] _),
-      "gold_platform_device_daily" ->
-        (Seq("platform", "device", "browser"), identity[DataFrame] _),
-      "gold_country_daily" -> (Seq("country"), identity[DataFrame] _),
-      "gold_user_sketch" -> (Seq.empty[String],
-        (df: DataFrame) => df.select(col("datetime"), col("dau_est"))))
-    aggGolds.foreach { t =>
-      val dir = s"$warehouseDir/$t"
-      readIfData(spark, dir).foreach { g =>
-        val dates = g.filter(oldDt).select(col("datetime")).distinct()
+    // maintainable). Each scopes its dates from its own surface, and
+    // expires exactly those dates — no halo: retained partitions keep
+    // the values they were computed with.
+    IncrementalGold.dateGolds.foreach { g =>
+      val dir = s"$warehouseDir/${g.table}"
+      readIfData(spark, dir).foreach { t =>
+        val dates = t.filter(oldDt).select(col("datetime")).distinct()
           .collect().map(_.getDate(0)).toIndexedSeq
-        val n = if (dates.isEmpty) 0L
-          else g.filter(col("datetime").isin(dates: _*)).count()
-        receipts += (t -> n)
-        if (dates.nonEmpty) {
-          val (grain, view) = grains(t)
-          val cdc = if (ChangeLog.hasLog(spark, dir))
-            Some(batchId) else None
-          IncrementalGold.dateScopedPurge(spark, dir, dates, grain,
-            backDays = 0, fwdDays = 0, changeLogBatch = cdc,
-            changeLogView = view, producer = "retention")
-        }
+        receipts += (g.table -> (if (dates.isEmpty) 0L
+          else t.filter(col("datetime").isin(dates: _*)).count()))
+        g.converge(spark, None, dir, dates,
+          Option.when(ChangeLog.hasLog(spark, dir))(batchId),
+          producer = "retention")
       }
     }
     Receipt(batchId, receipts.toSeq)

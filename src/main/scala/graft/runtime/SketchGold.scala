@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * the late re-stamped event of IncrementalSilverSpec — must take the
   * recompute path ([[recomputeDelta]]), which rebuilds the affected
   * days' sketches from their silver slice, the
-  * [[IncrementalGold.dateScopedDelta]] discipline (b = f = 0: a day's
+  * [[IncrementalGold.DateGold]] discipline (b = f = 0: a day's
   * sketch reads that day only).
   *
   * lgK = 14 ⇒ relative standard error ≈ 1.04/√2¹⁴ ≈ 0.8%; the

@@ -283,7 +283,7 @@ object StarJoinView {
       }
 
     private def read(dir: String): DataFrame =
-      spark.read.option("mergeSchema", "true").parquet(dir)
+      ChangeLog.readByFooters(spark, dir)
 
     /** Seed: the one full star join, stamped at every head and written
       * by `write`, then the vector file and the config signature. The
@@ -522,7 +522,7 @@ object StarJoinView {
     // straggler top-ups.
     val ahead: IndexedSeq[Any] =
       if (!fs.exists(loop.marker)) IndexedSeq.empty
-      else spark.read.parquet(viewDir)
+      else ChangeLog.readByFooters(spark, viewDir)
         .groupBy(col(partDim))
         .agg(max(col(asOfCols.head)).as("_p0"),
           asOfCols.tail.zipWithIndex.map { case (c, i) =>
@@ -537,7 +537,7 @@ object StarJoinView {
       fs.delete(loop.marker, false)
       return loop.registered(heads)
     }
-    val viewCur = spark.read.parquet(viewDir)
+    val viewCur = ChangeLog.readByFooters(spark, viewDir)
       .filter(col(partDim).isin(touched: _*))
     // Straggler detection: each partition's applied VECTOR, clamped
     // to the committed vector component-wise (the file invariant).

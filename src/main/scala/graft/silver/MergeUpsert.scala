@@ -1,7 +1,7 @@
 package graft.silver
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S9: idempotent MERGE-INTO rewrite for plain partitioned parquet
@@ -90,7 +90,7 @@ object MergeUpsert {
     * still rewrite (the scope-side scan is column-pruned to
     * (scopeCols, partitionCol); at 100 TB a scope-bucketed layout
     * prunes it further). A partition whose rewrite comes out EMPTY is
-    * deleted via the trash protocol (scaladoc on [[dropPartitions]]).
+    * deleted via the trash protocol (scaladoc on [[dropPartitionDirs]]).
     * Idempotent: re-running the same stage re-derives the same scope
     * rows. Returns the affected partition values of a merge into
     * existing data (staged first, then the scope's previous ones): the
@@ -107,8 +107,11 @@ object MergeUpsert {
       None
     } else {
       val target = spark.read.option("mergeSchema", "true").parquet(targetDir)
-      val stagedVals = stage.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)).toIndexedSeq
+      // Distinct per partition, no shuffle: one job over the stage
+      // (which a caller recomputing a scope materializes), not two.
+      val stagedVals = stage.select(col(partitionCol)).rdd
+        .mapPartitions(_.map(_.get(0)).toSet.iterator)
+        .collect().toIndexedSeq.distinct
       val scopeVals = target
         .join(scope.select(scopeCols.map(col): _*).distinct(),
           scopeCols, "left_semi")
@@ -210,6 +213,43 @@ object MergeUpsert {
     }
   }
 
+  /** The table at `dir`, or None when it holds no data: absent, or
+    * emptied down to its `_SUCCESS` marker by a delete-capable mode,
+    * which leaves no footer to infer a schema from. For a maintenance
+    * op that state means "nothing left to touch" (a retry must not
+    * crash on the emptiness its first attempt produced). */
+  private[graft] def readIfData(spark: SparkSession,
+                                dir: String): Option[DataFrame] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (sweepAndHasData(fs, p)) Some(spark.read.parquet(dir)) else None
+  }
+
+  /** Erase the rows of `table` (the `batch_id`-partitioned table at
+    * `targetDir`, or a partition-pruned slice of it) that fail `keep`.
+    * One aggregate finds the batches holding such rows and counts
+    * them; exactly those batch partitions rewrite with the rows that
+    * pass, and one left with none is deleted ([[replacePartitions]]).
+    * A NULL `keep` keeps its row. `beforeRewrite` sees the batch ids
+    * first: the hook for durable scope that a crash retry needs once
+    * the rewrite has erased the evidence. Returns the rows erased. */
+  private[graft] def eraseFailing(spark: SparkSession, targetDir: String,
+                                  table: DataFrame, keep: Column,
+                                  beforeRewrite: Seq[Any] => Unit = _ => ())
+      : Long = {
+    val kept = coalesce(keep, lit(true))
+    val hits = table.filter(!kept).groupBy(col("batch_id")).count()
+      .collect().map(r => (r.get(0), r.getLong(1))).toIndexedSeq
+    val batches = hits.map(_._1)
+    if (batches.nonEmpty) {
+      beforeRewrite(batches)
+      replacePartitions(spark, targetDir,
+        table.filter(col("batch_id").isin(batches: _*) && kept), batches,
+        partitionCol = "batch_id")
+    }
+    hits.map(_._2).sum
+  }
+
   /** isin() never matches NULL (SQL three-valued logic), so a null
     * partition value needs its own predicate. */
   private def affectedPredicate(partitionCol: String,
@@ -256,15 +296,6 @@ object MergeUpsert {
     * the partition is missing": a trash name means this data is DEAD,
     * so recovery completes the delete instead of resurrecting stale
     * rows. */
-  private[graft] def dropPartitions(spark: SparkSession, targetDir: String,
-                                    partitionCol: String,
-                                    vals: Seq[Any]): Unit = {
-    val rootPath = new Path(targetDir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dropPartitionDirs(fs, rootPath,
-      vals.map(partitionDirName(partitionCol, _)))
-  }
-
   private def dropPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
                                 rootPath: Path,
                                 dirNames: Seq[String]): Unit =
