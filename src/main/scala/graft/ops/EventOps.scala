@@ -363,11 +363,11 @@ object EventOps {
     * function of the input SET — partitioning- and order-independent —
     * so the contract can never flap. */
   /** The pre-checkpoint (user_id, day) activity sub-job of
-    * [[sketchHllWau]] — the plan-evidence surface (graft.Explain
-    * `inner:sketch_hll_wau`): the keyed spread's hash(user_id) exchange
-    * is the ONLY exchange here, reused by the distinct (r17 keyed-spread
-    * claim, adjudicated r18: same-window A/B keyed {1.00, 1.19} s vs
-    * round-robin {1.67, 1.17} s — kept). */
+    * [[sketchHllWau]], shown by graft.Explain as its localCheckpoint:
+    * the keyed spread's hash(user_id) exchange is the ONLY exchange
+    * here, reused by the distinct (r17 keyed-spread claim, adjudicated
+    * r18: same-window A/B keyed {1.00, 1.19} s vs round-robin
+    * {1.67, 1.17} s — kept). */
   private[graft] def hllWauActivePlan(spark: SparkSession,
                                       dir: String): DataFrame =
     graft.util.Layout.spreadBy(

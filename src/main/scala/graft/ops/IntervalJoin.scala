@@ -64,11 +64,10 @@ object IntervalJoin {
     if (maxBucket <= cap) ColdArm else SaltArm
 
   /** Each session's [min start, max end] envelope (`session_id`, `s`,
-    * `e`) — the pre-checkpoint sub-plan of [[concurrentSessions]], and
-    * the plan-evidence surface of graft.Explain
-    * `inner:join_interval_overlap`. Gold-side convention: sessions over
-    * cleansed events (the silver dedup is its own materialization — the
-    * goldPre oracle preamble).
+    * `e`) — the pre-checkpoint sub-plan of [[concurrentSessions]], which
+    * graft.Explain shows as join_interval_overlap's localCheckpoint.
+    * Gold-side convention: sessions over cleansed events (the silver
+    * dedup is its own materialization — the goldPre oracle preamble).
     *
     * Envelopes straight from the session ASSIGNMENT (r17): the silver
     * aggregate's 9-key groupBy + 10 aggregate functions + state machine

@@ -51,6 +51,19 @@ object Pipeline {
       try out.write(json.getBytes("UTF-8")) finally out.close()
     } catch { case _: Throwable => () }
 
+  /** One chain's stage runner: the first failing stage writes its C6
+    * alert ([[writeAlert]]), calls `onFailure`, and rethrows. */
+  private final class Stages(spark: SparkSession, warehouseDir: String,
+                             onFailure: (String, Throwable) => Unit) {
+    def apply[T](name: String)(body: => T): T =
+      try body
+      catch { case e: Throwable =>
+        writeAlert(spark, warehouseDir, name, e)
+        onFailure(name, e)
+        throw e
+      }
+  }
+
   /** Runs the full chain for one source dir into `warehouseDir`.
     * Returns per-table row counts; on the first failing stage writes a C6
     * alert record, calls `onFailure`, and rethrows.
@@ -61,27 +74,18 @@ object Pipeline {
     * no gold job pays the per-job user_id shuffle (see [[Bucketed]]; at
     * 100 TB that shuffle, not the aggregation, is the bill). */
   def runDaily(spark: SparkSession, sfDir: String, warehouseDir: String,
-               minSilverFiles: Int = 1,
-               onFailure: (String, Throwable) => Unit = (_, _) => (),
-               bucketedTable: String = ""): Seq[Result] = {
-    def stage[T](name: String)(body: => T): T =
-      try body
-      catch { case e: Throwable =>
-        writeAlert(spark, warehouseDir, name, e)
-        onFailure(name, e)
-        throw e
-      }
+               onFailure: (String, Throwable) => Unit = (_, _) => ())
+      : Seq[Result] = {
+    val stage = new Stages(spark, warehouseDir, onFailure)
 
     // Warehouse-scoped table name + location: two pipelines sharing one
     // session (a backfill beside the daily run, parallel tests) must not
     // cross-talk through a catalog-global default name, and the layout
     // must live INSIDE the pipeline's warehouse dir — archiving the
     // warehouse keeps the system-of-record layout with it.
-    val btable =
-      if (bucketedTable.nonEmpty) bucketedTable
-      else "silver_sessions_bucketed_" + java.security.MessageDigest
-        .getInstance("MD5").digest(warehouseDir.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
+    val btable = "silver_sessions_bucketed_" + java.security.MessageDigest
+      .getInstance("MD5").digest(warehouseDir.getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
     val silverDir = s"$warehouseDir/silver_sessions"
 
     // Preflight, BEFORE any write mutates the warehouse: a blind full
@@ -233,11 +237,11 @@ object Pipeline {
     * failure path mirrors [[runDaily]]: first failing stage writes a
     * C6 alert, invokes `onFailure`, rethrows.
     *
-    * With `changeLog` (default on), silver AND every gold upsert also
-    * publish their per-batch CDC entry ([[ChangeLog]]) keyed by the
-    * bronze watermark, and the consumed delta's cleanse rejects land
-    * in the quarantine table — the two audit surfaces a
-    * merge-maintained warehouse owes its consumers.
+    * Silver AND every gold upsert also publish their per-batch CDC
+    * entry ([[ChangeLog]]) keyed by the bronze watermark, and the
+    * consumed delta's cleanse rejects land in the quarantine table —
+    * the two audit surfaces a merge-maintained warehouse owes its
+    * consumers.
     *
     * `collapseLogsUpTo` is the change-log retention hook: pass the
     * MINIMUM watermark across every registered log consumer and each
@@ -256,16 +260,9 @@ object Pipeline {
                             (_, _) => (),
                           toSilver: org.apache.spark.sql.DataFrame =>
                             org.apache.spark.sql.DataFrame = null,
-                          changeLog: Boolean = true,
                           collapseLogsUpTo: Option[Long] = None)
       : Option[Long] = {
-    def stage[T](name: String)(body: => T): T =
-      try body
-      catch { case e: Throwable =>
-        writeAlert(spark, warehouseDir, name, e)
-        onFailure(name, e)
-        throw e
-      }
+    val stage = new Stages(spark, warehouseDir, onFailure)
     val silverDir = s"$warehouseDir/silver_sessions"
     // Log-entry ids = bronze endpoint + the warehouse's durable CDC id
     // offset. The offset is 0 until a compliance op publishes out of
@@ -279,12 +276,12 @@ object Pipeline {
     // keep-entry protocol exactly as before.
     val idOffset = cdcIdOffset(spark, warehouseDir)
     val d = stage("silver_incremental") {
-      // Silver CDC rides the same flag as the golds', gated on the
-      // default derivation (a custom toSilver may not be
-      // SessionKey-keyed — see IncrementalSilver.updateDetailed).
+      // Silver CDC is gated on the default derivation (a custom
+      // toSilver may not be SessionKey-keyed — see
+      // IncrementalSilver.updateDetailed).
       IncrementalSilver.updateDetailed(spark, bronzeDir, silverDir,
         watermark, asOfUs, toSilver,
-        changeLog = changeLog && toSilver == null,
+        changeLog = toSilver == null,
         logIdOffset = idOffset)
     }
     // Dead-letter capture for the consumed delta (default harness chain
@@ -328,7 +325,7 @@ object Pipeline {
       // tail with ChangeLog.readSince (any watermark ≥ the collapse
       // boundary filters correctly), never readAsOf on arbitrary
       // bronze ids. A retried update overwrites its own log partition.
-      val cdc = if (changeLog) d.watermark.map(_ + idOffset) else None
+      val cdc = d.watermark.map(_ + idOffset)
       val userGold = IncrementalGold.UserGoldTable
       stage(userGold) {
         IncrementalGold.userDailyDelta(spark, silver,

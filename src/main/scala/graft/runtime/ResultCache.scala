@@ -139,22 +139,6 @@ object ResultCache {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  private def readSig(spark: SparkSession, cacheRoot: String,
-                      name: String): Option[String] = {
-    val p = sigPath(cacheRoot, name)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](256)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      Some(new String(buf.toByteArray, "UTF-8").trim)
-        .filter(_.nonEmpty)
-    } finally in.close()
-  }
-
   /** True when a serve for the inputs' current state would HIT —
     * exposed so callers (and specs) can distinguish the hit path
     * without serving. A materialization for the current signature

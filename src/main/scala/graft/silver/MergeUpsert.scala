@@ -56,16 +56,16 @@ object MergeUpsert {
       val affected = stage.select(col(partitionCol)).distinct()
         .collect().map(_.get(0)).toIndexedSeq
       val affectedPred = affectedPredicate(partitionCol, affected)
-      // mergeSchema: the target's schema must be the UNION of its
-      // files' schemas, not whichever footer Spark happens to sample —
-      // after an evolution write, a sampled old footer would silently
-      // null out evolved-column values in every partition this upsert
-      // rewrites (and make strict-mode upserts of evolved tables fail
-      // spuriously). The footer pass is metadata-scale and
-      // parallelized; the row filter still prunes to affected
-      // partitions.
-      val target = spark.read.option("mergeSchema", "true")
-        .parquet(targetDir).filter(affectedPred)
+      // The target's schema must be the UNION of its files' schemas,
+      // not whichever footer Spark happens to sample — after an
+      // evolution write, a sampled old footer would silently null out
+      // evolved-column values in every partition this upsert rewrites
+      // (and make strict-mode upserts of evolved tables fail
+      // spuriously). readByFooters takes that union from one footer
+      // per data directory on the driver, with no inference job; the
+      // row filter still prunes to affected partitions.
+      val target = graft.runtime.ChangeLog.readByFooters(spark, targetDir)
+        .filter(affectedPred)
       val merged = target
         .join(stage, keyCols, "left_anti")
         .unionByName(stage, allowMissingColumns = evolveSchema)
@@ -106,7 +106,8 @@ object MergeUpsert {
       initialWrite(spark, t, stage, partitionCol)
       None
     } else {
-      val target = spark.read.option("mergeSchema", "true").parquet(targetDir)
+      // Union schema from the footers, as in [[upsert]].
+      val target = graft.runtime.ChangeLog.readByFooters(spark, targetDir)
       // Distinct per partition, no shuffle: one job over the stage
       // (which a caller recomputing a scope materializes), not two.
       val stagedVals = stage.select(col(partitionCol)).rdd

@@ -215,8 +215,8 @@ object ProductQuantizer {
   }
 
   /** The train → encode → score pipeline WITHOUT the terminal
-    * checkpoint — the plan-evidence surface (graft.Explain
-    * `inner:sim_pq_topk`). Leaves the sub persist live; [[topK]] wraps
+    * checkpoint — the plan graft.Explain shows as sim_pq_topk's
+    * localCheckpoint. Leaves the sub persist live; [[topK]] wraps
     * it and releases it after checkpointing. */
   private[graft] def topKFrame(s: SparkSession, dir: String,
       nQueries: Int = 10, k: Int = 5): (DataFrame, Seq[DataFrame]) = {

@@ -228,7 +228,7 @@ object ContainmentDedup {
   }
 
   /** The candidates → confirm pipeline WITHOUT the terminal checkpoint —
-    * the plan-evidence surface (graft.Explain `inner:dedup_containment`).
+    * the plan graft.Explain shows as dedup_containment's localCheckpoint.
     * Leaves the trigram/token persists live; [[pairs]] wraps it and
     * releases them after checkpointing. */
   private[graft] def confirmedFrame(s: SparkSession, dir: String,

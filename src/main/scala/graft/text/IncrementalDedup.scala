@@ -135,7 +135,7 @@ object IncrementalDedup {
       .filter(col("bucket") >= 8)
 
   /** The serving pipeline WITHOUT the terminal checkpoint — the
-    * plan-evidence surface (graft.Explain `inner:dedup_incremental`).
+    * plan graft.Explain shows as dedup_incremental's localCheckpoint.
     * Leaves the delta-signature persist live; [[checkDocs]] wraps it
     * and releases it after checkpointing. */
   private[graft] def checkFrame(spark: SparkSession, docs: DataFrame,
