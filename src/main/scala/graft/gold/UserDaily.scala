@@ -1,7 +1,7 @@
 package graft.gold
 
 import graft.util.Num
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object UserDaily {
 
-  /** `d` is the distinct-count aggregate. The DEFAULT is
-    * `size(collect_set(...))`: identical semantics to exact
-    * `countDistinct` (both drop nulls; set size = distinct count) —
-    * the bucketed twin proved the equivalence against the shared oracle
-    * for a full round before the plain path adopted it — but WITHOUT
+  /** Distinct counts run as `size(collect_set(...))` (`d` below):
+    * identical semantics to exact `countDistinct` (both drop nulls;
+    * set size = distinct count) — the bucketed twin proved the
+    * equivalence against the shared oracle for a full round before the
+    * plain path adopted it — but WITHOUT
     * the Expand pipeline `RewriteDistinctAggregates` plans for five
     * distincts, which multiplies every session row ×6 through the
     * shuffle AND discards the child's partitioning (the flagged
@@ -29,9 +29,8 @@ object UserDaily {
     * day, catalog-behavior-sized at any corpus scale. Exact
     * `countDistinct` coverage (§2 A2–A4) lives on in
     * `orders_daily_distinct` and the funnel/path queries. */
-  def build(sessions: DataFrame,
-            d: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-              c => size(collect_set(c)).cast("bigint")): DataFrame = {
+  def build(sessions: DataFrame): DataFrame = {
+    def d(c: Column): Column = size(collect_set(c)).cast("bigint")
     // A2/A3/A4/A5/A6/A8 main aggregate.
     val base = sessions.groupBy(col("datetime"), col("user_id")).agg(
       d(col("session_id")).as("total_sessions"),

@@ -23,9 +23,12 @@ import org.apache.spark.sql.functions.col
   *
   * The bucket count is a LAYOUT constant (like the reference's partition
   * spec): at 100 TB with ~1 GB of silver per bucket-file per date
-  * partition, thousands of buckets; the harness default keeps it small.
+  * partition, thousands of buckets; [[Buckets]] keeps it small.
   */
 object Bucketed {
+
+  /** The silver layout's bucket count. */
+  val Buckets = 8
 
   /** Write `df` as a bucketed, sorted table. Bucket files are
     * additionally sorted by (user_id, start_us) so user-ordered windows
@@ -33,7 +36,6 @@ object Bucketed {
     * that path (a pipeline keeps its layout inside its own warehouse
     * dir instead of the session-global default); unset = managed. */
   def writeSilver(spark: SparkSession, table: String, df: DataFrame,
-                  buckets: Int = 8,
                   location: Option[String] = None): Unit = {
     // Overwrite must also survive an ORPHANED location: a previous
     // process' table directory outlives the (in-memory) catalog's
@@ -50,7 +52,7 @@ object Bucketed {
     if (fs.exists(path)) fs.delete(path, true)
     val writer = df.write
       .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "user_id")
+      .bucketBy(Buckets, "user_id")
       .sortBy("user_id", "start_us")
       .format("parquet")
     location.fold(writer)(l => writer.option("path", l)).saveAsTable(table)
@@ -72,17 +74,13 @@ object Bucketed {
         org.apache.spark.sql.functions.max(col("max_value_cents"))
           .as("max_value_cents"))
 
-  /** The FULL user gold re-planned for the bucketed layout: same rows as
-    * [[graft.gold.UserDaily.build]] (same oracle), but distinct counts
-    * run as `size(collect_set(...))` so no Expand breaks the scan's
-    * clustering — the whole job (main aggregate, lag window, both
-    * side-aggregate joins) plans with ZERO ShuffleExchangeExec over a
-    * `bucketBy(user_id)` table. Per-group set state is bounded by a
-    * user-day's session count, not the corpus. */
+  /** The FULL user gold over the bucketed table: [[graft.gold.UserDaily
+    * .build]]'s set-based distinct counts plan no Expand, so nothing
+    * breaks the scan's clustering — the whole job (main aggregate, lag
+    * window, both side-aggregate joins) plans with ZERO
+    * ShuffleExchangeExec over a `bucketBy(user_id)` table. */
   def userDaily(spark: SparkSession, table: String): DataFrame =
-    graft.gold.UserDaily.build(spark.table(table),
-      c => org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.collect_set(c)).cast("bigint"))
+    graft.gold.UserDaily.build(spark.table(table))
 
   /** The full country gold re-planned for the bucketed layout — same
     * rows and oracle as [[graft.gold.CountryDaily.build]]. Every RAW-ROW

@@ -141,7 +141,8 @@ object ChangeLog {
       .map(_.stripPrefix(prefix))
   }
 
-  private def writeProducerMarker(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeProducerMarker(spark: SparkSession,
+                                  fs: org.apache.hadoop.fs.FileSystem,
                                   tableDir: String, batchId: Long,
                                   producer: String): Unit = {
     val d = producerMarkerDir(tableDir)
@@ -151,7 +152,8 @@ object ChangeLog {
         val n = st.getPath.getName
         n.startsWith(prefix) && n != prefix + producer
       }.foreach(st => fs.delete(st.getPath, false))
-    touch(fs, new Path(d, producerMarkerName(batchId, producer)))
+    Incremental.touch(spark,
+      new Path(d, producerMarkerName(batchId, producer)))
   }
 
   /** Sweep producer markers whose entries a [[checkpoint]] fold
@@ -177,12 +179,6 @@ object ChangeLog {
 
   /** Collapse boundary marker under the log dir ([[checkpoint]]). */
   private val CollapseMarker = "_collapsed_up_to"
-
-  private def touch(fs: org.apache.hadoop.fs.FileSystem,
-                    p: Path): Unit = {
-    val out = fs.create(p, true)
-    out.close()
-  }
 
   /** Widen `df` with NULL columns for every field of `other` it
     * lacks — the union-schema view two differently-evolved snapshots
@@ -278,7 +274,7 @@ object ChangeLog {
     // widen-with-nulls semantics every mergeSchema read applies).
     if (stageEntry(fs, TableDiff.diff(alignToUnion(b, a.schema),
         alignToUnion(a, b.schema), c.keys), c.pending)) {
-      touch(fs, new Path(c.pending, PendingCommitMarker))
+      Incremental.touch(spark, new Path(c.pending, PendingCommitMarker))
       c.committed = true
     }
   }
@@ -458,7 +454,7 @@ object ChangeLog {
       // Stamp the producer (the collision guard above reads it) before
       // the publish rename: a crash between the two leaves the pending
       // entry, whose retry re-publishes and re-stamps.
-      writeProducerMarker(fs, tableDir, batchId, producer)
+      writeProducerMarker(spark, fs, tableDir, batchId, producer)
       if (c.committed) renameToEntry(fs, pending, tableDir, batchId)
     } else publishFromPreImage(spark, fs, rootPath, tableDir, keys,
       batchId, scope, producer, preP, pending)(write)
@@ -496,8 +492,10 @@ object ChangeLog {
     fs.delete(preP, true) // a partial (uncommitted) leftover
     pre.write.mode("overwrite").parquet(preP.toString)
     if (!fs.exists(preP)) fs.mkdirs(preP)
-    if (footerRows(fs, preP) == 0L) touch(fs, new Path(preP, PreEmptyMarker))
-    touch(fs, new Path(preP, PreCommitMarker))
+    val spark = pre.sparkSession
+    if (footerRows(fs, preP) == 0L)
+      Incremental.touch(spark, new Path(preP, PreEmptyMarker))
+    Incremental.touch(spark, new Path(preP, PreCommitMarker))
   }
 
   /** The retry-only path: a committed durable pre-image holds the
@@ -548,7 +546,7 @@ object ChangeLog {
     // it), then retire the pre-image. A crash between the two marker
     // steps is benign — the pre-image outlives it, so a retry
     // re-publishes and re-stamps.
-    writeProducerMarker(fs, tableDir, batchId, producer)
+    writeProducerMarker(spark, fs, tableDir, batchId, producer)
     fs.delete(preP, true)
   }
 

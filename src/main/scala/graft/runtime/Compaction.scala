@@ -12,14 +12,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory (the Iceberg-manifest-planning analogue, same discipline
   * as MergeUpsert's affected-value collect). A partition is rewritten
   * only when its file count exceeds what its byte size justifies at
-  * `targetBytes` — so the operation is IDEMPOTENT: a second run finds
-  * every partition already at its target layout and rewrites nothing.
+  * [[TargetBytes]] per file — so the operation is IDEMPOTENT: a second
+  * run finds every partition already at its target layout and
+  * rewrites nothing.
   *
   * Each rewrite reads ONE partition directory, coalesces to the
   * justified file count (coalesce, not repartition — no shuffle, this
   * is a pure file-merge), writes to a `.compact-<uuid>` staging
-  * directory next to the target, and swaps via the MergeUpsert rename
-  * protocol (target→backup, staging→target, drop backup). Partition
+  * directory next to the target, and swaps it in with
+  * [[swapPartition]] (target→backup, staging→target, drop backup),
+  * the rename triple MergeUpsert runs too. Partition
   * VALUES never change — the hive directory names are preserved
   * verbatim, so readers' partition pruning is unaffected.
   *
@@ -138,8 +140,30 @@ object Compaction {
     actions
   }
 
-  def compact(spark: SparkSession, targetDir: String,
-              targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
+  /** Swap the staged directory `staged` in as partition `part` of
+    * `root`: live → `.backup-<uuid>--<part>`, staged → live, drop the
+    * backup — the rename triple every rename-swap writer runs, named so
+    * [[recoverySweep]] can heal a crash between any two steps. A
+    * partition that is not live yet takes the staged one by a single
+    * rename. */
+  private[graft] def swapPartition(fs: FileSystem, root: Path,
+                                   part: String, staged: Path,
+                                   uuid: String): Unit = {
+    def renameOrFail(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"rename $from -> $to failed")
+    val live = new Path(root, part)
+    val backup = new Path(root, s".backup-$uuid$BackupSep$part")
+    val replacing = fs.exists(live)
+    if (replacing) renameOrFail(live, backup)
+    renameOrFail(staged, live)
+    if (replacing) fs.delete(backup, true)
+  }
+
+  /** The file size a compacted partition is planned at. */
+  val TargetBytes: Long = 128L * 1024 * 1024
+
+  def compact(spark: SparkSession, targetDir: String): DataFrame = {
     import spark.implicits._
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -157,7 +181,7 @@ object Compaction {
             !f.getPath.getName.startsWith("_"))
         val bytes = files.map(_.getLen).sum
         val want = math.max(1L,
-          (bytes + targetBytes - 1) / targetBytes).toInt
+          (bytes + TargetBytes - 1) / TargetBytes).toInt
         if (files.length > want) {
           val uuid = java.util.UUID.randomUUID().toString
           val staging = new Path(root, s".compact-$uuid")
@@ -167,18 +191,9 @@ object Compaction {
           // The staging dir holds plain data files (no partition
           // subdir — we wrote one partition's rows without its
           // partition column, which lives in the DIRECTORY name).
-          // Swap: target→backup, staging→target, drop backup.
-          def renameOrFail(from: Path, to: Path): Unit =
-            if (!fs.rename(from, to))
-              throw new java.io.IOException(s"rename $from -> $to failed")
-          val backup = new Path(root,
-            s".backup-$uuid$BackupSep${p.getPath.getName}")
-          renameOrFail(p.getPath, backup)
-          renameOrFail(staging, p.getPath)
-          // _SUCCESS marker from the staging write is now inside the
-          // partition dir; it is filtered by readers and by this
-          // planner's next listing.
-          fs.delete(backup, true)
+          // Its _SUCCESS marker lands inside the partition dir; it is
+          // filtered by readers and by this planner's next listing.
+          swapPartition(fs, root, p.getPath.getName, staging, uuid)
           report += ((p.getPath.getName, files.length.toLong,
             want.toLong, bytes))
         }

@@ -39,10 +39,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale shape: one tiny file per consumer, read by listing one
   * directory — metadata-scale, no data path touches it. Registration
-  * is atomic (temp + rename, the watermark-file protocol), written
-  * AFTER the consumer's own state commits: a crash between the two
-  * leaves the registry one refresh behind — conservative for the
-  * collapse (it folds less), never unsafe. */
+  * is atomic (the runtime's sidecar protocol,
+  * [[Incremental.writeText]]), written AFTER the consumer's own state
+  * commits: a crash between the two leaves the registry one refresh
+  * behind — conservative for the collapse (it folds less), never
+  * unsafe. */
 object Consumers {
 
   /** The registry of the log of the table at `tableDir`. */
@@ -97,17 +98,10 @@ object Consumers {
       s"consumer name '$name' must be a non-empty [A-Za-z0-9_.-]+ " +
         "token not starting with '_' or '.' (it names the registry " +
         "file; leading underscore/dot names are reserved sidecars)")
-    val p = new Path(dir(tableDir), name)
-    val tmp = new Path(dir(tableDir), name + ".tmp")
-    val f = fs(spark, p)
-    val out = f.create(tmp, true)
-    try out.write(
-      (position.toString + "\n" + viewDir.getOrElse("") + "\n" +
+    Incremental.writeText(spark, new Path(dir(tableDir), name),
+      position.toString + "\n" + viewDir.getOrElse("") + "\n" +
         System.currentTimeMillis().toString + "\n" +
-        (if (observer) "observer" else "")).getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    f.rename(tmp, p)
+        (if (observer) "observer" else ""))
   }
 
   /** POINTER (indirect) registration — [[register]] for a consumer
@@ -136,16 +130,9 @@ object Consumers {
         "token not starting with '_' or '.'")
     require(component >= 0,
       "component must index a position in the pointer target")
-    val p = new Path(dir(tableDir), name)
-    val tmp = new Path(dir(tableDir), name + ".tmp")
-    val f = fs(spark, p)
-    val out = f.create(tmp, true)
-    try out.write(
-      (s"@pos $component $posPath\n" + viewDir.getOrElse("") + "\n" +
-        System.currentTimeMillis().toString + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    f.rename(tmp, p)
+    Incremental.writeText(spark, new Path(dir(tableDir), name),
+      s"@pos $component $posPath\n" + viewDir.getOrElse("") + "\n" +
+        System.currentTimeMillis().toString + "\n")
   }
 
   /** Resolve a pointer registration's position: component `i` of the
@@ -153,19 +140,10 @@ object Consumers {
     * torn, or too short (see [[registerPointer]] — conservative). */
   private def resolvePointer(spark: SparkSession, posPath: String,
                              component: Int): Long = {
-    val p = new Path(posPath)
-    val f = fs(spark, p)
-    if (!f.exists(p)) return -1L
     val text =
-      try {
-        val in = f.open(p)
-        try {
-          val bytes = new Array[Byte](512)
-          val n = in.read(bytes)
-          if (n <= 0) "" else new String(bytes, 0, n, "UTF-8").trim
-        } finally in.close()
-      } catch { case _: java.io.IOException => "" }
-    text.split(",").lift(component).flatMap(_.trim.toLongOption)
+      try Incremental.readText(spark, new Path(posPath)).getOrElse("")
+      catch { case _: java.io.IOException => "" }
+    text.trim.split(",").lift(component).flatMap(_.trim.toLongOption)
       .getOrElse(-1L)
   }
 
@@ -180,19 +158,9 @@ object Consumers {
 
   private def read(spark: SparkSession, tableDir: String,
                    name: String): Option[Registration] = {
-    val p = new Path(dir(tableDir), name)
-    val f = fs(spark, p)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    val lines = text.split("\n", 4)
+    val text = Incremental.readText(spark, new Path(dir(tableDir), name))
+    if (text.isEmpty) return None
+    val lines = text.get.split("\n", 4)
     val head0 = lines.headOption.map(_.trim).getOrElse("")
     if (head0.startsWith("@pos ")) {
       // Pointer registration ([[registerPointer]]): resolve the
@@ -225,7 +193,7 @@ object Consumers {
     val f = fs(spark, d)
     if (!f.exists(d)) return Seq.empty
     f.listStatus(d).toIndexedSeq
-      .filter(st => st.isFile && !st.getPath.getName.endsWith(".tmp") &&
+      .filter(st => st.isFile && !Incremental.isTemp(st.getPath) &&
         !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .map { st =>
@@ -299,22 +267,12 @@ object Consumers {
   /** The current clamp ledger (empty when no checkpoint has been
     * clamped since the blockers last advanced). */
   def staleClamps(spark: SparkSession, tableDir: String): Seq[Clamp] = {
-    val p = clampsPath(tableDir)
-    val f = fs(spark, p)
-    if (!f.exists(p)) return Seq.empty
-    val in = f.open(p)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
-      val Array(n, pos, c) = line.split("\t", 3)
-      Clamp(n, pos.toLong, c.toInt)
-    }.toSeq
+    val text = Incremental.readText(spark, clampsPath(tableDir))
+    text.toSeq.flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
+      .map { line =>
+        val Array(n, pos, c) = line.split("\t", 3)
+        Clamp(n, pos.toLong, c.toInt)
+      }
   }
 
   /** Record one clamped checkpoint: `blockers` are the consumers whose
@@ -334,17 +292,11 @@ object Consumers {
         prior.getOrElse((r.name, r.position), 0) + 1)
     }
     val p = clampsPath(tableDir)
-    val f = fs(spark, p)
-    if (next.isEmpty) { if (f.exists(p)) f.delete(p, false) }
-    else {
-      val tmp = new Path(p.toString + ".tmp")
-      val out = f.create(tmp, true)
-      try out.write(next.map(c => s"${c.name}\t${c.position}\t${c.count}")
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (f.exists(p)) f.delete(p, false)
-      f.rename(tmp, p)
-    }
+    if (next.nonEmpty)
+      Incremental.writeText(spark, p,
+        next.map(c => s"${c.name}\t${c.position}\t${c.count}")
+          .mkString("\n"))
+    else fs(spark, p).delete(p, false)
     val stale = next.filter(_.count >= WarnAfterClamps)
     stale.foreach { c =>
       System.err.println(

@@ -364,22 +364,10 @@ object DataSkipping {
     * root — the table's own full-recompute `mode("overwrite")` must
     * not eat it (the ChangeLog `_changelog_pre` lesson). */
   def pinnedStatsCols(spark: SparkSession,
-                      rootDir: String): Option[Seq[String]] = {
-    val p = pinPath(rootDir)
-    val filesystem = fs(spark, rootDir)
-    if (!filesystem.exists(p)) return None
-    val in = filesystem.open(p)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    Some(text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq)
+                      rootDir: String): Option[Seq[String]] =
+    Incremental.readText(spark, pinPath(rootDir))
+      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
       .filter(_.nonEmpty)
-  }
 
   /** The table's hive leaf partition directories (one level — the
     * warehouse convention; nested partitioning fails loud in the leaf
@@ -399,15 +387,7 @@ object DataSkipping {
   def enablePartitioned(spark: SparkSession, rootDir: String,
                         statsCols: Seq[String]): Unit = {
     require(statsCols.nonEmpty, "statsCols must be non-empty")
-    val p = pinPath(rootDir)
-    val filesystem = fs(spark, rootDir)
-    val tmp = new Path(p.toString + ".tmp")
-    val out = filesystem.create(tmp, true)
-    try out.write(statsCols.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (filesystem.exists(p)) filesystem.delete(p, false)
-    if (!filesystem.rename(tmp, p))
-      sys.error(s"skipping pin publish failed: rename $tmp -> $p")
+    Incremental.writeText(spark, pinPath(rootDir), statsCols.mkString("\n"))
     maintain(spark, rootDir, Seq.empty)
   }
 

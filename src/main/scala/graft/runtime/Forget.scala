@@ -106,35 +106,15 @@ object Forget {
 
   private def savePendingDates(spark: SparkSession, warehouseDir: String,
                                userId: Long,
-                               dates: Seq[java.sql.Date]): Unit = {
-    val p = new Path(pendingPath(warehouseDir, userId))
-    val tmp = new Path(p.toString + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(dates.map(_.toString).sorted.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+                               dates: Seq[java.sql.Date]): Unit =
+    Incremental.writeText(spark, new Path(pendingPath(warehouseDir, userId)),
+      dates.map(_.toString).sorted.mkString("\n"))
 
   private def loadPendingDates(spark: SparkSession, warehouseDir: String,
-                               userId: Long): Seq[java.sql.Date] = {
-    val p = new Path(pendingPath(warehouseDir, userId))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    text.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .map(java.sql.Date.valueOf).toSeq
-  }
+                               userId: Long): Seq[java.sql.Date] =
+    Incremental.readText(spark, new Path(pendingPath(warehouseDir, userId)))
+      .toSeq.flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
+      .map(java.sql.Date.valueOf)
 
   def forgetUser(spark: SparkSession, bronzeDir: String,
                  warehouseDir: String, userId: Long): Receipt =

@@ -95,33 +95,60 @@ object Incremental {
   }
 
   /** C3: watermark persistence (the reference stores it in an Airflow
-    * Variable, silver_dag.py:129-133). One small file per consumer;
-    * written atomically via rename so a crashed writer can't leave a
-    * torn value. */
-  def saveWatermark(spark: SparkSession, path: String, wm: Long): Unit = {
-    val p = new Path(path)
-    val tmp = new Path(path + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    * Variable, silver_dag.py:129-133). One small file per consumer,
+    * written through the sidecar protocol below. */
+  def saveWatermark(spark: SparkSession, path: String, wm: Long): Unit =
+    writeText(spark, new Path(path), wm.toString)
+
+  def loadWatermark(spark: SparkSession, path: String): Option[Long] =
+    readText(spark, new Path(path)).flatMap(_.trim.toLongOption)
+
+  // ------------------------------------------------------------------
+  // The runtime's one small-file protocol. Every sidecar the runtime
+  // keeps beside its tables (watermarks, consumer registrations, the
+  // clamp ledger, view vectors and configs, pending scopes, skipping
+  // pins, cache signatures and stamps, markers) is written and read
+  // here. A write goes to a `.tmp` sibling, then deletes the old file
+  // and renames the sibling over it, so a reader never sees a torn
+  // file; a leftover sibling is never read ([[isTemp]]). A crash
+  // between the delete and the rename leaves the file absent, with the
+  // new value only in the sibling.
+
+  private val TempSuffix = ".tmp"
+
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Atomically replace `p`'s content with `text` (UTF-8). */
+  private[runtime] def writeText(spark: SparkSession, p: Path,
+                                 text: String): Unit = {
+    val tmp = p.suffix(TempSuffix)
+    val fs = fsOf(spark, p)
     val out = fs.create(tmp, true)
-    try out.write(wm.toString.getBytes("UTF-8")) finally out.close()
+    try out.write(text.getBytes("UTF-8")) finally out.close()
     if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"sidecar publish failed: $tmp -> $p")
   }
 
-  def loadWatermark(spark: SparkSession, path: String): Option[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** `p`'s whole content (UTF-8); None when the file is absent. */
+  private[runtime] def readText(spark: SparkSession,
+                                p: Path): Option[String] = {
+    val fs = fsOf(spark, p)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](64)
-        val n = in.read(bytes)
-        if (n <= 0) None
-        else new String(bytes, 0, n, "UTF-8").trim.toLongOption
-      } finally in.close()
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     }
   }
+
+  /** Create (or truncate) the empty marker file `p`. */
+  private[runtime] def touch(spark: SparkSession, p: Path): Unit =
+    fsOf(spark, p).create(p, true).close()
+
+  /** True for a write's leftover temp sibling: never a sidecar itself. */
+  private[runtime] def isTemp(p: Path): Boolean =
+    p.getName.endsWith(TempSuffix)
 
   /** C4: completeness gate — fail the downstream chain when a partition
     * holds fewer data files than expected (gold_daily_dag.py:49-64). */

@@ -36,7 +36,8 @@ import org.apache.spark.sql.functions._
   * Maintenance is incremental and watermark-scoped ([[ensure]]): only
   * batches PAST the index's own durable watermark are scanned
   * (partition-pruned), their (key, batch) pairs appended, then the
-  * watermark advances by atomic rename. Crash between append and
+  * watermark advances atomically (the runtime's sidecar protocol,
+  * [[Incremental.saveWatermark]]). Crash between append and
   * watermark ⇒ the retry re-appends the same pairs: DUPLICATES, never
   * losses. Readers are duplicate-immune by construction ([[lookup]]
   * distincts; Forget's partition list is a set), so the contract is

@@ -86,13 +86,10 @@ object MaterializedView {
     * a scheduled re-seed. Serving reads are unaffected until then
     * (the marker is invisible to Spark); callers that must not serve
     * the stale window re-seed inline by calling refresh right after. */
-  def invalidate(spark: SparkSession, viewDir: String): Unit = {
-    val fs = fsOf(spark, viewDir)
-    val root = new Path(viewDir)
-    if (!fs.exists(root)) return // no state — nothing to invalidate
-    val out = fs.create(new Path(root, InvalidMarker), true)
-    out.close()
-  }
+  def invalidate(spark: SparkSession, viewDir: String): Unit =
+    // No state — nothing to invalidate.
+    if (fsOf(spark, viewDir).exists(new Path(viewDir)))
+      Incremental.touch(spark, new Path(viewDir, InvalidMarker))
 
   /** True while [[invalidate]]'s marker is pending. */
   def isInvalid(spark: SparkSession, viewDir: String): Boolean =

@@ -177,12 +177,10 @@ object Pipeline {
     }
 
     // Reference order (C5): user → episode → webtoon (reads episode gold)
-    // → platform/device → country. The user gold runs the
-    // layout-specialized form: UserDaily's default countDistinct plans
-    // an Expand that discards the bucketed partitioning, which would
-    // re-shuffle the table the layout write exists to keep in place —
-    // Bucketed.userDaily (set-based distincts, identical rows) keeps
-    // the whole job exchange-free.
+    // → platform/device → country. The user gold reads the bucketed
+    // table (Bucketed.userDaily): UserDaily's set-based distincts plan
+    // no Expand, so the scan's bucketing satisfies every user-keyed
+    // aggregate and window and the whole job runs exchange-free.
     val user = writeGold("gold_user_daily", Bucketed.userDaily(spark, btable))
     val episode = writeGold("gold_episode_daily", EpisodeDaily.build(silver))
     val episodeGold =

@@ -78,19 +78,12 @@ object ResultCache {
   /** The served-at epoch from a `_served` stamp's BODY, falling back
     * to the file's mtime when the body is empty or torn (pre-content
     * stamps, a crash mid-write — both safe: pure caches). */
-  private def servedAt(fs: org.apache.hadoop.fs.FileSystem,
-                       served: Path): Long = {
+  private def servedAt(spark: SparkSession, served: Path): Long = {
     val fromBody =
-      try {
-        val in = fs.open(served)
-        val text = try {
-          val bytes = new Array[Byte](32)
-          val n = in.read(bytes)
-          if (n <= 0) "" else new String(bytes, 0, n, "UTF-8").trim
-        } finally in.close()
-        text.toLongOption
-      } catch { case _: java.io.IOException => None }
-    fromBody.getOrElse(fs.getFileStatus(served).getModificationTime)
+      try Incremental.readText(spark, served).flatMap(_.trim.toLongOption)
+      catch { case _: java.io.IOException => None }
+    fromBody.getOrElse(
+      fsOf(spark, served).getFileStatus(served).getModificationTime)
   }
 
   /** One materialization directory PER SIGNATURE (round 16): the dir
@@ -217,19 +210,10 @@ object ResultCache {
     // filesystems where two serves land in one tick) would otherwise
     // order arbitrarily — safe (pure caches) but surprising. A torn
     // body falls back to the file's mtime.
-    def stampServed(): Unit = {
-      val out = fs.create(new Path(dataP, "_served"), true)
-      try out.write(System.currentTimeMillis().toString.getBytes("UTF-8"))
-      finally out.close()
-    }
-    def writeSigFile(): Unit = {
-      val sp = sigPath(cacheRoot, name)
-      val tmp = new Path(sp.toString + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(sig.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(sp)) fs.delete(sp, false)
-      fs.rename(tmp, sp)
-    }
+    def stampServed(): Unit = Incremental.writeText(spark,
+      new Path(dataP, "_served"), System.currentTimeMillis().toString)
+    def writeSigFile(): Unit =
+      Incremental.writeText(spark, sigPath(cacheRoot, name), sig)
     // HIT iff a materialization for THIS signature exists — the dir
     // name commits to (listing, version), so a torn `_sig` (crash
     // mid-publish) never forces a recompute the dirs can answer, and
@@ -276,7 +260,7 @@ object ResultCache {
       .map { st =>
         val served = new Path(st.getPath, "_served")
         val at =
-          if (fs.exists(served)) servedAt(fs, served)
+          if (fs.exists(served)) servedAt(spark, served)
           else st.getModificationTime
         (at, st.getPath)
       }

@@ -73,34 +73,15 @@ object Retention {
 
   private def savePendingBatches(spark: SparkSession,
                                  warehouseDir: String,
-                                 batches: Seq[Long]): Unit = {
-    val p = pendingBatchesPath(warehouseDir)
-    val tmp = new Path(p.toString + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(batches.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+                                 batches: Seq[Long]): Unit =
+    Incremental.writeText(spark, pendingBatchesPath(warehouseDir),
+      batches.sorted.mkString("\n"))
 
   private def loadPendingBatches(spark: SparkSession,
-                                 warehouseDir: String): Seq[Long] = {
-    val p = pendingBatchesPath(warehouseDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-    text.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .map(_.toLong).toSeq
-  }
+                                 warehouseDir: String): Seq[Long] =
+    Incremental.readText(spark, pendingBatchesPath(warehouseDir))
+      .toSeq.flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
+      .map(_.toLong)
 
   private def clearPendingBatches(spark: SparkSession,
                                   warehouseDir: String): Unit = {

@@ -226,7 +226,7 @@ object StarJoinView {
     def open(): Seq[Long] = {
       if (MaterializedView.isInvalid(spark, viewDir)) dropState()
       else if (hasState) {
-        val stored = readText(cfgPath)
+        val stored = Incremental.readText(spark, cfgPath)
         if (!stored.contains(cfg)) {
           System.err.println(
             s"WARN [graft.StarJoinView] view $viewDir was seeded under " +
@@ -314,7 +314,7 @@ object StarJoinView {
       registered(heads)
       write(stamp(seed, heads))
       saveVec(heads)
-      writeText(cfgPath, cfg)
+      Incremental.writeText(spark, cfgPath, cfg)
       registered(heads)
     }
 
@@ -362,34 +362,19 @@ object StarJoinView {
           fAtStart = fStart _, sides, viewDims, measures)
     }
 
-    /** The VECTOR-position file — one atomic file holding every
-      * position (`p0,p1,…,pk`): separate watermark files could tear
+    /** The VECTOR-position file — one atomic file (the sidecar
+      * protocol, [[Incremental.writeText]]) holding every position
+      * (`p0,p1,…,pk`): separate watermark files could tear
       * between writes, the exact state the vector design exists to
       * make unrepresentable. Sibling of the view (never inside it —
       * the seed's initial overwrite clears the root). */
     def saveVec(pos: Seq[Long]): Unit =
-      writeText(new Path(posPath), pos.mkString(","))
+      Incremental.writeText(spark, new Path(posPath), pos.mkString(","))
 
     def loadVec(): Option[Seq[Long]] =
-      readText(new Path(posPath)).flatMap { text =>
+      Incremental.readText(spark, new Path(posPath)).flatMap { text =>
         val longs = text.trim.split(",").toSeq.flatMap(_.toLongOption)
         if (longs.size == asOfCols.size) Some(longs) else None
-      }
-
-    private def writeText(p: Path, text: String): Unit = {
-      val tmp = new Path(p.toString + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(p)) fs.delete(p, false)
-      fs.rename(tmp, p)
-    }
-
-    private def readText(p: Path): Option[String] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8"))
-        finally in.close()
       }
   }
 
@@ -568,7 +553,7 @@ object StarJoinView {
     if (staged.nonEmpty) {
       // Marker BEFORE the first rename, deleted after the vector file
       // commits — a crash in between leaves it set for the repair scan.
-      fs.create(loop.marker, true).close()
+      Incremental.touch(spark, loop.marker)
       val stage = staged.map(_._2).reduce(_.unionByName(_))
       MergeUpsert.replacePartitions(spark, viewDir, stage,
         staged.flatMap(_._1), partitionCol = partDim)

@@ -312,10 +312,10 @@ object MergeUpsert {
     }
 
   /** Shared tail of every merge mode: write `merged` to a
-    * `.staging-<uuid>` directory, swap each produced partition in via
-    * the two-rename protocol, then drop the `dropIfEmpty` partitions
-    * that received NO staged rows (empty rewrite = the partition's last
-    * rows vanished). Swap names come from LISTING the staging output —
+    * `.staging-<uuid>` directory, swap each produced partition in
+    * ([[graft.runtime.Compaction.swapPartition]]), then drop the
+    * `dropIfEmpty` partitions that received NO staged rows (empty
+    * rewrite = the partition's last rows vanished). Swap names come from LISTING the staging output —
     * deriving them from values would have to reproduce Spark's
     * partition-path encoding exactly (escaped chars, timestamp
     * formatting, null → __HIVE_DEFAULT_PARTITION__); only the delete
@@ -328,9 +328,6 @@ object MergeUpsert {
     val stagingDir = new Path(rootPath, s".staging-$uuid")
     merged.write.partitionBy(partitionCol).mode("overwrite")
       .parquet(stagingDir.toString)
-    def renameOrFail(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"rename $from -> $to failed")
     try {
       val written = fs.listStatus(stagingDir)
         .filter(s => s.isDirectory &&
@@ -344,15 +341,8 @@ object MergeUpsert {
         (written ++ dropIfEmpty).distinct.toSeq))
       written.foreach { part =>
         beforeSwap.get()(part)
-        val tgt = new Path(rootPath, part)
-        val stg = new Path(stagingDir, part)
-        // Backup name ENCODES the partition (shared BackupSep
-        // convention) so the recovery sweep can restore it.
-        val bak = new Path(rootPath,
-          s".backup-$uuid${graft.runtime.Compaction.BackupSep}$part")
-        if (fs.exists(tgt)) renameOrFail(tgt, bak)
-        renameOrFail(stg, tgt)
-        if (fs.exists(bak)) fs.delete(bak, true)
+        graft.runtime.Compaction.swapPartition(fs, rootPath, part,
+          new Path(stagingDir, part), uuid)
       }
       dropPartitionDirs(fs, rootPath,
         dropIfEmpty.filterNot(written.toSet))

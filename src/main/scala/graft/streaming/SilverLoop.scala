@@ -64,15 +64,17 @@ object SilverLoop {
     * at the boundary plus the k−1 newest). Opting in
     * asserts that every log consumer stays within k updates of the
     * head; one that falls behind fails loud in
-    * `ChangeLog.readSince`, never silently double-reads. */
-  /** `keyIndex`: maintain the bronze user→batch [[graft.runtime
+    * `ChangeLog.readSince`, never silently double-reads.
+    *
+    * `keyIndex`: maintain the bronze user→batch [[graft.runtime
     * .KeyIndex]] inside the loop (one delta-scoped ensure right after
     * each bronze append), so the index is ALWAYS current with the high
     * watermark and [[graft.runtime.Forget.forgetUserIndexed]] — the
     * 100 TB erasure path, which refuses a stale index — can run
     * against a live deployment at any quiesced moment without a
-    * catch-up scan first. */
-  /** `scd2Store`: maintain a persisted SCD2 dimension over the
+    * catch-up scan first.
+    *
+    * `scd2Store`: maintain a persisted SCD2 dimension over the
     * user-gold change log ([[graft.runtime.Scd2Store]] at
     * `<warehouse>/gold_user_daily_scd2` — the user-day metric's
     * version history: every recomputation of a user's day opens a
@@ -89,8 +91,9 @@ object SilverLoop {
     * into the `_archive` sibling each micro-batch, keeping the live
     * buckets at live-set size — with NO history lost
     * ([[graft.runtime.Scd2Store.readHistory]] serves live ∪
-    * archive), where logRetention's fold genuinely coarsens. */
-  /** `joinView`: maintain the PERSISTED two-log join view (a
+    * archive), where logRetention's fold genuinely coarsens.
+    *
+    * `joinView`: maintain the PERSISTED two-log join view (a
     * one-dim [[graft.runtime.StarJoinView]] at
     * `<warehouse>/gold_episode_webtoon_jview`) inside the loop — the
     * reference's one gold→gold dependency (the webtoon job reading

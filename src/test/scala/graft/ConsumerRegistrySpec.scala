@@ -139,6 +139,20 @@ class ConsumerRegistrySpec extends SparkSpec {
       "an unclamped checkpoint must clear the ledger")
   }
 
+  test("a crashed registration's leftover temp file is neither listed " +
+      "nor clamps") {
+    val dir = tmpDir("reg-tmp") + "/t"
+    Consumers.register(spark, dir, "live", 5L)
+    // A registration that crashed before its rename: a temp file whose
+    // position would clamp the fold at 0 if it were read.
+    val tmp = new org.apache.hadoop.fs.Path(Consumers.dir(dir), "dead.tmp")
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(tmp, true)
+    try out.write("0\n\n0\n".getBytes("UTF-8")) finally out.close()
+    assert(Consumers.list(spark, dir).map(_.name) === Seq("live"))
+    assert(Consumers.minPosition(spark, dir).contains(5L))
+  }
+
   test("an observer registration is listed but never clamps, and the " +
       "compliance sweep DELETES its state instead of marking it") {
     val dir = tmpDir("reg-obs") + "/t"

@@ -369,6 +369,18 @@ class RuntimeSpec extends SparkSpec {
     assert(Incremental.loadWatermark(spark, path).contains(7L))
     Incremental.saveWatermark(spark, path, 8L) // overwrite
     assert(Incremental.loadWatermark(spark, path).contains(8L))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
+    assert(!fs.exists(tmp), "a save must leave no temp file behind")
+    // A writer that crashed before its rename leaves its temp file: the
+    // committed value is still the one read.
+    val out = fs.create(tmp, true)
+    try out.write("3".getBytes("UTF-8")) finally out.close()
+    assert(Incremental.loadWatermark(spark, path).contains(8L))
+    Incremental.saveWatermark(spark, path, 9L)
+    assert(Incremental.loadWatermark(spark, path).contains(9L))
+    assert(!fs.exists(tmp), "the next save consumes the leftover temp")
   }
 
   test("completeness gate counts parquet files") {
